@@ -2,6 +2,8 @@ package graft
 
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** In-process registry for query results whose plans embed a fitted MLlib
@@ -60,7 +62,7 @@ object Memo {
         try {
           if (!v.queryExecution.analyzed.sameResult(prev.queryExecution.analyzed))
             v.unpersist()
-        } catch { case _: Throwable => () }
+        } catch { case NonFatal(_) => () }
         prev
       } else v
     }
@@ -75,7 +77,7 @@ object Memo {
     while (it.hasNext) {
       val e = it.next()
       if (e.getKey._3 == dir) {
-        try e.getValue.unpersist() catch { case _: Throwable => () }
+        try e.getValue.unpersist() catch { case NonFatal(_) => () }
         it.remove()
       }
     }
@@ -87,7 +89,7 @@ object Memo {
     * session-wide reset is their deterministic unpersist point. */
   def clear(): Unit = {
     store.values().forEach(df =>
-      try df.unpersist() catch { case _: Throwable => () })
+      try df.unpersist() catch { case NonFatal(_) => () })
     store.clear()
     operators.RankOps.releasePins()
   }

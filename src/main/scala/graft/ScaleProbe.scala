@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -78,7 +80,7 @@ object ScaleProbe {
     val names = if (args.length > 3) args(3).split(",").toSeq else Headliners
     val mode = if (args.length > 4) args(4) else "hotkey"
     val cold = sys.env.get("SPARK_GRAFT_PROBE_COLD").contains("1")
-    val spark = Tables.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Tables.localSession(Tables.cpus.toString)
     spark.sparkContext.setLogLevel("WARN")
     amplify(spark, baseDir, outDir, factor, mode)
     // iid replica-base estimator (r9 verdict: a content-hash query's base
@@ -109,13 +111,13 @@ object ScaleProbe {
     replicaDirs.zipWithIndex.foreach { case (d, r) =>
       amplify(spark, baseDir, d, 1, "iid", copyOffset = r)
     }
-    // Warm both scales' tables (same reasoning as Bench: first-touch
-    // footer/page-cache cost must not land on one arbitrary query).
+    // Warm both scales' tables: first-touch footer/page-cache cost must
+    // not land on one arbitrary query.
     for (dir <- Seq(baseDir, outDir) ++ replicaDirs) {
       for (t <- Seq("lineitem", "orders", "customer", "supplier", "part",
                     "nation", "region", "documents", "embeddings"))
-        try Tables.table(spark, dir, t).foreach(_ => ()) catch { case _: Throwable => () }
-      try Tables.events(spark, dir).foreach(_ => ()) catch { case _: Throwable => () }
+        try Tables.table(spark, dir, t).foreach(_ => ()) catch { case NonFatal(_) => () }
+      try Tables.events(spark, dir).foreach(_ => ()) catch { case NonFatal(_) => () }
     }
     // Returns (cold, warm): run 1 — after a Memo invalidation when the
     // cold flag is on — pays any shared-frame build; warm excludes run 1

@@ -507,7 +507,7 @@ object StreamSoak {
     // (batchSize 0 would plateau the TTL soak at 0 and fail it by design)
     val batchSize = math.max(1, nEvents / nBatches)
     val nUsers = 5000
-    val spark = Tables.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Tables.localSession(Tables.cpus.toString)
     spark.sparkContext.setLogLevel("WARN")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")

@@ -133,6 +133,11 @@ object Tables {
   def r4(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = round(c, 4)
   def r2(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = round(c, 2)
 
+  /** Local core count of every graft entry point: `SPARK_GRAFT_CPUS`, else
+    * every core the JVM sees. */
+  def cpus: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt)
+
   /** A local SparkSession configured the way every graft entry point wants
     * it: AQE on, modest shuffle parallelism (tuned per-cluster in prod),
     * UTC so timestamp-derived features match the oracle.
@@ -170,8 +175,8 @@ object Tables {
     s
   }
 
-  /** Apply ad-hoc `SPARK_GRAFT_CONF="k=v;k=v"` overrides (A/B harness
-    * knob shared by Profile/TimeOne). A segment without '=' is reported
+  /** Apply ad-hoc `SPARK_GRAFT_CONF="k=v;k=v"` overrides (the A/B knob
+    * every [[Diag]] subcommand reads). A segment without '=' is reported
     * by name instead of surfacing as a MatchError.
     */
   def applyConfOverrides(spark: SparkSession): Unit =

@@ -1,8 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB compare in tools/check.py. Runs on
+  * [[Tables.localSession]], so the gate checks the plans the library and
+  * the benchmark run. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -10,16 +13,7 @@ object Verify {
     // iteration aid; the driver always runs the full inventory).
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // same function + optimizer-rule registration the library applies to
-    // its own sessions — the gate must verify the plans bench runs
-    GraftFunctions.register(spark)
+    val spark = Tables.localSession(Tables.cpus.toString)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
@@ -27,34 +21,19 @@ object Verify {
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      Json.write(SparkEntry.oracleSql.filter { case (k, _) => only.forall(_.contains(k)) }))
     // Declared rows-only queries, explicitly: a query absent from
     // oracle_sql.json is rows-only BY DESIGN (fitted-model / sketch /
     // sampling outputs that ANSI SQL can't reproduce), not a missing
     // oracle — this manifest makes that declaration machine-readable so
     // a "no_oracle" marker downstream can't be misread as a failure.
     val rowsOnly = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    Files.writeString(Paths.get(s"$outDir/rows_only.json"),
-      rowsOnly.toSeq.sorted.map(q).mkString("[", ",", "]"))
+    Files.writeString(Paths.get(s"$outDir/rows_only.json"), Json.write(rowsOnly.toSeq.sorted))
     spark.stop()
   }
 }

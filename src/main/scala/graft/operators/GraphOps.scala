@@ -98,12 +98,10 @@ object GraphOps {
     */
   def kCorePeel(edges: DataFrame, k: Int, rounds: Int,
       assumeSymmetric: Boolean = false): DataFrame = {
-    val debug = sys.env.get("GRAFT_KCORE_DEBUG").contains("1")
     var e = edges
     var converged = false
     var r = 0
     while (!converged && r < rounds) {
-      val t0 = System.nanoTime()
       val degs = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       val probe = degs.agg(count(lit(1)),
         coalesce(sum(when(col("deg") >= k, 1L).otherwise(0L)), lit(0L))).first()
@@ -132,8 +130,6 @@ object GraphOps {
           .join(keep.hint("shuffle_hash"), col("dst") === col("keep_id"), "left_semi")
           .localCheckpoint()
       }
-      if (debug) System.err.println(
-        f"[kcore] round=$r nodes=$nNodes%,d keep=$nKeep%,d converged=$converged sec=${(System.nanoTime() - t0) / 1e9}%.2f")
       r += 1
     }
     e

@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -36,7 +38,7 @@ object RankOps {
 
   private def registerPin(df: DataFrame): DataFrame = {
     val key = try df.queryExecution.analyzed.semanticHash()
-              catch { case _: Throwable => System.identityHashCode(df) }
+              catch { case NonFatal(_) => System.identityHashCode(df) }
     val prev = pins.putIfAbsent(key, df)
     if (prev != null) prev else { df.cache(); df }
   }
@@ -45,7 +47,7 @@ object RankOps {
     * a later rank of the same input just re-pins. */
   def releasePins(): Unit = {
     pins.values().forEach(df =>
-      try df.unpersist() catch { case _: Throwable => () })
+      try df.unpersist() catch { case NonFatal(_) => () })
     pins.clear()
   }
 

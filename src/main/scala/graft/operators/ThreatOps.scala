@@ -1320,12 +1320,7 @@ object ThreatOps {
     //     would be job-scratch storage; the pattern (materialize a
     //     multiply-consumed reduction to columnar scratch instead of
     //     executor cache) is the standard 100 TB move.
-    // SPARK_GRAFT_HITS_TEMP=0 restores re-derivation for A/B.
-    val ur0 = activityLog(spark, dir)
-      .filter(col("resource").isNotNull)
-      .select(col("user_id"), col("resource")).distinct()
-    val ur = if (sys.env.get("SPARK_GRAFT_HITS_TEMP").contains("0")) ur0
-    else
+    val ur =
       graft.Memo("hitsEdges", spark, dir) {
         // A collision-free per-call scratch dir (createTempDirectory) —
         // a 32-bit path hash can collide across concurrent JVMs sharing
@@ -1340,7 +1335,10 @@ object ThreatOps {
           }
           rm(p.toFile)
         }))
-        ur0.write.mode("overwrite").parquet(p.toString)
+        activityLog(spark, dir)
+          .filter(col("resource").isNotNull)
+          .select(col("user_id"), col("resource")).distinct()
+          .write.mode("overwrite").parquet(p.toString)
         spark.read.parquet(p.toString)
       }
     def l1(df: DataFrame, score: String): DataFrame = {

@@ -58,24 +58,23 @@ class OraclePolicySpec extends AnyFunSuite {
     }
   }
 
-  test("Bench.jsonEscape keeps any env-supplied adjudication string JSON-safe (r15 advisory)") {
-    // Every character class the advisory named: backslash, quote,
-    // newline/CR/tab, and the remaining sub-0x20 control range.
+  test("Json.write keeps any string in an artifact JSON-safe") {
+    // Every character class an artifact string can carry: backslash,
+    // quote, newline/CR/tab, and the remaining sub-0x20 control range.
     val hostile = "line1\nline2\r\ttabbed \"quoted\" back\\slash \u0001\u001f end"
-    val escaped = Bench.jsonEscape(hostile)
-    assert(!escaped.exists(_ < 0x20), "no raw control char may survive")
-    assert(escaped.contains("\\n") && escaped.contains("\\r") &&
-      escaped.contains("\\t") && escaped.contains("\\\"") &&
-      escaped.contains("\\\\") && escaped.contains("\\u0001") &&
-      escaped.contains("\\u001f"))
-    // the escaped form must round-trip through a strict JSON parser
+    val json = Json.write(Map("oracle_sql" -> hostile))
+    assert(!json.exists(_ < 0x20), "no raw control char may survive")
+    assert(json.contains("\\n") && json.contains("\\r") &&
+      json.contains("\\t") && json.contains("\\\"") &&
+      json.contains("\\\\") && json.contains("\\u0001") &&
+      json.contains("\\u001F"))
+    // the written form must round-trip through a strict JSON parser
     // (jackson throws on any invalid literal)
-    val json = s"""{"adjudication":"$escaped"}"""
     val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
-    assert(node.get("adjudication").asText() === hostile,
+    assert(node.get("oracle_sql").asText() === hostile,
       "escape must be lossless under a strict JSON round-trip")
     // plain text passes through untouched
-    assert(Bench.jsonEscape("host contention, isolated re-run measured 63.7s") ===
-      "host contention, isolated re-run measured 63.7s")
+    assert(Json.write("host contention, isolated re-run measured 63.7s") ===
+      "\"host contention, isolated re-run measured 63.7s\"")
   }
 }

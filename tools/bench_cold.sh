@@ -1,14 +1,14 @@
 #!/usr/bin/env bash
-# Cold-vs-warm bench for the Memo-heaviest queries (r11 verdict #5).
+# Cold-vs-warm bench for the Memo-heaviest queries.
 #
-# The round bench measures steady-state per-call latency: shared Memo
-# frames (co-access pairs, containment shingles, detector/model frames,
-# the incremental-dedup index) are built in warmup or in run 1 and
-# excluded by min-of-3. This artifact records what that amortization
-# hides: each query runs in a FRESH JVM (empty Memo, cold page cache for
-# the session), run 1 = cold (Memo build + first-touch scan), min of
-# runs 2-3 = warm. cold-warm therefore bounds the one-time build cost a
-# deployment pays once per session/snapshot, not per query.
+# `graft.Diag time all` runs every query in one JVM, so a shared Memo
+# frame (co-access pairs, containment shingles, detector/model frames,
+# the incremental-dedup index) is built by whichever consumer runs first
+# and every later consumer's cold run finds it warm. Here each query runs
+# in a FRESH JVM (empty Memo, cold page cache for the session): run 1 =
+# cold (Memo build + first-touch scan), min of runs 2-3 = warm. cold-warm
+# therefore bounds the one-time build cost a deployment pays once per
+# session/snapshot, not per query.
 #
 # Usage: tools/bench_cold.sh [sfDir] [outJson]
 set -uo pipefail
@@ -39,7 +39,7 @@ for q in "${QUERIES[@]}"; do
   # fresh index build per cold run for the incremental query: nuke its
   # fingerprinted index dir so the cold pass pays the real build
   if [ "$q" = "q_dedup_incremental" ]; then rm -rf /tmp/graft_mh_index_*; fi
-  line=$(SPARK_GRAFT_CPUS=32 tools/run_main.sh graft.TimeOne "$q" "$SF" 3 2>/dev/null | grep '^TIMEQ')
+  line=$(tools/run_main.sh graft.Diag time "$q" "$SF" 3 2>/dev/null | grep '^TIMEQ')
   t1=$(echo "$line" | awk '{print $3}')
   t2=$(echo "$line" | awk '{print $4}')
   t3=$(echo "$line" | awk '{print $5}')
