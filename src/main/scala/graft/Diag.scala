@@ -8,6 +8,7 @@ import scala.collection.immutable.{ListMap, TreeMap}
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
@@ -18,9 +19,9 @@ import org.apache.spark.sql.execution.ExplainMode
   *
   *  - `time <q,…|all> <sfDir> [runs=3]` runs each query `runs` times in a
   *    row through [[materialize]] and prints `TIMEQ <name> <t1> … <tN>`
-  *    (seconds). Run 1 is `cold`: it pays JIT, first-touch scans and the
-  *    Memo and model builds. `warm` is the min of runs 2..N. `all` also
-  *    writes the sweep artifact, see [[finish]].
+  *    (seconds). Run 1 is `cold`: it pays JIT, first-touch scans, codegen
+  *    and the Memo and model builds. `warm` is the min of runs 2..N. `all`
+  *    also writes the sweep artifact, see [[finish]].
   *  - `profile <q> <sfDir>` runs the query once, then prints one `STAGE`
   *    line per stage of a fresh re-execution and a `PROF` total.
   *  - `explain <q,…|all> <sfDir> [outDir]` prints the formatted post-AQE
@@ -79,35 +80,50 @@ object Diag {
   private def loadavg(): Double =
     math.rint(ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage * 100) / 100
 
+  /** Classes the JVM's generated-code compiler has compiled so far. */
+  def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** Times `queries`; with `artifact`, also writes the sweep there through
-    * [[finish]]. False when any query failed. */
+    * [[finish]]. Each query's `warm_compiles` counts the classes compiled
+    * during runs 2..N: identical runs regenerate identical source, which
+    * the codegen cache serves, so a non-zero count names a query whose
+    * generated source changes from run to run. False when any query
+    * failed. */
   def time(spark: SparkSession, queries: Seq[String], sfDir: String, runs: Int,
       artifact: Option[String]): Boolean = {
     require(runs >= 2, s"runs=$runs: run 1 is the cold run, warm needs at least one more")
     val loadStart = loadavg()
-    val timed: Seq[(String, Option[Seq[Double]])] = queries.map { name =>
+    def run(name: String): Double = {
+      val t0 = System.nanoTime()
+      materialize(SparkEntry.queries(name)(spark, sfDir))
+      (System.nanoTime() - t0) / 1e9
+    }
+    val timed: Seq[(String, Option[(Seq[Double], Long)])] = queries.map { name =>
       val times =
-        try Some((1 to runs).map { _ =>
-          val t0 = System.nanoTime()
-          materialize(SparkEntry.queries(name)(spark, sfDir))
-          (System.nanoTime() - t0) / 1e9
-        })
-        catch { case NonFatal(e) =>
+        try {
+          val cold = run(name)
+          val c0 = compiles()
+          val warm = (2 to runs).map(_ => run(name))
+          Some((cold +: warm, compiles() - c0))
+        } catch { case NonFatal(e) =>
           System.err.println(s"[diag] $name failed: ${e.getMessage}")
           None
         }
-      times.foreach(ts => println(s"TIMEQ $name " + ts.map(t => f"$t%.3f").mkString(" ")))
+      times.foreach { case (ts, _) =>
+        println(s"TIMEQ $name " + ts.map(t => f"$t%.3f").mkString(" "))
+      }
       name -> times
     }
     val failed = timed.collect { case (n, None) => n }
     artifact.foreach { path =>
-      val ok = timed.collect { case (n, Some(ts)) => n -> ts }
-      val warm = ok.map { case (n, ts) => n -> ts.tail.min }.toMap
-      val rows = TreeMap(ok.map { case (n, ts) =>
+      val ok = timed.collect { case (n, Some(r)) => n -> r }
+      val warm = ok.map { case (n, (ts, _)) => n -> ts.tail.min }.toMap
+      val rows = TreeMap(ok.map { case (n, (ts, wc)) =>
         n -> ListMap("cold" -> r3(ts.head), "warm" -> r3(warm(n)),
-          "spread" -> r3((ts.tail.max - warm(n)) / warm(n)))
+          "spread" -> r3((ts.tail.max - warm(n)) / warm(n)), "warm_compiles" -> wc)
       }: _*)
       val sweep = ListMap("cpus" -> Tables.cpus, "sf" -> sfDir, "runs" -> runs,
+        "codegen_cache_entries" -> spark.conf.get("spark.sql.codegen.cache.maxEntries").toInt,
         "loadavg_start" -> loadStart, "loadavg_end" -> loadavg(),
         "warm_total" -> r3(warm.values.sum), "queries" -> rows, "failed" -> failed)
       println(s"[diag] wrote ${finish(path, sweep, warm)}")

@@ -1,22 +1,64 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Table loaders + shared helpers for the graft engine.
   *
   * All queries read the driver-generated parquet tables under a scale-factor
-  * directory (see TESTDATA.md). Loaders are thin `spark.read.parquet` calls:
-  * keeping the scan declarative lets Catalyst push filters/column pruning
-  * into the parquet reader — at 100 TB that pushdown is the difference
-  * between scanning a column slice and scanning everything.
+  * directory (see TESTDATA.md). Loaders are declarative parquet scans with
+  * the schema supplied by [[parquetSchema]]: Catalyst still pushes
+  * filters/column pruning into the parquet reader — at 100 TB that
+  * pushdown is the difference between scanning a column slice and
+  * scanning everything.
   */
 object Tables {
 
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** A fresh parquet relation over `<dir>/<name>.parquet`. Only the schema
+    * is reused ([[parquetSchema]]); the Dataset is built anew on every
+    * call, so a self-join of two calls keeps distinct attributes. A
+    * missing path takes the plain read, so it fails exactly as that does. */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    parquetSchema(spark, path).fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+  }
+
+  /** The parquet confs that change what schema inference returns for the
+    * same files. */
+  private val SchemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  private val schemas = new ConcurrentHashMap[(SparkSession, String), (String, StructType)]()
+
+  /** The inferred schema of the parquet input at a local `path`, or None
+    * when the path does not exist. Inference is a footer-read Spark job,
+    * 100-130 ms per call warm, against 8-13 ms for a read with the schema
+    * supplied; every query calls [[table]] once per input, so a warm pass
+    * paid that job per input. The schema is cached per (session, path)
+    * under a key of [[contentFingerprint]] (0.2-0.3 ms) plus the
+    * [[SchemaConfs]] values: a fixture rewritten at the same path, or a
+    * conf flip such as [[events]]' nanosAsLong, infers again. */
+  private def parquetSchema(spark: SparkSession, path: String): Option[StructType] =
+    Option.when(java.nio.file.Files.exists(java.nio.file.Paths.get(path))) {
+      val key = (contentFingerprint(path) +: SchemaConfs.map(k => spark.conf.getOption(k).orNull))
+        .mkString("|")
+      val hit = schemas.get((spark, path))
+      if (hit != null && hit._1 == key) hit._2
+      else {
+        val s = spark.read.parquet(path).schema
+        schemas.put((spark, path), (key, s))
+        s
+      }
+    }
 
   def lineitem(s: SparkSession, d: String): DataFrame = table(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame   = table(s, d, "orders")
@@ -138,13 +180,29 @@ object Tables {
   def cpus: Int =
     sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt)
 
+  /** Generated classes Spark keeps per JVM (`spark.sql.codegen.cache.maxEntries`,
+    * default 100). One benchmark batch pass compiles 224 distinct classes
+    * and the 222-query registry 3,268 at sf0.01, so at 100 entries every
+    * warm re-run of an interleaved workload recompiled what the pass before
+    * had just compiled: 151 classes per batch pass, and 3,809 classes and
+    * 113.8 s for a second registry pass (metaspace 283 MB). With room for
+    * the whole working set that pass recompiles 190 classes in 68.8 s
+    * (metaspace 254 MB): the cached classes cost no more metaspace than
+    * the churn did. */
+  val CodegenCacheEntries = 4096
+
   /** A local SparkSession configured the way every graft entry point wants
     * it: AQE on, modest shuffle parallelism (tuned per-cluster in prod),
-    * UTC so timestamp-derived features match the oracle.
+    * UTC so timestamp-derived features match the oracle, and a
+    * generated-class cache of [[CodegenCacheEntries]]. That cache size is a
+    * static conf, read once, when the JVM first generates code: it has to
+    * be set here in the builder, and it takes effect only if this session
+    * is the JVM's first.
     */
   def localSession(cpus: String): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       // Coalesce post-shuffle partitions by SIZE, not to defaultParallelism:

@@ -655,8 +655,8 @@ object EventStream {
     */
   def fileStream(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val raw = spark.readStream.schema(schema).parquet(s"$dir/events.parquet")
+    val raw = spark.readStream.schema(Tables.table(spark, dir, "events").schema)
+      .parquet(s"$dir/events.parquet")
     // Same physical-type dispatch as the batch reader — ONE helper so the
     // two paths can never drift apart again (they did once; see Tables).
     windowedCounts(Tables.adaptEventTs(raw))

@@ -96,5 +96,7 @@ class DiagSpec extends SparkSpec {
     assert(artifact.path("failed").get(0).asText() === "q_no_such_query")
     assert(artifact.path("failed").size() === 1)
     assert(artifact.path("queries").path("q1_agg").path("warm").asDouble() > 0)
+    assert(artifact.path("queries").path("q1_agg").path("warm_compiles").isIntegralNumber)
+    assert(artifact.path("codegen_cache_entries").asInt() === Tables.CodegenCacheEntries)
   }
 }
