@@ -123,12 +123,14 @@ object ScaleProbe {
     // cold flag is on — pays any shared-frame build; warm excludes run 1
     // ONLY in cold mode (where it genuinely differs); otherwise warm =
     // min over all runs, the estimator every earlier round's probes used
-    // (a GC spike on run 2 must not land directly in the slope).
+    // (a GC spike on run 2 must not land directly in the slope). Each run
+    // materializes every output column: count() lets Spark prune output
+    // projections, which can hide a superlinear column from the slope.
     def time(name: String, dir: String): (Double, Double) = {
       if (cold) Memo.invalidate(dir)
       val runs = (1 to (if (cold) 3 else 2)).map { _ =>
         val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, dir).count()
+        Diag.materialize(SparkEntry.queries(name)(spark, dir))
         (System.nanoTime() - t0) / 1e9
       }
       (runs.head, if (cold) runs.tail.min else runs.min)

@@ -413,27 +413,50 @@ object SparkEntry {
           WHERE hamming <= ${DedupOps.HammingMax})"""
   }
 
-  /** MinHash-LSH verified candidate pairs (mirror of
-    * DedupOps.qDedupMinhashPairs) — shared by the pairs oracle and the
-    * connected-components cluster oracle. */
-  private val minhashPairsSql =
-    s"""WITH s AS (SELECT doc_id, list_distinct(hs) AS hj,
+  /** MinHash signature CTE `s` (doc_id, hj = distinct shingle hashes,
+    * mh_0 … mh_11) — mirror of DedupOps.signatures + sigRows; the one
+    * signature definition of every MinHash oracle except q_dedup_minhash
+    * (whose unprefixed band_b columns it emits itself). */
+  private val minhashSigCte =
+    s"""s AS (SELECT doc_id, list_distinct(hs) AS hj,
           ${(0 until 12).map(minhashSql).mkString(", ")}
-        FROM ($hashedShinglesSql)),
-        bk AS (SELECT doc_id, bucket
-          FROM (SELECT doc_id, unnest([${(0 until 4).map(b =>
-            s"'$b:' || md5(${bandSql(b)})").mkString(", ")}]) AS bucket
-          FROM s) t
+        FROM ($hashedShinglesSql))"""
+  /** Uncapped `(doc_id, bucket)` band rows over `s` — mirror of
+    * DedupOps.bandRows. */
+  private val minhashBandRowsSql =
+    s"""SELECT doc_id, unnest([${(0 until 4).map(b =>
+          s"'$b:' || md5(${bandSql(b)})").mkString(", ")}]) AS bucket
+        FROM s"""
+  /** `s`, the capped band rows `bk` and the candidate pairs `cand` —
+    * mirror of DedupOps.bucketPairs over the band rows. */
+  private val minhashCandCtes =
+    s"""$minhashSigCte,
+        bk AS (SELECT doc_id, bucket FROM ($minhashBandRowsSql) t
           -- band-bucket population cap (first-K by doc_id), the identical
           -- clamp DedupOps.MinhashBandCap applies on the engine side
           QUALIFY row_number() OVER (PARTITION BY bucket ORDER BY doc_id)
             <= ${DedupOps.MinhashBandCap}),
         cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-          FROM bk a JOIN bk b ON a.bucket = b.bucket AND a.doc_id < b.doc_id)
-        SELECT doc_a, doc_b,
-          round(len(list_intersect(sa.hj, sb.hj))*1.0
-            / len(list_distinct(list_concat(sa.hj, sb.hj))), 4) AS jaccard
-        FROM cand JOIN s sa ON sa.doc_id = doc_a JOIN s sb ON sb.doc_id = doc_b
+          FROM bk a JOIN bk b ON a.bucket = b.bucket AND a.doc_id < b.doc_id)"""
+  /** Verified candidates: `cand` joined to `s` on both sides (sa, sb). */
+  private val minhashVerifiedSql =
+    "FROM cand JOIN s sa ON sa.doc_id = doc_a JOIN s sb ON sb.doc_id = doc_b"
+  /** Shingle-hash Jaccard of `sa`/`sb`, 4 dp (the engine's r4(jaccard)). */
+  private val minhashJaccardSql =
+    """round(len(list_intersect(sa.hj, sb.hj))*1.0
+          / len(list_distinct(list_concat(sa.hj, sb.hj))), 4)"""
+  /** `p / (10⁴·q)` rounded HALF_UP to 4 dp in integer arithmetic — mirror
+    * of DedupOps.halfUp4. */
+  private def halfUp4Sql(p: String, q: String): String =
+    s"CAST((2 * ($p) + ($q)) // (2 * ($q)) AS DOUBLE) / 10000"
+
+  /** MinHash-LSH verified candidate pairs (mirror of
+    * DedupOps.qDedupMinhashPairs) — shared by the pairs oracle and the
+    * connected-components cluster oracle. */
+  private val minhashPairsSql =
+    s"""WITH $minhashCandCtes
+        SELECT doc_a, doc_b, $minhashJaccardSql AS jaccard
+        $minhashVerifiedSql
         ORDER BY jaccard DESC, doc_a, doc_b"""
 
   /** CTE chain for the per-doc curation verdict (mirror of
@@ -2076,8 +2099,8 @@ object SparkEntry {
            UNION ALL SELECT y FROM tri
            UNION ALL SELECT z FROM tri)
          GROUP BY 1 ORDER BY n_triangles DESC, user_id""",
-    // Shares the ur/keep/pc/dirp/knn/und chain of q_knn_triangles
-    // verbatim; lcc is pure integer arithmetic (2·T·10000 // deg(deg−1))
+    // Repeats the ur/keep/pc/dirp/knn/und chain of q_knn_triangles
+    // (a copy); lcc is pure integer arithmetic (2·T·10000 // deg(deg−1))
     // so the hash has no float to drift on.
     "q_clustering_coeff" ->
       s"""WITH ur AS (SELECT DISTINCT user_id, json_extract_string(props,'$$.k') AS res
@@ -2190,34 +2213,23 @@ object SparkEntry {
     // to pairs with a new-shard endpoint (doc_id % mod = 0): the engine
     // side probes a persisted signature index instead of re-shingling
     // history, and equivalence to this unioned-frame batch run is the
-    // operator's correctness claim. Same s/bk chain as minhashPairsSql
-    // (same permutations, same first-K band cap — the cap is applied
-    // over the union on the engine side too, so capped buckets stay
-    // hash-checked); the shard restriction and pair_kind are pure
+    // operator's correctness claim. The s/bk/cand fragment of
+    // minhashPairsSql (same permutations, same first-K band cap — the cap
+    // is applied over the union on the engine side too, so capped buckets
+    // stay hash-checked); the shard restriction and pair_kind are pure
     // integer arithmetic on doc_id.
     "q_dedup_incremental" ->
-      s"""WITH s AS (SELECT doc_id, list_distinct(hs) AS hj,
-            ${(0 until 12).map(minhashSql).mkString(", ")}
-          FROM ($hashedShinglesSql)),
-          bk AS (SELECT doc_id, bucket
-            FROM (SELECT doc_id, unnest([${(0 until 4).map(b =>
-              s"'$b:' || md5(${bandSql(b)})").mkString(", ")}]) AS bucket
-            FROM s) t
-            QUALIFY row_number() OVER (PARTITION BY bucket ORDER BY doc_id)
-              <= ${DedupOps.MinhashBandCap}),
-          cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM bk a JOIN bk b ON a.bucket = b.bucket AND a.doc_id < b.doc_id
-            WHERE a.doc_id % ${DedupOps.IncrementalShardMod} = 0
-               OR b.doc_id % ${DedupOps.IncrementalShardMod} = 0)
+      s"""WITH $minhashCandCtes
           SELECT doc_a, doc_b,
             CASE WHEN doc_a % ${DedupOps.IncrementalShardMod} = 0
                   AND doc_b % ${DedupOps.IncrementalShardMod} = 0
                  THEN 'intra' ELSE 'cross' END AS pair_kind,
-            round(len(list_intersect(sa.hj, sb.hj))*1.0
-              / len(list_distinct(list_concat(sa.hj, sb.hj))), 4) AS jaccard
-          FROM cand JOIN s sa ON sa.doc_id = doc_a JOIN s sb ON sb.doc_id = doc_b
+            $minhashJaccardSql AS jaccard
+          $minhashVerifiedSql
+          WHERE doc_a % ${DedupOps.IncrementalShardMod} = 0
+             OR doc_b % ${DedupOps.IncrementalShardMod} = 0
           ORDER BY jaccard DESC, doc_a, doc_b""",
-    // Shares minhashPairsSql verbatim; the sweep is two integer rollups
+    // Reads minhashPairsSql as a CTE; the sweep is two integer rollups
     // per threshold literal (dyadic-safe doubles, so both engines cut
     // the identical hash-verified jaccard set).
     "q_dedup_threshold_sweep" ->
@@ -2234,38 +2246,26 @@ object SparkEntry {
           SELECT CAST(np.bp AS BIGINT) AS threshold_bp, n_pairs,
             n_docs_affected
           FROM np JOIN nd ON np.bp = nd.bp ORDER BY 1""",
-    // Shares the s/bk/cand chain of minhashPairsSql verbatim (same
-    // permutations, same band cap); estimate = integer agree-count k,
-    // decile = 10k//12 in pure integer arithmetic, means divide EXACT
-    // sums (Sigma-k as BIGINT, |est-exact| in DECIMAL(14,4) after both
-    // operands are round-4'd) by the count in one double op each.
+    // The verified pairs of minhashPairsSql (its s/bk/cand fragment)
+    // joined to both signatures, as on the engine side; estimate =
+    // integer agree-count k, decile = 10k//12 in pure integer arithmetic,
+    // and each mean is halfUp4Sql of an exact integer numerator (Sigma-k;
+    // 10^4 x Sigma of the round-4'd DECIMAL(14,4) exact and |est-exact|).
     "q_minhash_calibration" ->
-      s"""WITH s AS (SELECT doc_id, list_distinct(hs) AS hj,
-            ${(0 until 12).map(minhashSql).mkString(", ")}
-          FROM ($hashedShinglesSql)),
-          bk AS (SELECT doc_id, bucket
-            FROM (SELECT doc_id, unnest([${(0 until 4).map(b =>
-              s"'$b:' || md5(${bandSql(b)})").mkString(", ")}]) AS bucket
-            FROM s) t
-            QUALIFY row_number() OVER (PARTITION BY bucket ORDER BY doc_id)
-              <= ${DedupOps.MinhashBandCap}),
-          cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM bk a JOIN bk b ON a.bucket = b.bucket AND a.doc_id < b.doc_id),
+      s"""WITH $minhashCandCtes,
           p AS (SELECT
             CAST(${(0 until 12).map(j =>
               s"(CASE WHEN sa.mh_$j = sb.mh_$j THEN 1 ELSE 0 END)").mkString(" + ")}
               AS BIGINT) AS n_agree,
-            CAST(round(len(list_intersect(sa.hj, sb.hj))*1.0
-              / len(list_distinct(list_concat(sa.hj, sb.hj))), 4)
-              AS DECIMAL(14,4)) AS exact4
-          FROM cand JOIN s sa ON sa.doc_id = doc_a
-            JOIN s sb ON sb.doc_id = doc_b)
+            CAST($minhashJaccardSql AS DECIMAL(14,4)) AS exact4
+          $minhashVerifiedSql)
           SELECT CAST(n_agree * 10 // 12 AS BIGINT) AS decile,
             count(*) AS n_pairs,
-            round(sum(n_agree) / (12.0 * count(*)), 4) AS mean_est,
-            round(CAST(sum(exact4) AS DOUBLE) / count(*), 4) AS mean_exact,
-            round(CAST(sum(abs(CAST(round(n_agree / 12.0, 4)
-              AS DECIMAL(14,4)) - exact4)) AS DOUBLE) / count(*), 4) AS mae
+            ${halfUp4Sql("10000 * sum(n_agree)", "12 * count(*)")} AS mean_est,
+            ${halfUp4Sql("sum(CAST(exact4 * 10000 AS BIGINT))", "count(*)")}
+              AS mean_exact,
+            ${halfUp4Sql("sum(CAST(abs(CAST(round(n_agree / 12.0, 4) AS DECIMAL(14,4))" +
+              " - exact4) * 10000 AS BIGINT))", "count(*)")} AS mae
           FROM p GROUP BY 1 ORDER BY decile""",
     "q_dedup_simhash" ->
       s"""WITH fp AS ($simhashSql)
@@ -2708,7 +2708,7 @@ object SparkEntry {
             FROM pack p JOIN toks t ON t.block = p.block AND t.rn = p.rn + 1)
           SELECT doc_id, toks, block, seq AS seq_in_block
           FROM pack ORDER BY doc_id""",
-    // Shares q_pack_docs' recursive pack CTE verbatim; the profile is
+    // Repeats q_pack_docs' recursive pack CTE (a copy); the profile is
     // two integer rollups on top.
     "q_pack_efficiency" ->
       s"""WITH RECURSIVE toks AS (
@@ -3221,12 +3221,8 @@ object SparkEntry {
     // compaction(history-index, shard) ≡ build(full corpus) without the
     // oracle ever reading the stored files.
     "q_dedup_index_compact" ->
-      s"""WITH s AS (SELECT doc_id, list_distinct(hs) AS hj,
-            ${(0 until 12).map(minhashSql).mkString(", ")}
-          FROM ($hashedShinglesSql)),
-         bk AS (SELECT doc_id, unnest([${(0 until 4).map(b =>
-            s"'$b:' || md5(${bandSql(b)})").mkString(", ")}]) AS bucket
-           FROM s),
+      s"""WITH $minhashSigCte,
+         bk AS ($minhashBandRowsSql),
          bd AS (SELECT CAST(split_part(bucket, ':', 1) AS BIGINT) AS band,
              count(*) AS n_rows, count(DISTINCT bucket) AS n_keys,
              count(DISTINCT doc_id) AS n_docs,

@@ -54,8 +54,8 @@ object DedupOps {
   val MinhashBandCap = 128
   val SimhashBandCap = 64
 
-  /** First-`cap` rows per band bucket, by ascending doc_id — the shared
-    * bucket-population clamp of both LSH pair generators. */
+  /** First-`cap` rows per band bucket, by ascending doc_id — the
+    * bucket-population clamp of [[bucketPairs]] and the SimHash pair join. */
   private[operators] def capBuckets(banded: DataFrame, bucketCol: String, cap: Int): DataFrame =
     banded
       .withColumn("_rk", row_number().over(
@@ -63,72 +63,105 @@ object DedupOps {
       .filter(col("_rk") <= cap)
       .drop("_rk")
 
-  /** MinHash signatures + LSH band keys per document. One md5 per shingle
-    * (see [[graft.functions.TextFunctions.hash32]]) feeds an affine
-    * permutation family `(a_j·h+b_j) mod P` — deterministic, literal on
-    * both engines. 12 permutations in 4 bands of 3: documents agreeing on
-    * any full band land in the same LSH bucket in [[qDedupMinhashPairs]].
+  /** Capped candidate pairs `(doc_a < doc_b)` of a `(doc_id, bucketCol)`
+    * frame: the [[capBuckets]] survivors self-joined on the bucket key,
+    * one row per pair however many buckets it shares. The one candidate
+    * generator of the MinHash batch queries, the index probe and the
+    * media byte-profile bands; the join key is a small bucket id, never
+    * the document. */
+  private[operators] def bucketPairs(banded: DataFrame, bucketCol: String,
+      cap: Int): DataFrame = {
+    val bk = capBuckets(banded, bucketCol, cap)
+    bk.as("a").join(bk.as("b"),
+        col(s"a.$bucketCol") === col(s"b.$bucketCol") && col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .distinct()
+  }
+
+  /** The MinHash signature kernel over a `(doc_id, text, …)` frame: one
+    * md5 per distinct word 3-shingle (`hs`, [[ShingleHash32]], once per
+    * doc) feeds the affine permutation family `(a_j·h+b_j) mod P`
+    * (`mh_0` … `mh_11`, deterministic and literal on both engines).
+    * `extra` columns are evaluated over `hs` in the same projection, so
+    * a caller that also needs the shingle set or its size never hashes
+    * twice. Every MinHash path — batch signatures, index build and
+    * probe, the streaming twin — signs documents here.
     */
-  /** Unordered signature frame, Memo.cached: the shingle→md5→12-permutation
-    * kernel is the expensive half of every MinHash query, and the pairs
-    * join, the cluster edge build, and the signature dump all consume it —
-    * one pinned copy per (session, dir). */
+  private[graft] def signatures(d: DataFrame, extra: Column*): DataFrame =
+    d.select(col("doc_id"), ShingleHash32(col("text"), 3).as("hs"))
+      .select(Seq(col("doc_id")) ++ extra ++
+        (0 until MinhashPerms).map(j => minhash(col("hs"), j).as(s"mh_$j")): _*)
+
+  /** LSH key of band `b` over a [[signatures]] frame: md5 of its 3
+    * minima joined by '|'. concat (null-propagating, matching SQL ||),
+    * NOT concat_ws: a doc with no shingles must yield a NULL key on both
+    * engines, which then never joins. */
+  private def bandKey(b: Int): Column = {
+    val parts = (0 until BandsRows)
+      .map(r => col(s"mh_${b * BandsRows + r}").cast("string"))
+      .flatMap(c => Seq(c, lit("|"))).dropRight(1)
+    md5(concat(parts: _*))
+  }
+
+  /** One `bucket` row per band, "<b>:" + the band key, so equal keys of
+    * different bands never meet. `key` defaults to [[bandKey]] over the
+    * `mh_` columns; [[minhashVerifiedPairs]] passes the `band_b` columns
+    * [[minhashSig]] already holds. */
+  private[graft] def bandBuckets(key: Int => Column = bandKey): Column =
+    explode(array((0 until MinhashPerms / BandsRows).map(b =>
+      concat(lit(s"$b:"), key(b))): _*)).as("bucket")
+
+  /** Per-document signatures and band keys, unordered and Memo.cached:
+    * the shingle→md5→12-permutation kernel is the expensive half of every
+    * MinHash query, and the pairs join, the cluster edge build and the
+    * signature dump all consume it — one pinned copy per (session, dir).
+    * 12 permutations in 4 bands of 3: documents agreeing on any full band
+    * land in the same LSH bucket in [[qDedupMinhashPairs]].
+    */
   private def minhashSig(spark: SparkSession, dir: String): DataFrame =
     graft.Memo.cached("minhashSig", spark, dir) {
-      val mh = (0 until MinhashPerms).map(j => minhash(col("hs"), j).as(s"mh_$j"))
-      val withSig = spread(spark, documents(spark, dir))
-        .select(col("doc_id"), ShingleHash32(col("text"), 3).as("hs"))
-        .select(col("doc_id") +: size(col("hs")).cast("long").as("n_shingles") +: mh: _*)
-      // concat (null-propagating, matching SQL ||), NOT concat_ws: a doc
-      // with no shingles must yield NULL bands on both engines.
-      val bands = (0 until MinhashPerms / BandsRows).map { b =>
-        val parts = (0 until BandsRows)
-          .map(r => col(s"mh_${b * BandsRows + r}").cast("string"))
-          .flatMap(c => Seq(c, lit("|"))).dropRight(1)
-        md5(concat(parts: _*)).as(s"band_$b")
-      }
-      val outCols = Seq(col("doc_id"), col("n_shingles")) ++
-        (0 until MinhashPerms).map(j => col(s"mh_$j")) ++ bands
-      withSig.select(outCols: _*)
+      signatures(spread(spark, documents(spark, dir)),
+          size(col("hs")).cast("long").as("n_shingles"))
+        .select(Seq(col("doc_id"), col("n_shingles")) ++
+          (0 until MinhashPerms).map(j => col(s"mh_$j")) ++
+          (0 until MinhashPerms / BandsRows).map(b => bandKey(b).as(s"band_$b")): _*)
     }
 
   def qDedupMinhash(spark: SparkSession, dir: String): DataFrame =
     minhashSig(spark, dir).orderBy(col("doc_id"))
 
-  /** LSH candidate pairs: self-join signatures on any shared band key,
-    * then verify with exact shingle-Jaccard. The join key is a 32-hex
-    * bucket id — never the document. Returned ordered by similarity.
-    */
+  /** Per-document distinct 3-shingle hash sets ([[sigRows]]), Memo.cached
+    * per (session, dir): the verification side of every batch MinHash
+    * query. */
+  private def shingleSets(spark: SparkSession, dir: String): DataFrame =
+    graft.Memo.cached("docShingleHashes", spark, dir) {
+      sigRows(spread(spark, documents(spark, dir)))
+    }
+
   /** Unordered verified LSH candidate pairs (doc_a, doc_b, jaccard) —
-    * Memo.cached: the ordered pairs dump, the cluster edge build, and
-    * the per-doc dup profile all fold this frame.
+    * Memo.cached: the ordered pairs dump, the cluster edge build, the
+    * calibration and the per-doc dup profile all fold this frame.
+    * Candidates come from [[bucketPairs]] over the pinned band keys; the
+    * Jaccard verify runs on the shingle hashes, not the shingle strings
+    * (the arrays shuffled to the pair join are ~5x narrower and the
+    * set-intersect compares longs — same result modulo md5 collisions,
+    * mirrored exactly in the oracle).
     */
   private def minhashVerifiedPairs(spark: SparkSession, dir: String): DataFrame =
     graft.Memo.cached("minhashVerifiedPairs", spark, dir) {
       val sig = minhashSig(spark, dir)
-      // Jaccard verify runs on the 8-byte shingle hashes, not the shingle
-      // strings: the arrays shuffled to the pair join are ~5x narrower and
-      // the set-intersect compares longs (same result modulo md5 collisions,
-      // mirrored exactly in the oracle).
-      val docs = graft.Memo.cached("docShingleHashes", spark, dir) {
-        spread(spark, documents(spark, dir)).select(col("doc_id"),
-          array_distinct(ShingleHash32(col("text"), 3)).as("sh"))
-      }
-      val nBands = MinhashPerms / BandsRows
-      val buckets = capBuckets(sig.select(col("doc_id"),
-        explode(array((0 until nBands).map(b =>
-          concat(lit(s"$b:"), col(s"band_$b"))): _*)).as("bucket")),
+      val docs = shingleSets(spark, dir)
+      val cand = bucketPairs(
+        sig.select(col("doc_id"), bandBuckets(b => col(s"band_$b"))),
         "bucket", MinhashBandCap)
-      val cand = buckets.as("a").join(buckets.as("b"),
-          col("a.bucket") === col("b.bucket") && col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .distinct()
       cand
         .join(docs.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sh", "sh_a"), "doc_a")
         .join(docs.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sh", "sh_b"), "doc_b")
         .select(col("doc_a"), col("doc_b"), r4(jaccard(col("sh_a"), col("sh_b"))).as("jaccard"))
     }
 
+  /** LSH candidate pairs verified with exact shingle-Jaccard, ordered by
+    * similarity. */
   def qDedupMinhashPairs(spark: SparkSession, dir: String): DataFrame =
     minhashVerifiedPairs(spark, dir)
       .orderBy(col("jaccard").desc, col("doc_a"), col("doc_b"))
@@ -176,66 +209,47 @@ object DedupOps {
     * estimate decile — the "how much do I trust my sketch" table that
     * decides signature width and band shape before a 100 TB dedup run
     * (more permutations ⇔ tighter deciles; this query measures the
-    * trade instead of guessing it). Rides the two Memo-pinned frames
-    * every other MinHash consumer shares (signatures, shingle hashes)
-    * plus the capped candidate join of [[qDedupMinhashPairs]] — zero
-    * new data-sized shuffles. Cross-engine exactness: the estimate is
-    * the integer agree-count k (decile = ⌊10k/12⌋ in pure integer
-    * arithmetic), per-decile means divide EXACT sums (Σk as a long,
-    * Σ|est−exact| accumulated in DECIMAL(14,4) after both operands are
-    * r4'd) by the row count in ONE double op each — no float
-    * reduction-order hazard.
+    * trade instead of guessing it). The Memo-pinned verified pairs
+    * joined to the pinned signatures on both sides — zero new
+    * data-sized shuffles, no candidate chain of its own. Cross-engine
+    * exactness: the estimate is the integer agree-count k (decile =
+    * ⌊10k/12⌋ in pure integer arithmetic), the exact side is the
+    * pairs' r4'd jaccard as DECIMAL(14,4), and each per-decile mean is
+    * [[halfUp4]] of an exact integer numerator (Σk, 10⁴·Σdecimal) — no
+    * double quotient is ever rounded, so no tie can round apart.
     */
   def qMinhashCalibration(spark: SparkSession, dir: String): DataFrame = {
     val sig = minhashSig(spark, dir)
-    val docs = graft.Memo.cached("docShingleHashes", spark, dir) {
-      spread(spark, documents(spark, dir)).select(col("doc_id"),
-        array_distinct(ShingleHash32(col("text"), 3)).as("sh"))
-    }
-    val nBands = MinhashPerms / BandsRows
-    // Pinned once per (session, dir), like `sig` and `docs`: the bucket
-    // frame feeds BOTH sides of the candidate self-join, and unpinned
-    // Spark evaluated the whole cache-read → explode → exchange →
-    // window-cap pipeline once per side (two identical ~5.6 s-CPU stages
-    // in the r17 profile — AQE does not reuse the self-join's twin
-    // stages). A pin, not a per-call checkpoint, so re-runs store no new
-    // copy. At any scale the frame is |docs|·nBands narrow rows — the
-    // cheap side of this query by construction.
-    val buckets = graft.Memo.cached("minhashCalibrationBuckets", spark, dir) {
-      capBuckets(sig.select(col("doc_id"),
-        explode(array((0 until nBands).map(b =>
-          concat(lit(s"$b:"), col(s"band_$b"))): _*)).as("bucket")),
-        "bucket", MinhashBandCap)
-    }
-    val cand = buckets.as("a").join(buckets.as("b"),
-        col("a.bucket") === col("b.bucket") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
     val agree = (0 until MinhashPerms)
       .map(j => when(col(s"sa.mh_$j") === col(s"sb.mh_$j"), 1L).otherwise(0L))
       .reduce(_ + _)
-    val pairs = cand
+    def bp(c: Column): Column = (c * 10000).cast("long")
+    minhashVerifiedPairs(spark, dir)
       .join(sig.as("sa"), col("sa.doc_id") === col("doc_a"))
       .join(sig.as("sb"), col("sb.doc_id") === col("doc_b"))
-      .select(col("doc_a"), col("doc_b"), agree.as("n_agree"))
-      .join(docs.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sh", "sh_a"), "doc_a")
-      .join(docs.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sh", "sh_b"), "doc_b")
-      .select(col("n_agree"),
-        r4(lit(1.0) * col("n_agree") / MinhashPerms).cast("decimal(14,4)").as("est4"),
-        r4(jaccard(col("sh_a"), col("sh_b"))).cast("decimal(14,4)").as("exact4"))
-    pairs
+      .select(agree.as("n_agree"), col("jaccard").cast("decimal(14,4)").as("exact4"))
+      .select(col("n_agree"), col("exact4"),
+        r4(lit(1.0) * col("n_agree") / MinhashPerms).cast("decimal(14,4)").as("est4"))
       .groupBy(expr(s"n_agree * 10 div $MinhashPerms").cast("long").as("decile"))
       .agg(count(lit(1)).as("n_pairs"),
         sum(col("n_agree")).as("sum_agree"),
-        sum(col("exact4")).as("sum_exact"),
-        sum(abs(col("est4") - col("exact4"))).as("sum_abserr"))
+        sum(bp(col("exact4"))).as("sum_exact_bp"),
+        sum(bp(abs(col("est4") - col("exact4")))).as("sum_abserr_bp"))
       .select(col("decile"), col("n_pairs"),
-        r4(col("sum_agree") / (lit(MinhashPerms.toDouble) * col("n_pairs")))
-          .as("mean_est"),
-        r4(col("sum_exact").cast("double") / col("n_pairs")).as("mean_exact"),
-        r4(col("sum_abserr").cast("double") / col("n_pairs")).as("mae"))
+        halfUp4(col("sum_agree") * 10000, col("n_pairs") * MinhashPerms).as("mean_est"),
+        halfUp4(col("sum_exact_bp"), col("n_pairs")).as("mean_exact"),
+        halfUp4(col("sum_abserr_bp"), col("n_pairs")).as("mae"))
       .orderBy(col("decile"))
   }
+
+  /** `p / (10⁴·q)` rounded HALF_UP to 4 dp, for a 10⁴-scaled integer
+    * numerator `p` and a positive integer count `q`: the integer
+    * quotient `(2p + q) div 2q`, then one correctly rounded division by
+    * 10⁴. The oracle computes the same integer, so the emitted doubles
+    * are bit-equal — where rounding a double quotient on each engine
+    * rounds some ties apart (0.96045 → 0.9604 vs 0.9605). */
+  private[graft] def halfUp4(p: Column, q: Column): Column =
+    call_function("div", p * 2 + q, q * 2) / 10000.0
 
   /** 60-bit SimHash fingerprint (15 hex chars of md5 → bits 0..59; 16 hex
     * chars would overflow a signed long): per token, hash to 60 bits; sum
@@ -919,30 +933,18 @@ object DedupOps {
   val IncrementalShardMod = 10L
 
   /** `(doc_id, bucket)` LSH band-bucket rows for an arbitrary
-    * `(doc_id, text, …)` frame — the same md5-band keys
-    * [[minhashSig]] derives ("b:" + md5(mh·'|'·mh·'|'·mh)), factored
-    * over a caller-supplied frame so the index build (historical split)
-    * and the shard probe (new split, or a genuinely external frame) run
-    * the identical kernel. NULL buckets (shingle-less docs) ride
-    * through and never join, exactly as in [[minhashVerifiedPairs]].
+    * `(doc_id, text, …)` frame — [[signatures]] and [[bandBuckets]], the
+    * kernel [[minhashSig]] pins — so the index build (historical split)
+    * and the shard probe (new split, or a genuinely external frame) band
+    * exactly as the batch queries do. NULL buckets (shingle-less docs)
+    * ride through and never join, exactly as in [[minhashVerifiedPairs]].
     */
-  private[graft] def bandRows(d: DataFrame): DataFrame = {
-    val mh = (0 until MinhashPerms).map(j => minhash(col("hs"), j).as(s"mh_$j"))
-    val sig = d.select(col("doc_id"), ShingleHash32(col("text"), 3).as("hs"))
-      .select(col("doc_id") +: mh: _*)
-    val nBands = MinhashPerms / BandsRows
-    val buckets = (0 until nBands).map { b =>
-      val parts = (0 until BandsRows)
-        .map(r => col(s"mh_${b * BandsRows + r}").cast("string"))
-        .flatMap(c => Seq(c, lit("|"))).dropRight(1)
-      concat(lit(s"$b:"), md5(concat(parts: _*)))
-    }
-    sig.select(col("doc_id"), explode(array(buckets: _*)).as("bucket"))
-  }
+  private[graft] def bandRows(d: DataFrame): DataFrame =
+    signatures(d).select(col("doc_id"), bandBuckets())
 
-  /** Distinct-shingle-hash verification sets for an arbitrary
-    * `(doc_id, text, …)` frame (the [[minhashVerifiedPairs]] `docs`
-    * kernel over a caller-supplied frame). */
+  /** Distinct-shingle-hash verification sets `(doc_id, sh)` for an
+    * arbitrary `(doc_id, text, …)` frame — the one builder of the
+    * 3-shingle verification side (batch: [[shingleSets]]; index: `sigs/`). */
   private[graft] def sigRows(d: DataFrame): DataFrame =
     d.select(col("doc_id"), array_distinct(ShingleHash32(col("text"), 3)).as("sh"))
 
@@ -986,13 +988,9 @@ object DedupOps {
     val histBands = spark.read.parquet(s"$indexPath/bands")
       .join(broadcast(newBands.select(col("bucket")).distinct()),
         Seq("bucket"), "left_semi")
-    val capped = capBuckets(
-      histBands.unionByName(newBands.select(col("bucket"), col("doc_id"))),
-      "bucket", MinhashBandCap)
-    val cand = capped.as("a").join(capped.as("b"),
-        col("a.bucket") === col("b.bucket") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
+    val cand = bucketPairs(
+        histBands.unionByName(newBands.select(col("bucket"), col("doc_id"))),
+        "bucket", MinhashBandCap)
       .filter(col("doc_a") % IncrementalShardMod === 0 ||
         col("doc_b") % IncrementalShardMod === 0)
     val sigs = spark.read.parquet(s"$indexPath/sigs")
@@ -1023,10 +1021,8 @@ object DedupOps {
     * sessions AND rounds until the fixture changes), then probes the
     * new shard read from `dir` against it. Memo keyed per (session,
     * dir) so repeated calls skip even the marker stat. The marker check
-    * is not a lock: two PROCESSES racing the first build could overwrite
-    * each other mid-write (the per-round gates run sequentially; a
-    * production deployment would take a distributed lock or write to a
-    * staging path and rename).
+    * is not a lock: two PROCESSES racing the first build both build it,
+    * and [[publishIndex]] keeps the first one to land.
     */
   def qDedupIncremental(spark: SparkSession, dir: String): DataFrame =
     graft.Memo("dedupIncremental", spark, dir) {
@@ -1090,12 +1086,11 @@ object DedupOps {
   /** Builds the historical index for `dir` once per content fingerprint
     * (`_built` marker — reused across sessions AND rounds until the
     * fixture changes) and returns its path. Shared by the incremental
-    * probe and the compaction entry. Published atomically (staging dir +
-    * rename, losers discarded) like [[compactIndex]] against OTHER
-    * processes; same-JVM callers additionally serialize on a per-path
-    * monitor, so the single-process idempotence the `_built` marker
-    * provides holds per-THREAD too (a second thread blocks, then sees
-    * the marker and returns without touching the tree).
+    * probe and the compaction entry. Published through [[publishIndex]]
+    * against OTHER processes; same-JVM callers additionally serialize on
+    * a per-path monitor, so the single-process idempotence the `_built`
+    * marker provides holds per-THREAD too (a second thread blocks, then
+    * sees the marker and returns without touching the tree).
     */
   private[graft] def ensureIndex(spark: SparkSession, dir: String): String =
     indexBuildLocks.computeIfAbsent(indexPathFor(dir), _ => new Object)
@@ -1105,29 +1100,39 @@ object DedupOps {
     val path = indexPathFor(dir)
     val marker = new java.io.File(s"$path/_built")
     if (!marker.isFile) {
-      // same atomic-publish discipline as compactIndex: build into a
-      // staging dir and rename(2) into place, so a racing reader (or a
-      // crashed build) can never observe a partial bands/sigs pair; the
-      // marker keeps only its single-process idempotence role
-      val staging = s"$path.inprogress"
-      deleteRecursively(new java.io.File(staging))
       // a marker-less path is a legacy in-place partial build (crashed
       // before its marker): clear it so the rename can land — under the
       // documented single-process assumption nobody is reading it
       deleteRecursively(new java.io.File(path))
-      buildMinhashIndex(spark, dir, staging)
-      try
-        java.nio.file.Files.move(java.nio.file.Paths.get(staging),
-          java.nio.file.Paths.get(path),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      catch {
-        case _: java.nio.file.FileSystemException
-            if new java.io.File(s"$path/bands").isDirectory =>
-          deleteRecursively(new java.io.File(staging)) // racer won, same content
-      }
+      publishIndex(path)(buildMinhashIndex(spark, dir, _))
       marker.createNewFile()
     }
     path
+  }
+
+  /** Publishes an index generation atomically: `write` fills a staging
+    * directory (`<target>.inprogress`, cleared first so a crashed attempt
+    * can't contaminate a retry), which is then rename(2)'d onto `target` —
+    * so `target` either doesn't exist or holds one complete bands/sigs
+    * pair, and a racing reader (or a crashed build) never observes a
+    * partial one. Two processes racing the SAME target: the loser's
+    * rename fails on the existing directory and its staging copy is
+    * discarded — first-writer-wins, and since both computed the same
+    * deterministic content, which one landed is immaterial.
+    */
+  private def publishIndex(target: String)(write: String => Unit): Unit = {
+    val staging = s"$target.inprogress"
+    deleteRecursively(new java.io.File(staging))
+    write(staging)
+    try
+      java.nio.file.Files.move(java.nio.file.Paths.get(staging),
+        java.nio.file.Paths.get(target),
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    catch {
+      case _: java.nio.file.FileSystemException
+          if new java.io.File(s"$target/bands").isDirectory =>
+        deleteRecursively(new java.io.File(staging)) // racer won, same content
+    }
   }
 
   /** Folds a probed shard's band/sig rows into a stored index, writing a
@@ -1139,41 +1144,23 @@ object DedupOps {
     * [[buildMinhashIndex]]'s invariant that the cap is applied at probe
     * time over whatever union is current.
     *
-    * The generation is PUBLISHED atomically: both sides are written into
-    * a staging directory (`<outPath>.inprogress`, cleared first so a
-    * crashed attempt can't contaminate a retry) and rename(2)'d into
-    * place — so `outPath` either doesn't exist or holds one complete
-    * generation; a reader can never observe a half-written bands/ next
-    * to yesterday's sigs/. Two processes racing the SAME generation:
-    * the loser's rename fails on the existing target and its staging
-    * dir is discarded — first-writer-wins, and since both computed the
-    * same deterministic fold, which one landed is immaterial. The
-    * `_built` marker written by [[qDedupIndexCompact]] keeps its
-    * documented single-process-idempotence role only.
+    * The generation is published through [[publishIndex]], so a reader
+    * can never observe a half-written bands/ next to yesterday's sigs/,
+    * and of two processes racing the SAME generation the first rename
+    * wins. The `_built` marker written by [[qDedupIndexCompact]] keeps
+    * its documented single-process-idempotence role only.
     */
   def compactIndex(spark: SparkSession, basePath: String,
-      shardDocs: DataFrame, outPath: String): Unit = {
-    val staging = s"$outPath.inprogress"
-    deleteRecursively(new java.io.File(staging))
-    spark.read.parquet(s"$basePath/bands")
-      .unionByName(bandRows(shardDocs))
-      .repartition(col("bucket"))
-      .write.mode("overwrite").parquet(s"$staging/bands")
-    spark.read.parquet(s"$basePath/sigs")
-      .unionByName(sigRows(shardDocs))
-      .write.mode("overwrite").parquet(s"$staging/sigs")
-    try
-      java.nio.file.Files.move(java.nio.file.Paths.get(staging),
-        java.nio.file.Paths.get(outPath),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    catch {
-      case _: java.nio.file.FileSystemException
-          if new java.io.File(s"$outPath/bands").isDirectory =>
-        // a concurrent compaction published this generation first;
-        // its content is the same deterministic fold — keep it
-        deleteRecursively(new java.io.File(staging))
+      shardDocs: DataFrame, outPath: String): Unit =
+    publishIndex(outPath) { staging =>
+      spark.read.parquet(s"$basePath/bands")
+        .unionByName(bandRows(shardDocs))
+        .repartition(col("bucket"))
+        .write.mode("overwrite").parquet(s"$staging/bands")
+      spark.read.parquet(s"$basePath/sigs")
+        .unionByName(sigRows(shardDocs))
+        .write.mode("overwrite").parquet(s"$staging/sigs")
     }
-  }
 
   private def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty)

@@ -162,7 +162,7 @@ object MultimodalOps {
     *     payload×payload, and recall is band-blocking-bounded exactly
     *     like the SimHash twin.
     *  3. Hot buckets clamped at [[MediaBandCap]] docs (ascending doc_id,
-    *     the shared [[DedupOps.capBuckets]] clamp) — at 100 TB a
+    *     the shared [[DedupOps.bucketPairs]] generator) — at 100 TB a
     *     boilerplate byte-profile (empty images, silence) lands millions
     *     of payloads in one bucket; the cap bounds the quadratic by
     *     construction.
@@ -200,7 +200,7 @@ object MultimodalOps {
         expr("cnt * 256 div byte_len").as("q8"),
         (col("byte") % MediaBands).as("band"))
       .localCheckpoint()
-    val bk = DedupOps.capBuckets(
+    val cand = DedupOps.bucketPairs(
       prof.groupBy(col("doc_id"), col("band"))
         .agg(array_sort(collect_list(struct(col("byte"), col("q8")))).as("cells"))
         .select(col("doc_id"),
@@ -209,10 +209,6 @@ object MultimodalOps {
               concat(c("byte").cast("string"), lit(":"),
                 c("q8").cast("string"))), ",")).as("bkey")),
       "bkey", MediaBandCap)
-    val cand = bk.as("a").join(bk.as("b"),
-        col("a.bkey") === col("b.bkey") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
     // L1 verify as ONE join + a two-level aggregation instead of the old
     // (cand⋈cells) full_outer (cand⋈cells) three-join shape (r16): each
     // candidate pair fans to two signed sides, cells attach by a single

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.functions.ShingleHash32
-import graft.functions.TextFunctions.minhash
 import graft.operators.DedupOps
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
@@ -30,10 +29,12 @@ case class BandMember(doc_id: Long, sh: Array[Long])
   * that a streaming corpus ingest needs, with the NEAR-dup semantics
   * `dropDuplicatesWithinWatermark` (exact only) cannot express.
   *
-  * Shape: each arriving document is shingled and banded with the exact
-  * batch kernel (ShingleHash32 → 12 affine permutation minima → 4 md5
-  * band keys — [[DedupOps.bandRows]]), exploded to one probe per band,
-  * and keyed BY BUCKET. Each bucket's StatefulProcessor holds at most
+  * Shape: each arriving document is shingled and banded with the batch
+  * kernel itself ([[DedupOps.signatures]]: ShingleHash32 → 12 affine
+  * permutation minima, carrying the distinct hash set; then
+  * [[DedupOps.bandBuckets]]: 4 md5 band keys, as in
+  * [[DedupOps.bandRows]]), exploded to one probe per band, and keyed BY
+  * BUCKET. Each bucket's StatefulProcessor holds at most
   * [[DedupOps.MinhashBandCap]] members (doc_id + distinct shingle-hash
   * set): a new probe exact-verifies (set Jaccard, HALF_UP 4dp — the
   * batch `r4(jaccard(...))` arithmetic) against every stored member,
@@ -90,20 +91,8 @@ object DocStream {
   def nearDupStream(docs: DataFrame, cap: Int = DedupOps.MinhashBandCap,
       ttl: TTLConfig = TTLConfig.NONE): Dataset[NearDupHit] = {
     import docs.sparkSession.implicits._
-    val nBands = DedupOps.MinhashPerms / DedupOps.BandsRows
-    val mh = (0 until DedupOps.MinhashPerms)
-      .map(j => minhash(col("hs"), j).as(s"mh_$j"))
-    val sig = docs
-      .select(col("doc_id"), ShingleHash32(col("text"), 3).as("hs"))
-      .select(col("doc_id") +: array_distinct(col("hs")).as("sh") +: mh: _*)
-    val buckets = (0 until nBands).map { b =>
-      val parts = (0 until DedupOps.BandsRows)
-        .map(r => col(s"mh_${b * DedupOps.BandsRows + r}").cast("string"))
-        .flatMap(c => Seq(c, lit("|"))).dropRight(1)
-      concat(lit(s"$b:"), md5(concat(parts: _*)))
-    }
-    sig
-      .select(explode(array(buckets: _*)).as("bucket"), col("doc_id"), col("sh"))
+    DedupOps.signatures(docs, array_distinct(col("hs")).as("sh"))
+      .select(DedupOps.bandBuckets(), col("doc_id"), col("sh"))
       .filter(col("bucket").isNotNull) // shingle-less docs band to NULL: no bucket, no state
       .as[BandProbe]
       .groupByKey(_.bucket)

@@ -380,6 +380,46 @@ class DedupSimilaritySpec extends SparkSpec {
       assert(mae >= math.abs(est - exact) - 1e-3,
         s"decile $d: mae $mae below |bias| ${math.abs(est - exact)}")
     }
+    // every mean is the HALF_UP 4-dp quotient of exact sums, recomputed
+    // here in BigDecimal from the pairs frame and the signatures
+    val mh = DedupOps.qDedupMinhash(spark, sf).collect().map(r =>
+      r.getAs[Long]("doc_id") -> (0 until 12).map(j => r.getAs[Long](s"mh_$j"))).toMap
+    def q4(p: BigDecimal, q: Long): Double =
+      p.bigDecimal.divide(java.math.BigDecimal.valueOf(q), 4,
+        java.math.RoundingMode.HALF_UP).doubleValue
+    val byDecile = DedupOps.qDedupMinhashPairs(spark, sf).collect().toSeq.map { r =>
+      val (a, b) = (mh(r.getAs[Long]("doc_a")), mh(r.getAs[Long]("doc_b")))
+      val k = a.zip(b).count { case (x, y) => x == y }
+      (k, BigDecimal(r.getAs[Double]("jaccard")).setScale(4))
+    }.groupBy { case (k, _) => k * 10L / 12 }
+    assert(cal.map(_.getAs[Long]("decile")).toSet === byDecile.keySet)
+    for (r <- cal) {
+      val ps = byDecile(r.getAs[Long]("decile"))
+      val n = ps.size.toLong
+      val est = BigDecimal(ps.map(_._1).sum)
+      val exact = ps.map(_._2).sum
+      val err = ps.map { case (k, e) =>
+        (BigDecimal(k) / 12).setScale(4, BigDecimal.RoundingMode.HALF_UP) - e }
+        .map(_.abs).sum
+      assert(r.getAs[Long]("n_pairs") === n)
+      assert(r.getAs[Double]("mean_est") === q4(est, 12 * n))
+      assert(r.getAs[Double]("mean_exact") === q4(exact, n))
+      assert(r.getAs[Double]("mae") === q4(err, n))
+    }
+  }
+
+  test("halfUp4 rounds exact integer quotients half-up at the measured ties") {
+    def h(p: Long, q: Long): Double =
+      spark.range(1).select(DedupOps.halfUp4(lit(p), lit(q))).head.getDouble(0)
+    // Sigma exact 5.7627 over 6 pairs = 0.96045 (both engines' double
+    // rounding once disagreed here); 0.0029 over 2 = 0.00145
+    assert(h(57627L, 6L) === 0.9605)
+    assert(h(29L, 2L) === 0.0015)
+    // mean_est: Sigma k = 3 over 8 pairs of 12 permutations = 0.03125
+    assert(h(3L * 10000, 96L) === 0.0313)
+    // off-tie neighbours round to nearest
+    assert(h(57626L, 6L) === 0.9604)
+    assert(h(57629L, 6L) === 0.9605)
   }
 
   test("qDedupFunnel: stages telescope, totals reconcile with the exact and cluster dedups") {

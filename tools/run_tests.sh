@@ -2,7 +2,10 @@
 # Runs the full ScalaTest suite the way the ROADMAP tier-1 gate does (same
 # offline sbt flags, core count, driver memory and local dirs) and writes
 # TESTS_r<N>.json (pass/fail counts + exit code), so the round snapshot
-# counts the same suite as the gate.
+# counts the same suite as the gate. After Test/compile it also compiles
+# the benchmark harness (perfbench/build.py, stamp-cached in .bench_build),
+# so a program name the harness uses that was renamed or removed fails
+# here rather than in a benchmark run.
 # Usage: tools/run_tests.sh <round>   (e.g. tools/run_tests.sh 11)
 set -uo pipefail
 cd "$(dirname "$0")/.."
@@ -14,6 +17,7 @@ export SPARK_DRIVER_MEM="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print 
 export SPARK_LOCAL_DIRS=/tmp/spark-local
 LOG=$(mktemp)
 { timeout -k 10 2670 sbt --batch -Dsbt.log.noformat=true Test/compile \
+    && python3 perfbench/build.py \
     && timeout -k 10 2670 sbt --batch -Dsbt.log.noformat=true "testOnly *"; } 2>&1 | tee "$LOG"
 CODE=${PIPESTATUS[0]}
 # sbt/ScalaTest summary: "Tests: succeeded 278, failed 0, canceled 0, ignored 0, pending 0"
