@@ -317,10 +317,13 @@ object StreamSoak {
     * `crossRestartHits` counts pairs whose junior side arrived AFTER the
     * restart and whose senior side arrived BEFORE the crash — each one
     * is direct evidence the member lists came back from the
-    * checkpointed RocksDB state rather than being rebuilt empty. */
+    * checkpointed RocksDB state rather than being rebuilt empty.
+    * `changelogFiles` counts the RocksDB `*.changelog` commits under the
+    * interrupted run's checkpoint: non-zero means the recovery replayed
+    * changelog commits, not only snapshots. */
   final case class RestartSoak(rows: Long, wallSec: Double, batches: Int,
       hitsInterrupted: Long, hitsReference: Long, crossRestartHits: Long,
-      exactlyOnce: Boolean)
+      exactlyOnce: Boolean, changelogFiles: Long)
 
   /** Crash-restart recovery soak for
     * [[graft.streaming.DocStream.nearDupStream]] — the production seam
@@ -384,12 +387,16 @@ object StreamSoak {
       val preMax = half.toLong * batchSize - 1
       val exactlyOnce = interrupted.exceptAll(reference).isEmpty &&
         reference.exceptAll(interrupted).isEmpty
+      val changelogs = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$tmp/crash/ckpt"))
+      val changelogFiles =
+        try changelogs.filter(_.getFileName.toString.endsWith(".changelog")).count()
+        finally changelogs.close()
       // every Dataset action lands here, before the sinks are deleted
       RestartSoak(nBatches.toLong * batchSize,
         (System.nanoTime() - t0) / 1e9, nBatches,
         interrupted.count(), reference.count(),
         interrupted.filter(col("doc_a") <= preMax && col("doc_b") > preMax).count(),
-        exactlyOnce)
+        exactlyOnce, changelogFiles)
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
   }
 
@@ -590,6 +597,7 @@ object StreamSoak {
       s""""hits_interrupted":${ndRestart.hitsInterrupted},""" +
       s""""hits_reference":${ndRestart.hitsReference},""" +
       s""""cross_restart_hits":${ndRestart.crossRestartHits},""" +
+      s""""changelog_files":${ndRestart.changelogFiles},""" +
       s""""exactly_once":${ndRestart.exactlyOnce}}}"""
     java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       out.getBytes("UTF-8"))

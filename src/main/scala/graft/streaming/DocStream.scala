@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.functions.ShingleHash32
 import graft.operators.DedupOps
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig,
   TimeMode, TimerValues}
@@ -159,6 +159,10 @@ object DocStream {
       .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
   }
 
+  /** Built once per JVM, not per task in `init`: see
+    * [[EventStream]]'s state encoders. */
+  private lazy val BandMemberEncoder: Encoder[BandMember] = Encoders.product[BandMember]
+
   /** Per-bucket member list + probe-verify-join state machine for
     * [[nearDupStream]]. Within a micro-batch, probes are processed in
     * doc_id order (the iterator's order is partition-racy) so replayed
@@ -171,7 +175,7 @@ object DocStream {
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       members = getHandle.getListState[BandMember]("members",
-        Encoders.product[BandMember], ttl)
+        BandMemberEncoder, ttl)
 
     override def handleInputRows(bucket: String, rows: Iterator[BandProbe],
         timerValues: TimerValues): Iterator[NearDupHit] = {

@@ -8,18 +8,6 @@ package graft
   */
 class StreamSoakSpec extends SparkSpec {
 
-  private def withRocksDb[A](f: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("sessionizer soak: state bounded by the active window, evicted behind it") {
     val nBatches = 32
     val batchSize = 500
@@ -50,6 +38,8 @@ class StreamSoakSpec extends SparkSpec {
     assert(r.rows === 48L)
     assert(r.exactlyOnce,
       s"pair multiset diverged across restart: ${r.hitsInterrupted} vs ${r.hitsReference}")
+    assert(r.changelogFiles > 0,
+      "no RocksDB changelog under the checkpoint: commits were snapshot-only")
     assert(r.crossRestartHits > 0,
       "no pair bridges the crash — recovered state was empty")
     // one doc per pool per batch below cap: every later member pairs
