@@ -75,7 +75,7 @@ object Diag {
     * overwrite the prior of another. */
   def artifactPath(cpus: Int): String = s"bench_full_c$cpus.json"
 
-  private def r3(x: Double): Double = math.rint(x * 1000) / 1000
+  private[graft] def r3(x: Double): Double = math.rint(x * 1000) / 1000
 
   private def loadavg(): Double =
     math.rint(ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage * 100) / 100

@@ -1,5 +1,6 @@
 package graft
 
+import scala.collection.immutable.ListMap
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -37,12 +38,6 @@ import org.apache.spark.sql.functions._
   *    the GRAPH grows" (the r7 verdict's missing datapoint). Strided
   *    mode writes events only: the graph family reads nothing else.
   *
-  * SPARK_GRAFT_PROBE_COLD=1 adds a COLD datapoint per (query, scale):
-  * Memo.invalidate(dir) runs before the first timed execution, so run 1
-  * pays the full shared-frame build (pair grid, first-touch grid) that
-  * the Memo otherwise amortizes across the family; cold and warm times
-  * are reported side by side.
-  *
   * Usage: runMain graft.ScaleProbe [baseDir] [outDir] [factor] [queries] [mode]
   */
 object ScaleProbe {
@@ -79,7 +74,6 @@ object ScaleProbe {
     val factor = if (args.length > 2) args(2).toInt else 10
     val names = if (args.length > 3) args(3).split(",").toSeq else Headliners
     val mode = if (args.length > 4) args(4) else "hotkey"
-    val cold = sys.env.get("SPARK_GRAFT_PROBE_COLD").contains("1")
     val spark = Tables.localSession(Tables.cpus.toString)
     spark.sparkContext.setLogLevel("WARN")
     amplify(spark, baseDir, outDir, factor, mode)
@@ -103,10 +97,7 @@ object ScaleProbe {
       // exactly like the shingle families
       "q_media_neardup")
     val nReplicas =
-      if (mode == "iid" && names.exists(JitterSensitive))
-        sys.env.get("SPARK_GRAFT_IID_REPLICAS").map(_.toInt)
-          .getOrElse(math.min(factor, 10))
-      else 0
+      if (mode == "iid" && names.exists(JitterSensitive)) math.min(factor, 10) else 0
     val replicaDirs = (0 until nReplicas).map(r => s"${outDir}_rep$r")
     replicaDirs.zipWithIndex.foreach { case (d, r) =>
       amplify(spark, baseDir, d, 1, "iid", copyOffset = r)
@@ -119,22 +110,16 @@ object ScaleProbe {
         try Tables.table(spark, dir, t).foreach(_ => ()) catch { case NonFatal(_) => () }
       try Tables.events(spark, dir).foreach(_ => ()) catch { case NonFatal(_) => () }
     }
-    // Returns (cold, warm): run 1 — after a Memo invalidation when the
-    // cold flag is on — pays any shared-frame build; warm excludes run 1
-    // ONLY in cold mode (where it genuinely differs); otherwise warm =
-    // min over all runs, the estimator every earlier round's probes used
-    // (a GC spike on run 2 must not land directly in the slope). Each run
+    // min over two runs (a GC spike on run 2 must not land directly in
+    // the slope; cold = run 1 per query is `Diag time`'s job). Each run
     // materializes every output column: count() lets Spark prune output
     // projections, which can hide a superlinear column from the slope.
-    def time(name: String, dir: String): (Double, Double) = {
-      if (cold) Memo.invalidate(dir)
-      val runs = (1 to (if (cold) 3 else 2)).map { _ =>
+    def time(name: String, dir: String): Double =
+      (1 to 2).map { _ =>
         val t0 = System.nanoTime()
         Diag.materialize(SparkEntry.queries(name)(spark, dir))
         (System.nanoTime() - t0) / 1e9
-      }
-      (runs.head, if (cold) runs.tail.min else runs.min)
-    }
+      }.min
     // Generator-volume instrumentation (r14 verdict #4): the co-access
     // family's slope defense is "volume grows ×F² on hotkey, wall grows
     // ×F ⇒ sublinear" — emit the measured candidate-pair volume at both
@@ -149,18 +134,10 @@ object ScaleProbe {
           graft.operators.ThreatOps.CoaccessMaxDegree)))
     val rows = names.map { n =>
       val useReplicas = nReplicas > 0 && JitterSensitive(n)
-      // Replica base: cold datapoint from replica 0's run 1 (one honest
-      // cold draw — cold is a diagnostic, not the slope input); warm base
-      // = mean over the replicas' warm minima.
-      val (cb, b, reps) =
-        if (useReplicas) {
-          val per = replicaDirs.map(d => time(n, d))
-          (per.head._1, per.map(_._2).sum / per.size, per.map(_._2))
-        } else {
-          val (c, w) = time(n, baseDir)
-          (c, w, Seq.empty[Double])
-        }
-      val (cx, x) = time(n, outDir)
+      // replica base = mean over the replicas' minima
+      val reps = if (useReplicas) replicaDirs.map(d => time(n, d)) else Seq.empty[Double]
+      val b = if (useReplicas) reps.sum / reps.size else time(n, baseDir)
+      val x = time(n, outDir)
       // measured AFTER the timed runs — the volume aggregation warms
       // nothing the queries read beyond what the table warmup already did
       val vols: Option[(Long, Long)] = generatorVolume.get(n).map { f =>
@@ -168,29 +145,24 @@ object ScaleProbe {
       }
       System.err.println(f"[scale] $n%-22s base=$b%7.2fs x$factor=$x%7.2fs slope=${x / b}%5.2f" +
         (if (useReplicas) s" (base=mean of ${reps.size} replicas)" else "") +
-        (if (cold) f" cold_base=$cb%7.2fs cold_x=$cx%7.2fs cold_slope=${cx / cb}%5.2f" else "") +
         vols.map { case (vb, vx) =>
           f" gen_volume=$vb%d->$vx%d (x${vx.toDouble / math.max(vb, 1)}%.1f)" }.getOrElse(""))
-      (n, b, x, cb, cx, reps, vols)
+      val replicaFields =
+        if (reps.isEmpty) Nil
+        else Seq("base_estimator" -> s"mean_of_${reps.size}_replicas", "base_replicas" -> reps)
+      val volumeFields = vols.toSeq.flatMap { case (vb, vx) =>
+        Seq("generator_volume_base" -> vb, "generator_volume_amplified" -> vx,
+          "generator_volume_ratio" -> math.rint(vx.toDouble / math.max(vb, 1) * 10) / 10)
+      }
+      (n, b, x, ListMap[String, Any]("base" -> b, "amplified" -> x, "slope" -> x / b) ++
+        replicaFields ++ volumeFields)
     }
-    val qs = rows.map { case (n, b, x, cb, cx, reps, vols) =>
-      s""""$n":{"base":$b,"amplified":$x,"slope":${x / b}""" +
-        (if (reps.nonEmpty)
-          s""","base_estimator":"mean_of_${reps.size}_replicas","base_replicas":[${reps.mkString(",")}]"""
-         else "") +
-        (if (cold) s""","cold_base":$cb,"cold_amplified":$cx,"cold_slope":${cx / cb}"""
-         else "") +
-        vols.map { case (vb, vx) =>
-          s""","generator_volume_base":$vb,"generator_volume_amplified":$vx""" +
-            s""","generator_volume_ratio":${math.rint(vx.toDouble / math.max(vb, 1) * 10) / 10}"""
-        }.getOrElse("") + "}"
-    }.mkString(",")
     val totB = rows.map(_._2).sum
     val totX = rows.map(_._3).sum
-    println(s"""{"metric":"scale_slope","factor":$factor,"base_sf":"$baseDir",""" +
-      s""""mode":"$mode","cold_pass":$cold,"iid_base_replicas":$nReplicas,""" +
-      s""""total_base":$totB,"total_amplified":$totX,""" +
-      s""""total_slope":${totX / totB},"queries":{$qs}}""")
+    println(Json.write(ListMap("metric" -> "scale_slope", "factor" -> factor,
+      "base_sf" -> baseDir, "mode" -> mode, "iid_base_replicas" -> nReplicas,
+      "total_base" -> totB, "total_amplified" -> totX, "total_slope" -> totX / totB,
+      "queries" -> ListMap(rows.map { case (n, _, _, q) => n -> q }: _*))))
     spark.stop()
   }
 

@@ -2,21 +2,22 @@ package graft
 
 import java.sql.Timestamp
 
+import scala.collection.immutable.ListMap
+
 import graft.streaming.{Event, EventStream}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
 
-/** Streaming scale-posture soak: pushes a synthetic event load through
-  * the two `transformWithState` stateful operators whose 100 TB claim
-  * is "state stays bounded no matter how many events flow" — the
-  * sessionizer (state ~ |concurrently-active users|, timers close quiet
-  * users) and the sharded Space-Saving heavy hitters (state =
-  * shards × capacity FOREVER, at any key cardinality) — and records
-  * measured rows/s plus the state-store metrics Spark reports per
-  * micro-batch (`StateOperatorProgress.numRowsTotal` / RocksDB custom
-  * metrics). The §G specs pin the operators' SEMANTICS; this harness
-  * supplies the missing throughput/state-size datapoint.
+/** Streaming scale-posture soak: pushes synthetic load through the
+  * stateful streaming operators whose 100 TB claim is "state stays
+  * bounded no matter how many events flow" — sessionizer, heavy
+  * hitters, the interval join and its left outer twin, OHLC windows,
+  * CUSUM drift, funnel and near-dup ingest (plus its TTL and
+  * crash-restart variants) — and records rows/s plus the state-store
+  * metrics Spark reports per micro-batch. The specs pin the operators'
+  * SEMANTICS; this harness supplies the throughput/state-size datapoint
+  * and exits 1 when a state contract fails.
   *
   * The load shape is adversarial for state: event time advances 15 min
   * per batch (watermark keeps moving, timers keep firing), the active
@@ -30,18 +31,19 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object StreamSoak {
 
-  final case class OpSoak(rows: Long, wallSec: Double, rowsPerSec: Double,
-      peakStateRows: Long, finalStateRows: Long, batches: Int,
-      peakStateBytes: Long)
-
-  /** Interval-join soak result: the per-batch buffered-row series is the
-    * eviction evidence — rows must RISE to the watermark-bounded plateau
+  /** One operator soak's measurement. `stateRows` holds `numRowsTotal` of
+    * every stateful operator in each progress report, in report order:
+    * peak and final state derive from it, and for the joins it is the
+    * eviction evidence — rows RISE to the watermark-bounded plateau
     * during steady feed, then FALL once drain batches advance the
     * watermark past the buffered rows' eviction bounds.
     */
-  final case class JoinSoak(rows: Long, wallSec: Double,
-      peakStateRows: Long, postWatermarkStateRows: Long,
-      stateSeries: Seq[Long], batches: Int)
+  final case class Soak(rows: Long, wallSec: Double, batches: Int,
+      stateRows: Seq[Long], peakStateBytes: Long) {
+    def rowsPerSec: Double = rows / wallSec
+    def peakStateRows: Long = stateRows.foldLeft(0L)(math.max)
+    def finalStateRows: Long = stateRows.lastOption.getOrElse(0L)
+  }
 
   /** Event time base for batch `b`: batches are 15 min apart starting
     * one day past the epoch (clear of the initial watermark), events
@@ -50,36 +52,43 @@ object StreamSoak {
   private def eventMs(b: Int, i: Int): Long =
     (1440L + b * 15) * 60000L + (i % 900) * 1000L
 
-  /** Runs `addBatch` + processAllAvailable `nBatches` times against an
-    * already-started query and distills throughput + state metrics from
-    * its progress reports.
+  /** (state rows, state bytes) of every stateful operator in each of
+    * `q`'s recent progress reports, in report order. RocksDB reports its
+    * usage through custom metrics; `memoryUsedBytes` is the HDFS-store
+    * field and stays ~0 there, so bytes are the larger of the two.
     */
-  private def drive(q: StreamingQuery, nBatches: Int, batchSize: Int)(
-      addBatch: Int => Unit): OpSoak =
+  private def progressState(q: StreamingQuery): Seq[(Long, Long)] =
+    q.recentProgress.toSeq.flatMap(_.stateOperators).map { so =>
+      val custom = Option(so.customMetrics)
+        .map(m => Seq("rocksdbTotalMemoryUsage", "rocksdbSstFileSize")
+          .map(k => Option(m.get(k)).map(_.longValue()).getOrElse(0L)).max)
+        .getOrElse(0L)
+      (so.numRowsTotal, math.max(so.memoryUsedBytes, custom))
+    }
+
+  /** Starts `pipeline` on a `MemoryStream` into the memory sink named
+    * `name`, feeds batches `0 until nBatches` from `batch` with
+    * `processAllAvailable` after each, and stops the query.
+    */
+  private def run[T: Encoder](spark: SparkSession, name: String, nBatches: Int)(
+      pipeline: Dataset[T] => Dataset[_])(batch: Int => Seq[T]): Soak = {
+    val mem = MemoryStream[T](spark)
+    val q = pipeline(mem.toDS()).writeStream.format("memory").queryName(name)
+      .outputMode("append").start()
     try {
       val t0 = System.nanoTime()
+      var rows = 0L
       for (b <- 0 until nBatches) {
-        addBatch(b)
+        val data = batch(b)
+        rows += data.size
+        mem.addData(data)
         q.processAllAvailable()
       }
       val wall = (System.nanoTime() - t0) / 1e9
-      val progresses = q.recentProgress.toSeq
-      val stateRows = progresses.flatMap(_.stateOperators.map(_.numRowsTotal))
-      val stateBytes = progresses.flatMap(_.stateOperators.map { so =>
-        // RocksDB reports usage via custom metrics; memoryUsedBytes is
-        // the HDFS-store field and stays ~0 there
-        val custom = Option(so.customMetrics)
-          .map(m => Seq("rocksdbTotalMemoryUsage", "rocksdbSstFileSize")
-            .map(k => Option(m.get(k)).map(_.longValue()).getOrElse(0L)).max)
-          .getOrElse(0L)
-        math.max(so.memoryUsedBytes, custom)
-      })
-      val rows = nBatches.toLong * batchSize
-      OpSoak(rows, wall, rows / wall,
-        if (stateRows.isEmpty) 0L else stateRows.max,
-        if (stateRows.isEmpty) 0L else stateRows.last,
-        nBatches, if (stateBytes.isEmpty) 0L else stateBytes.max)
+      val state = progressState(q)
+      Soak(rows, wall, nBatches, state.map(_._1), state.map(_._2).foldLeft(0L)(math.max))
     } finally q.stop()
+  }
 
   /** Sessionizer soak on `transformWithState` (ValueState + event-time
     * timers on RocksDB). The sliding active-user window means total
@@ -88,19 +97,15 @@ object StreamSoak {
     * peak state rows ~ active window, NOT total users or events.
     */
   def soakSessionizer(spark: SparkSession, nBatches: Int, batchSize: Int,
-      nUsers: Int): OpSoak = {
+      nUsers: Int): Soak = {
     import spark.implicits._
-    val mem = MemoryStream[Event](spark)
-    val q = EventStream.sessionizeTws(mem.toDS())
-      .writeStream.format("memory").queryName("soak_sess")
-      .outputMode("append").start()
-    drive(q, nBatches, batchSize) { b =>
-      mem.addData((0 until batchSize).map { i =>
+    run[Event](spark, "soak_sess", nBatches)(EventStream.sessionizeTws) { b =>
+      (0 until batchSize).map { i =>
         // window front advances nUsers/8 per batch; the tail goes quiet
         val user = b.toLong * nUsers / 8 + i % nUsers
-        Event((b.toLong * batchSize + i), new Timestamp(eventMs(b, i)),
+        Event(b.toLong * batchSize + i, new Timestamp(eventMs(b, i)),
           user, "access", 1.0)
-      })
+      }
     }
   }
 
@@ -110,21 +115,18 @@ object StreamSoak {
     * rest hash-spread over ~4096 tail keys (64× the default capacity).
     */
   def soakHeavyHitters(spark: SparkSession, nBatches: Int, batchSize: Int,
-      shards: Int = 8): OpSoak = {
+      shards: Int = 8): Soak = {
     import spark.implicits._
-    val mem = MemoryStream[(Long, Timestamp, String)](spark)
-    val df = mem.toDF().toDF("event_id", "ts", "props")
-    val q = EventStream.topResourcesStream(df, shards = shards)
-      .writeStream.format("memory").queryName("soak_hh")
-      .outputMode("append").start()
-    drive(q, nBatches, batchSize) { b =>
-      mem.addData((0 until batchSize).map { i =>
+    run[(Long, Timestamp, String)](spark, "soak_hh", nBatches)(ds =>
+      EventStream.topResourcesStream(ds.toDF("event_id", "ts", "props"),
+        shards = shards)) { b =>
+      (0 until batchSize).map { i =>
         val r =
           if (i % 10 < 3) (i % 5).toLong
           else (math.pow(i.toDouble % 9973 + 1, 1.7) % 4096).toLong + 100
-        ((b.toLong * batchSize + i), new Timestamp(eventMs(b, i)),
+        (b.toLong * batchSize + i, new Timestamp(eventMs(b, i)),
           s"""{"k":"res$r"}""")
-      })
+      }
     }
   }
 
@@ -141,23 +143,19 @@ object StreamSoak {
     * completing the funnel pattern dozens more times.
     */
   def soakFunnel(spark: SparkSession, nBatches: Int, batchSize: Int,
-      nUsers: Int): OpSoak = {
+      nUsers: Int): Soak = {
     // Events inside a batch are 1 ms apart but batch bases only 15 min
     // (900,000 ms) apart — a batch larger than that would push its tail
     // past the next batch's base, regressing event time across the
     // boundary and breaking the monotone ordering FunnelProcessor's
-    // !ts.before(prev) guards rely on (r11 ADVICE). Fail loudly instead.
+    // !ts.before(prev) guards rely on. Fail loudly instead.
     require(batchSize < 900000,
       s"soakFunnel batchSize=$batchSize must stay < 900000 (15 min batch " +
         "spacing at 1 ms/event) to keep event time monotone across batches")
     import spark.implicits._
-    val mem = MemoryStream[Event](spark)
-    val q = EventStream.funnelConversions(mem.toDS())
-      .writeStream.format("memory").queryName("soak_funnel")
-      .outputMode("append").start()
     val perBatch = math.max(1, batchSize / nUsers)
-    drive(q, nBatches, batchSize) { b =>
-      mem.addData((0 until batchSize).map { i =>
+    run[Event](spark, "soak_funnel", nBatches)(EventStream.funnelConversions) { b =>
+      (0 until batchSize).map { i =>
         val user = (i % nUsers).toLong
         val cycle = b * perBatch + i / nUsers
         val typ = (cycle % 3) match {
@@ -169,7 +167,7 @@ object StreamSoak {
         // within the batch AND across batches (15 min batch spacing)
         Event(b.toLong * batchSize + i,
           new Timestamp((1440L + b * 15) * 60000L + i), user, typ, 1.0)
-      })
+      }
     }
   }
 
@@ -178,7 +176,7 @@ object StreamSoak {
     * load with event time advancing 15 min per batch. The 2 h watermark
     * + 10 min join interval bound the buffer to ~9 batches of BOTH
     * sides, so buffered rows must PLATEAU at ~9·batchSize during the
-    * steady feed — then three near-empty DRAIN batches jump event time
+    * steady feed — then three 8-row DRAIN batches jump event time
     * +6 h each, the watermark chases it, and Spark must EVICT the
     * buffered rows: the claim under measurement is that
     * post-drain state << peak (a join whose state only ever grows is
@@ -186,46 +184,24 @@ object StreamSoak {
     */
   def soakIntervalJoin(spark: SparkSession, nBatches: Int, batchSize: Int,
       nUsers: Int = 2000,
-      pipeline: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-        EventStream.purchaseLinkedErrors,
-      name: String = "soak_join"): JoinSoak = {
+      pipeline: DataFrame => DataFrame = EventStream.purchaseLinkedErrors,
+      name: String = "soak_join"): Soak = {
     import spark.implicits._
-    val mem = MemoryStream[Event](spark)
-    val q = pipeline(mem.toDS().toDF())
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    var rows = 0L
-    try {
-      val t0 = System.nanoTime()
-      val nDrain = 3
-      for (b <- 0 until nBatches + nDrain) {
-        val data =
-          if (b < nBatches) (0 until batchSize).map { i =>
-            Event(b.toLong * batchSize + i, new Timestamp(eventMs(b, i)),
-              (i % nUsers).toLong,
-              if (i % 2 == 0) "purchase" else "error", 1.0)
-          }
-          else { // drain: few rows, event time +6 h per batch
-            val baseMs = (1440L + nBatches.toLong * 15) * 60000L +
-              (b - nBatches + 1).toLong * 6L * 3600000L
-            (0 until 8).map { i =>
-              Event(1000000000L + b.toLong * 100 + i,
-                new Timestamp(baseMs + i * 1000L), (i % nUsers).toLong,
-                if (i % 2 == 0) "purchase" else "error", 1.0)
-            }
-          }
-        rows += data.size
-        mem.addData(data)
-        q.processAllAvailable()
+    run[Event](spark, name, nBatches + 3)(ds => pipeline(ds.toDF())) { b =>
+      if (b < nBatches) (0 until batchSize).map { i =>
+        Event(b.toLong * batchSize + i, new Timestamp(eventMs(b, i)),
+          (i % nUsers).toLong, if (i % 2 == 0) "purchase" else "error", 1.0)
       }
-      val wall = (System.nanoTime() - t0) / 1e9
-      val series = q.recentProgress.toSeq
-        .flatMap(_.stateOperators.headOption.map(_.numRowsTotal))
-      JoinSoak(rows, wall,
-        if (series.isEmpty) 0L else series.max,
-        if (series.isEmpty) 0L else series.last,
-        series, nBatches + nDrain)
-    } finally q.stop()
+      else { // drain: few rows, event time +6 h per batch
+        val baseMs = (1440L + nBatches.toLong * 15) * 60000L +
+          (b - nBatches + 1).toLong * 6L * 3600000L
+        (0 until 8).map { i =>
+          Event(1000000000L + b.toLong * 100 + i,
+            new Timestamp(baseMs + i * 1000L), (i % nUsers).toLong,
+            if (i % 2 == 0) "purchase" else "error", 1.0)
+        }
+      }
+    }
   }
 
   /** OHLC bar soak ([[EventStream.ohlcBars]], windowed min_by/max_by
@@ -234,25 +210,21 @@ object StreamSoak {
     * event time advancing 15 min per batch, open windows are bounded at
     * ~(watermark + window)/window + 1 ≈ 4 per type regardless of event
     * count, so peak state rows must stay ≤ ~4·|types| + slack while
-    * events grow without bound (the r9 soak's missing series).
+    * events grow without bound.
     */
   def soakOhlc(spark: SparkSession, nBatches: Int, batchSize: Int,
-      nTypes: Int = 4): OpSoak = {
+      nTypes: Int = 4): Soak = {
     import spark.implicits._
     // label count tracks nTypes (named labels for the first 4, synthetic
     // beyond) so nTypes > 4 widens the type space instead of throwing
     val named = Array("access", "purchase", "error", "login")
     val types = Array.tabulate(nTypes)(i =>
       if (i < named.length) named(i) else s"type_$i")
-    val mem = MemoryStream[Event](spark)
-    val q = EventStream.ohlcBars(mem.toDS().toDF())
-      .writeStream.format("memory").queryName("soak_ohlc")
-      .outputMode("append").start()
-    drive(q, nBatches, batchSize) { b =>
-      mem.addData((0 until batchSize).map { i =>
+    run[Event](spark, "soak_ohlc", nBatches)(ds => EventStream.ohlcBars(ds.toDF())) { b =>
+      (0 until batchSize).map { i =>
         Event(b.toLong * batchSize + i, new Timestamp(eventMs(b, i)),
           (i % 1000).toLong, types(i % nTypes), (i % 97).toDouble)
-      })
+      }
     }
   }
 
@@ -263,20 +235,16 @@ object StreamSoak {
     * boundedness contract is peak == final == nUsers.
     */
   def soakDrift(spark: SparkSession, nBatches: Int, batchSize: Int,
-      nUsers: Int): OpSoak = {
+      nUsers: Int): Soak = {
     import spark.implicits._
-    val mem = MemoryStream[Event](spark)
-    val q = EventStream.driftAlerts(mem.toDS())
-      .writeStream.format("memory").queryName("soak_drift")
-      .outputMode("append").start()
-    drive(q, nBatches, batchSize) { b =>
-      mem.addData((0 until batchSize).map { i =>
+    run[Event](spark, "soak_drift", nBatches)(ds => EventStream.driftAlerts(ds)) { b =>
+      (0 until batchSize).map { i =>
         // value drifts upward for a minority of users → real alerts flow
         val user = (i % nUsers).toLong
         val v = if (user % 17 == 0) 1.0 + b * 0.5 else (i % 7).toDouble
         Event(b.toLong * batchSize + i, new Timestamp(eventMs(b, i)),
           user, "access", v)
-      })
+      }
     }
   }
 
@@ -292,15 +260,11 @@ object StreamSoak {
     * per-key state growing with |docs| would be fatal.
     */
   def soakNearDup(spark: SparkSession, nBatches: Int, batchSize: Int,
-      nPool: Int = 200, cap: Int = 8): OpSoak = {
+      nPool: Int = 200, cap: Int = 8): Soak = {
     import spark.implicits._
-    val mem = MemoryStream[(Long, String)](spark)
-    val q = graft.streaming.DocStream.nearDupStream(
-        mem.toDS().toDF("doc_id", "text"), cap = cap)
-      .writeStream.format("memory").queryName("soak_neardup")
-      .outputMode("append").start()
-    drive(q, nBatches, batchSize) { b =>
-      mem.addData((0 until batchSize).map { i =>
+    run[(Long, String)](spark, "soak_neardup", nBatches)(ds =>
+      graft.streaming.DocStream.nearDupStream(ds.toDF("doc_id", "text"), cap = cap)) { b =>
+      (0 until batchSize).map { i =>
         val id = b.toLong * batchSize + i
         val pool = id % nPool
         // pool texts are SHINGLE-DISJOINT (every token pool-specific):
@@ -308,7 +272,7 @@ object StreamSoak {
         // families and merge their buckets, making the expected
         // bucket/hit counts fixture-dependent instead of exact
         (id, (0 until 12).map(k => s"w${pool}x$k").mkString(" "))
-      })
+      }
     }
   }
 
@@ -345,7 +309,7 @@ object StreamSoak {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val nPool = batchSize // one doc per pool per batch
-    // Deleted in the finally below (r15 advisory): the two parquet sinks
+    // Deleted in the finally below: the two parquet sinks
     // plus RocksDB checkpoints under this tree would otherwise leak into
     // java.io.tmpdir on every soak invocation.
     val tmp = java.nio.file.Files.createTempDirectory("graft_soak_restart_").toString
@@ -460,9 +424,8 @@ object StreamSoak {
       require(committedOffset >= want,
         s"soak stalled: committed offset $committedOffset < $want")
     }
-    def lastStateRows: Long = q.recentProgress.toSeq.reverse
-      .flatMap(_.stateOperators.headOption).map(_.numRowsTotal)
-      .headOption.getOrElse(0L)
+    def stateRows: Seq[Long] = progressState(q).map(_._1)
+    def lastStateRows: Long = stateRows.lastOption.getOrElse(0L)
     try {
       val t0 = System.nanoTime()
       var id = 0L
@@ -492,23 +455,15 @@ object StreamSoak {
       val probeHits = spark.sql("SELECT count(*) FROM soak_neardup_ttl")
         .head().getLong(0) - before
       val wall = (System.nanoTime() - t0) / 1e9
-      val peak = q.recentProgress.toSeq
-        .flatMap(_.stateOperators.map(_.numRowsTotal)) match {
-        case s if s.nonEmpty => s.max
-        case _ => 0L
-      }
-      TtlSoak(2L * nBatches * batchSize + nPool, wall, peak, plateau1, fin,
+      TtlSoak(2L * nBatches * batchSize + nPool, wall,
+        stateRows.foldLeft(0L)(math.max), plateau1, fin,
         probeHits, 2 * nBatches + 1)
     } finally q.stop()
   }
 
   def main(args: Array[String]): Unit = {
-    // Flags first, THEN positionals: `runMain graft.StreamSoak ttl-trial`
-    // must not try to parse the flag as the event count.
-    val positional = args.filterNot(_ == "ttl-trial")
-    val nEventsOpt = positional.headOption.map(_.toInt)
-    val nEvents = nEventsOpt.getOrElse(1000000)
-    val outPath = if (positional.length > 1) positional(1) else "STREAM_SOAK.json"
+    val nEvents = args.headOption.map(_.toInt).getOrElse(1000000)
+    val outPath = if (args.length > 1) args(1) else "STREAM_SOAK.json"
     val nBatches = 50
     // floor at 1: a sub-nBatches event count must still feed every batch
     // (batchSize 0 would plateau the TTL soak at 0 and fail it by design)
@@ -518,15 +473,7 @@ object StreamSoak {
     spark.sparkContext.setLogLevel("WARN")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    if (args.contains("ttl-trial")) { // local calibration aid: TTL soak only
-      // explicit positive count wins; bare `ttl-trial` gets the trial
-      // default (2000), NOT the million-event main-soak default
-      val bs = nEventsOpt.filter(_ > 0).getOrElse(2000)
-      val t = soakNearDupTtl(spark, 4, bs, nPool = 50, cap = 4, ttlSec = 4)
-      println(s"[ttl-trial] $t")
-      spark.stop()
-      return
-    }
+    def count(sql: String): Long = spark.sql(sql).head().getLong(0)
     val sess = soakSessionizer(spark, nBatches, batchSize, nUsers)
     val hh = soakHeavyHitters(spark, nBatches, batchSize)
     // join soak: 30 steady batches is ~3.3 plateau windows (buffer bound
@@ -534,7 +481,7 @@ object StreamSoak {
     val join = soakIntervalJoin(spark, nBatches = 30, batchSize = math.max(1, nEvents / 160))
     // LEFT OUTER twin: same watermark-eviction contract, PLUS the
     // null-side rows must actually emit once the watermark proves
-    // no-match — both measured here (r9 verdict item 7).
+    // no-match
     val orphan = soakIntervalJoin(spark, nBatches = 30,
       batchSize = math.max(1, nEvents / 160),
       pipeline = EventStream.orphanErrors, name = "soak_orphan")
@@ -544,61 +491,59 @@ object StreamSoak {
     val nPool = 200
     val ndCap = 8
     val nd = soakNearDup(spark, nBatches, batchSize, nPool, ndCap)
-    val ndHits = spark.sql("SELECT count(*) FROM soak_neardup").head().getLong(0)
+    val ndHits = count("SELECT count(*) FROM soak_neardup")
     val ttlSec = 5
     val ndTtl = soakNearDupTtl(spark, nBatches = 8, batchSize = math.max(1, nEvents / 100),
       nPool = nPool, cap = ndCap, ttlSec = ttlSec)
     val ndRestart = soakNearDupRestart(spark, nBatches = 10,
       batchSize = math.max(2, nEvents / 10000), cap = 12)
-    val funnelRows = spark.sql("SELECT count(*) FROM soak_funnel").head().getLong(0)
-    val funnelUsers = spark.sql("SELECT count(DISTINCT user_id) FROM soak_funnel")
-      .head().getLong(0)
-    def j(o: OpSoak, extra: String = ""): String =
-      f"""{"rows":${o.rows},"wall_sec":${o.wallSec}%.3f,""" +
-        f""""rows_per_sec":${o.rowsPerSec}%.0f,"batches":${o.batches},""" +
-        s""""peak_state_rows":${o.peakStateRows},""" +
-        s""""final_state_rows":${o.finalStateRows},""" +
-        extra +
-        s""""peak_state_bytes":${o.peakStateBytes}}"""
-    def jj(join: JoinSoak, extra: String = ""): String =
-      f"""{"rows":${join.rows},"wall_sec":${join.wallSec}%.3f,""" +
-        s""""batches":${join.batches},"peak_state_rows":${join.peakStateRows},""" +
-        s""""post_watermark_state_rows":${join.postWatermarkStateRows},""" +
-        s""""state_dropped_after_watermark":${join.postWatermarkStateRows < join.peakStateRows / 4},""" +
-        extra +
-        s""""state_rows_series":[${join.stateSeries.mkString(",")}]}"""
-    val evicted = join.postWatermarkStateRows < join.peakStateRows / 4
-    val orphanEvicted = orphan.postWatermarkStateRows < orphan.peakStateRows / 4
+    val funnelRows = count("SELECT count(*) FROM soak_funnel")
+    val funnelUsers = count("SELECT count(DISTINCT user_id) FROM soak_funnel")
     // null-side rows can only emit at the watermark — a left-outer join
     // that never emits orphans is silently behaving as an inner join
-    val orphanRows = spark.sql("SELECT count(*) FROM soak_orphan").head().getLong(0)
-    val out = s"""{"metric":"stream_soak","n_events":${sess.rows},""" +
-      s""""n_users_active":$nUsers,"store":"rocksdb",""" +
-      s""""sessionizer_tws":${j(sess)},"heavy_hitters_tws":${j(hh)},""" +
-      s""""interval_join":${jj(join)},""" +
-      s""""left_outer_join":${jj(orphan, s""""null_side_rows_emitted":$orphanRows,""")},""" +
-      s""""ohlc_windows":${j(ohlc)},"cusum_tws":${j(drift)},""" +
-      s""""funnel_tws":${j(fun,
-        s""""conversions":$funnelRows,"distinct_converted":$funnelUsers,""" +
-        s""""exactly_once":${funnelRows == funnelUsers && funnelRows == nUsers},""")},""" +
-      s""""neardup_tws":${j(nd,
-        s""""pool_texts":$nPool,"cap":$ndCap,"hits":$ndHits,""" +
-        s""""state_ceiling":${nPool * 4 * ndCap},""" +
-        s""""hits_ceiling":${nPool.toLong * 4 * ndCap * (ndCap - 1) / 2},""")},""" +
-      f""""neardup_ttl":{"rows":${ndTtl.rows},""" +
-      f""""wall_sec":${ndTtl.wallSec}%.3f,"ttl_sec":$ttlSec,""" +
-      s""""peak_state_rows":${ndTtl.peakStateRows},""" +
-      s""""phase1_plateau_rows":${ndTtl.phase1PlateauRows},""" +
-      s""""final_state_rows":${ndTtl.finalStateRows},""" +
-      s""""no_ttl_accumulation_rows":${2 * nPool * 4},""" +
-      s""""probe_hits_after_expiry":${ndTtl.probeHits}},""" +
-      f""""neardup_restart":{"rows":${ndRestart.rows},""" +
-      f""""wall_sec":${ndRestart.wallSec}%.3f,"batches":${ndRestart.batches},""" +
-      s""""hits_interrupted":${ndRestart.hitsInterrupted},""" +
-      s""""hits_reference":${ndRestart.hitsReference},""" +
-      s""""cross_restart_hits":${ndRestart.crossRestartHits},""" +
-      s""""changelog_files":${ndRestart.changelogFiles},""" +
-      s""""exactly_once":${ndRestart.exactlyOnce}}}"""
+    val orphanRows = count("SELECT count(*) FROM soak_orphan")
+    val ndStateCeiling = nPool.toLong * 4 * ndCap
+    val ndHitsCeiling = ndStateCeiling * (ndCap - 1) / 2
+    def evicted(s: Soak): Boolean = s.finalStateRows < s.peakStateRows / 4
+    def opJson(s: Soak, extra: (String, Any)*): ListMap[String, Any] =
+      ListMap[String, Any]("rows" -> s.rows, "wall_sec" -> Diag.r3(s.wallSec),
+        "rows_per_sec" -> math.round(s.rowsPerSec), "batches" -> s.batches,
+        "peak_state_rows" -> s.peakStateRows,
+        "final_state_rows" -> s.finalStateRows) ++ extra +
+        ("peak_state_bytes" -> s.peakStateBytes)
+    def joinJson(s: Soak, extra: (String, Any)*): ListMap[String, Any] =
+      ListMap[String, Any]("rows" -> s.rows, "wall_sec" -> Diag.r3(s.wallSec),
+        "batches" -> s.batches, "peak_state_rows" -> s.peakStateRows,
+        "post_watermark_state_rows" -> s.finalStateRows,
+        "state_dropped_after_watermark" -> evicted(s)) ++ extra +
+        ("state_rows_series" -> s.stateRows)
+    val out = Json.write(ListMap[String, Any](
+      "metric" -> "stream_soak", "n_events" -> sess.rows,
+      "n_users_active" -> nUsers, "store" -> "rocksdb",
+      "sessionizer_tws" -> opJson(sess), "heavy_hitters_tws" -> opJson(hh),
+      "interval_join" -> joinJson(join),
+      "left_outer_join" -> joinJson(orphan, "null_side_rows_emitted" -> orphanRows),
+      "ohlc_windows" -> opJson(ohlc), "cusum_tws" -> opJson(drift),
+      "funnel_tws" -> opJson(fun, "conversions" -> funnelRows,
+        "distinct_converted" -> funnelUsers,
+        "exactly_once" -> (funnelRows == funnelUsers && funnelRows == nUsers)),
+      "neardup_tws" -> opJson(nd, "pool_texts" -> nPool, "cap" -> ndCap,
+        "hits" -> ndHits, "state_ceiling" -> ndStateCeiling,
+        "hits_ceiling" -> ndHitsCeiling),
+      "neardup_ttl" -> ListMap("rows" -> ndTtl.rows,
+        "wall_sec" -> Diag.r3(ndTtl.wallSec), "ttl_sec" -> ttlSec,
+        "peak_state_rows" -> ndTtl.peakStateRows,
+        "phase1_plateau_rows" -> ndTtl.phase1PlateauRows,
+        "final_state_rows" -> ndTtl.finalStateRows,
+        "no_ttl_accumulation_rows" -> 2 * nPool * 4,
+        "probe_hits_after_expiry" -> ndTtl.probeHits),
+      "neardup_restart" -> ListMap("rows" -> ndRestart.rows,
+        "wall_sec" -> Diag.r3(ndRestart.wallSec), "batches" -> ndRestart.batches,
+        "hits_interrupted" -> ndRestart.hitsInterrupted,
+        "hits_reference" -> ndRestart.hitsReference,
+        "cross_restart_hits" -> ndRestart.crossRestartHits,
+        "changelog_files" -> ndRestart.changelogFiles,
+        "exactly_once" -> ndRestart.exactlyOnce)))
     java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       out.getBytes("UTF-8"))
     println(out)
@@ -617,8 +562,7 @@ object StreamSoak {
     // Shingle-disjoint pool texts make the hit count EXACT:
     // every pool text owns 4 private buckets, each fills to cap and
     // emits C(cap,2) verified pairs, then drops juniors forever.
-    val ndOk = nd.peakStateRows <= nPool.toLong * 4 * ndCap &&
-      ndHits == nPool.toLong * 4 * ndCap * (ndCap - 1) / 2 && ndHits > 0
+    val ndOk = nd.peakStateRows <= ndStateCeiling && ndHits == ndHitsCeiling && ndHits > 0
     // TTL contracts: an expired family must stop MATCHING (zero probe
     // hits — the behavioral definition of a sliding-recency window) and
     // final state must sit clearly below the no-TTL two-pool
@@ -631,15 +575,15 @@ object StreamSoak {
     // restart contracts: exactly-once pair multiset across the kill and
     // at least one pair bridging the crash (state recovery evidence)
     val ndRestartOk = ndRestart.exactlyOnce && ndRestart.crossRestartHits > 0
-    if (!evicted || !orphanEvicted || orphanRows == 0 || !funnelOk || !ndOk
+    if (!evicted(join) || !evicted(orphan) || orphanRows == 0 || !funnelOk || !ndOk
         || !ndTtlOk || !ndRestartOk) {
       System.err.println(s"[soak] state contract violated: " +
-        s"inner peak=${join.peakStateRows} final=${join.postWatermarkStateRows} " +
-        s"outer peak=${orphan.peakStateRows} final=${orphan.postWatermarkStateRows} " +
+        s"inner peak=${join.peakStateRows} final=${join.finalStateRows} " +
+        s"outer peak=${orphan.peakStateRows} final=${orphan.finalStateRows} " +
         s"orphans=$orphanRows funnel conv=$funnelRows distinct=$funnelUsers " +
         s"peak=${fun.peakStateRows} (users=$nUsers) " +
         s"neardup peak=${nd.peakStateRows} hits=$ndHits " +
-        s"(ceilings ${nPool * 4 * ndCap}/${nPool.toLong * 4 * ndCap * (ndCap - 1) / 2}) " +
+        s"(ceilings $ndStateCeiling/$ndHitsCeiling) " +
         s"ttl plateau=${ndTtl.phase1PlateauRows} final=${ndTtl.finalStateRows} " +
         s"probe_hits=${ndTtl.probeHits} " +
         s"restart exactly_once=${ndRestart.exactlyOnce} " +

@@ -505,8 +505,7 @@ object DedupOps {
     * integer — nothing for the cross-engine hash to drift on.
     */
   def qDedupFunnel(spark: SparkSession, dir: String): DataFrame = {
-    val labels = graft.Memo("dedupClusterLabels", spark, dir)(
-      clusterLabels(spark, dir))
+    val labels = dedupClusterLabels(spark, dir)
     val d = documents(spark, dir)
       .select(col("doc_id"), col("source"), md5(col("text")).as("h"))
     val keepers = d.groupBy(col("h")).agg(min(col("doc_id")).as("keeper"))
@@ -550,8 +549,7 @@ object DedupOps {
       .unionAll(pairs.select(col("doc_b").as("doc_id"), col("jaccard")))
     val near = touch.groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_near_pairs"), max(col("jaccard")).as("max_jaccard"))
-    val labels = graft.Memo("dedupClusterLabels", spark, dir)(
-      clusterLabels(spark, dir))
+    val labels = dedupClusterLabels(spark, dir)
     val sizes = labels.groupBy(col("lbl")).agg(count(lit(1)).as("sz"))
       .withColumnRenamed("lbl", "size_lbl")
     d.join(grp, Seq("h"))
@@ -571,8 +569,7 @@ object DedupOps {
     // multi-round driver loop (a blocking action + localCheckpoint per
     // round) is itself the expensive part, and both this query and
     // qCorpusFilter consume the converged labels.
-    val labels = graft.Memo("dedupClusterLabels", spark, dir)(
-      clusterLabels(spark, dir))
+    val labels = dedupClusterLabels(spark, dir)
     documents(spark, dir).select(col("doc_id"))
       .join(labels, col("doc_id") === col("id"), "left")
       .select(col("doc_id"),
@@ -598,8 +595,7 @@ object DedupOps {
     val exactSurvivor = documents(spark, dir)
       .groupBy(md5(col("text")).as("ch")).agg(min(col("doc_id")).as("kd"))
       .select(col("kd").as("doc_id"), lit(1L).as("is_exact_survivor"))
-    val labels = graft.Memo("dedupClusterLabels", spark, dir)(
-      clusterLabels(spark, dir))
+    val labels = dedupClusterLabels(spark, dir)
     val nearDup = labels.filter(col("id") =!= col("lbl"))
       .select(col("id").as("doc_id"), lit(1L).as("is_near_dup"))
     docs
@@ -616,6 +612,11 @@ object DedupOps {
         expr("near_dup_docs * 10000 div n_docs").as("near_dup_bp"))
       .orderBy(col("source"))
   }
+
+  /** [[clusterLabels]], Memo'd once per (session, dir): the converged
+    * labels every near-dup cluster query reads. */
+  private[graft] def dedupClusterLabels(spark: SparkSession, dir: String): DataFrame =
+    graft.Memo("dedupClusterLabels", spark, dir)(clusterLabels(spark, dir))
 
   /** Pregel-style min-label propagation over the thresholded MinHash pair
     * graph (see [[qDedupClusters]]): returns (id, lbl) for every node

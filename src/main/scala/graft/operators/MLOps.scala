@@ -64,7 +64,7 @@ object MLOps {
     * you'd pin in memory on a cluster while the 100 TB log stays on disk —
     * and Memo.invalidate(dir) unpersists it when the data changes.
     */
-  private def userFeatures(spark: SparkSession, dir: String): DataFrame =
+  private[graft] def userFeatures(spark: SparkSession, dir: String): DataFrame =
     graft.Memo.cached("userFeatures", spark, dir) {
       ThreatOps.qUserFeatures(spark, dir)
     }

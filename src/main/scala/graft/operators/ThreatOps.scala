@@ -313,9 +313,7 @@ object ThreatOps {
     * All-integer output, nothing for the cross-engine hash to drift on.
     */
   def qComponentDensity(spark: SparkSession, dir: String): DataFrame = {
-    val labels = graft.Memo("coaccessCompLabels", spark, dir) {
-      GraphOps.minLabelPropagation(coaccessEdges(spark, dir))
-    }
+    val labels = coaccessCompLabels(spark, dir)
     val pairs = coaccessPairFrame(spark, dir, CoaccessMaxDegree)
     val eCnt = pairs.join(labels, pairs("user_a") === labels("id"))
       .groupBy(col("lbl").as("component_id"))
@@ -334,10 +332,15 @@ object ThreatOps {
       .orderBy(col("component_id"))
   }
 
-  def qCoaccessComponents(spark: SparkSession, dir: String): DataFrame = {
-    val labels = graft.Memo("coaccessCompLabels", spark, dir) {
+  /** Min-label components of the capped co-access graph
+    * ([[coaccessEdges]]), Memo'd once per (session, dir). */
+  private[graft] def coaccessCompLabels(spark: SparkSession, dir: String): DataFrame =
+    graft.Memo("coaccessCompLabels", spark, dir) {
       GraphOps.minLabelPropagation(coaccessEdges(spark, dir))
     }
+
+  def qCoaccessComponents(spark: SparkSession, dir: String): DataFrame = {
+    val labels = coaccessCompLabels(spark, dir)
     val users = graft.Tables.cleanEvents(spark, dir).select(col("user_id")).distinct()
     val comp = users.join(labels, col("user_id") === col("id"), "left")
       .select(col("user_id"),
@@ -1029,9 +1032,7 @@ object ThreatOps {
     // distinct exchange per execution; the feature matrix is |users|
     // rows, pinned once per session and shared with the ML detector
     // family.
-    val cnt = graft.Memo.cached("userFeatures", spark, dir) {
-      qUserFeatures(spark, dir)
-    }.select(col("user_id"), col("unique_resources").as("n_res"))
+    val cnt = MLOps.userFeatures(spark, dir).select(col("user_id"), col("unique_resources").as("n_res"))
     pairs
       .join(cnt.select(col("user_id").as("ca_u"), col("n_res").as("na")),
         col("user_a") === col("ca_u"))

@@ -219,7 +219,28 @@ object EventStream {
     * interval (~2h10m of stream here), not the whole stream. (Without
     * the time bound a stream-stream inner join must buffer forever.)
     */
-  def purchaseLinkedErrors(events: DataFrame): DataFrame = {
+  def purchaseLinkedErrors(events: DataFrame): DataFrame =
+    errorPurchaseJoin(events, "inner")
+      .select(col("user_id"), col("error_id"), col("error_ts"),
+        col("purchase_id"), col("purchase_ts"))
+
+  /** ORPHAN errors — the LEFT OUTER twin of [[purchaseLinkedErrors]]:
+    * errors with NO same-user purchase in the preceding 10 minutes.
+    * A streaming outer join cannot know "no match" until the watermark
+    * proves no matching purchase can still arrive, so the null-side rows
+    * emit when `max(event time) − 2 h` passes the error's join bound —
+    * the unmatched detection is as late as the watermark, by design.
+    * State stays bounded exactly as in the inner join.
+    */
+  def orphanErrors(events: DataFrame): DataFrame =
+    errorPurchaseJoin(events, "left_outer")
+      .filter(col("purchase_id").isNull)
+      .select(col("user_id"), col("error_id"), col("error_ts"))
+
+  /** The watermarked error and purchase sides (purchases' user renamed to
+    * `p_user`) joined on same user and `purchase_ts ≤ error_ts ≤
+    * purchase_ts + 10 min`, with join type `joinType`. */
+  private def errorPurchaseJoin(events: DataFrame, joinType: String): DataFrame = {
     val ev = cleanStream(events) // gate BOTH join sides, not just errors
     val errors = ev.filter(col("event_type") === "error")
       .select(col("event_id").as("error_id"), col("ts").as("error_ts"),
@@ -232,36 +253,8 @@ object EventStream {
     errors.join(purchases,
       col("user_id") === col("p_user") &&
         col("error_ts") >= col("purchase_ts") &&
-        col("error_ts") <= col("purchase_ts") + expr("INTERVAL 10 MINUTES"))
-      .select(col("user_id"), col("error_id"), col("error_ts"),
-        col("purchase_id"), col("purchase_ts"))
-  }
-
-  /** ORPHAN errors — the LEFT OUTER twin of [[purchaseLinkedErrors]]:
-    * errors with NO same-user purchase in the preceding 10 minutes.
-    * A streaming outer join cannot know "no match" until the watermark
-    * proves no matching purchase can still arrive, so the null-side rows
-    * emit when `max(event time) − 2 h` passes the error's join bound —
-    * the unmatched detection is as late as the watermark, by design.
-    * State stays bounded exactly as in the inner join.
-    */
-  def orphanErrors(events: DataFrame): DataFrame = {
-    val ev = cleanStream(events) // gate BOTH join sides, not just errors
-    val errors = ev.filter(col("event_type") === "error")
-      .select(col("event_id").as("error_id"), col("ts").as("error_ts"),
-        col("user_id"))
-      .withWatermark("error_ts", "2 hours")
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("ts").as("purchase_ts"),
-        col("user_id").as("p_user"))
-      .withWatermark("purchase_ts", "2 hours")
-    errors.join(purchases,
-        col("user_id") === col("p_user") &&
-          col("error_ts") >= col("purchase_ts") &&
-          col("error_ts") <= col("purchase_ts") + expr("INTERVAL 10 MINUTES"),
-        "left_outer")
-      .filter(col("purchase_id").isNull)
-      .select(col("user_id"), col("error_id"), col("error_ts"))
+        col("error_ts") <= col("purchase_ts") + expr("INTERVAL 10 MINUTES"),
+      joinType)
   }
 
   /** Streaming CUSUM drift detector — the continuous twin of
@@ -410,8 +403,26 @@ object EventStream {
       state.remove()
       return out
     }
-    val sorted = batch.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-    var cur = state.getOption
+    val (closed, cur) = sessionFold(userId, state.getOption, sortedEvents(batch))
+    cur.foreach { s =>
+      state.update(s)
+      state.setTimeoutTimestamp(s.last + SessionGapMs)
+    }
+    closed.iterator
+  }
+
+  private def sortedEvents(batch: Iterator[Event]): Seq[Event] =
+    batch.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
+
+  /** The gap rule both sessionizers fold a user's time-sorted events
+    * through, starting from the open session `open`: an event within
+    * [[SessionGapMs]] of the open session's last event joins it, a later
+    * one closes it and opens a new one. Returns the closed sessions and
+    * the session left open.
+    */
+  private def sessionFold(userId: Long, open: Option[SessionState],
+      sorted: Seq[Event]): (Seq[Session], Option[SessionState]) = {
+    var cur = open
     val closed = Seq.newBuilder[Session]
     for (e <- sorted) {
       val t = e.ts.getTime
@@ -430,11 +441,7 @@ object EventStream {
           cur = Some(SessionState(t, t, 1))
       }
     }
-    cur.foreach { s =>
-      state.update(s)
-      state.setTimeoutTimestamp(s.last + SessionGapMs)
-    }
-    closed.result().iterator
+    (closed.result(), cur)
   }
 
   private def toSession(userId: Long, s: SessionState): Session =
@@ -480,23 +487,10 @@ object EventStream {
 
     override def handleInputRows(userId: Long, batch: Iterator[Event],
         timerValues: TimerValues): Iterator[Session] = {
-      val sorted = batch.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
+      val sorted = sortedEvents(batch)
       if (sorted.isEmpty) return Iterator.empty
-      var cur = if (state.exists()) Some(state.get()) else None
-      val closed = Seq.newBuilder[Session]
-      for (e <- sorted) {
-        val t = e.ts.getTime
-        cur match {
-          case Some(s) if t - s.last <= SessionGapMs =>
-            cur = Some(s.copy(start = math.min(s.start, t),
-              last = math.max(s.last, t), n = s.n + 1))
-          case Some(s) =>
-            closed += toSession(userId, s)
-            cur = Some(SessionState(t, t, 1))
-          case None =>
-            cur = Some(SessionState(t, t, 1))
-        }
-      }
+      val (closed, cur) = sessionFold(userId,
+        if (state.exists()) Some(state.get()) else None, sorted)
       cur.foreach { s =>
         state.update(s)
         // exactly one armed timer per key: drop stale ones, arm at the
@@ -504,7 +498,7 @@ object EventStream {
         getHandle.listTimers().foreach(ts => getHandle.deleteTimer(ts.asInstanceOf[Long]))
         getHandle.registerTimer(s.last + SessionGapMs)
       }
-      closed.result().iterator
+      closed.iterator
     }
 
     override def handleExpiredTimer(userId: Long, timerValues: TimerValues,

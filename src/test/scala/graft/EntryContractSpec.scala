@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import graft.operators.RelationalOps
 
 /** Driver-contract consistency + physical-plan shape assertions (the
@@ -42,5 +44,25 @@ class EntryContractSpec extends SparkSpec {
     df.collect() // AQE finalizes the physical plan only on execution
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("*("), s"expected WholeStageCodegen spans:\n$plan")
+  }
+
+  test("the program reads exactly the SPARK_GRAFT_CPUS and SPARK_GRAFT_CONF env vars") {
+    val read = """(?:sys\.env|getenv)""".r
+    val byName = """(?:sys\.env(?:\.[a-zA-Z]+)?|getenv)\(\s*"([^"]+)"""".r
+    val files = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }
+    assert(files.nonEmpty, "no program sources under src/main/scala")
+    val names = files.flatMap { f =>
+      val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+      val named = byName.findAllMatchIn(src).map(_.group(1)).toList
+      // every read must name its variable literally, or this list is blind to it
+      assert(read.findAllMatchIn(src).size === named.size,
+        s"$f reads the environment without a literal variable name")
+      named
+    }.toSet
+    assert(names === Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_CONF"))
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import graft.streaming.EventStream
+
 /** Scale-posture contract for the streaming soak harness: state stays
   * bounded by the operator's DESIGN quantity (active sessions / shard
   * count), not by events processed or key cardinality. The full-size
@@ -58,5 +60,26 @@ class StreamSoakSpec extends SparkSpec {
       s"sketch state must be one summary row per shard, got ${r.peakStateRows}")
     assert(r.finalStateRows === r.peakStateRows,
       "summary state neither grows nor shrinks after warmup")
+  }
+
+  test("interval join soaks: buffered rows evicted behind the watermark, outer twin emits orphans") {
+    val nBatches = 12
+    val batchSize = 200
+    val (inner, outer, orphans) = withRocksDb {
+      val inner = StreamSoak.soakIntervalJoin(spark, nBatches, batchSize, nUsers = 50)
+      val outer = StreamSoak.soakIntervalJoin(spark, nBatches, batchSize, nUsers = 50,
+        pipeline = EventStream.orphanErrors, name = "soak_orphan")
+      (inner, outer, spark.sql("SELECT count(*) FROM soak_orphan").head().getLong(0))
+    }
+    for ((r, join) <- Seq(inner -> "inner", outer -> "left outer")) {
+      // the three drain batches carry 8 rows each
+      assert(r.rows === nBatches.toLong * batchSize + 3 * 8)
+      assert(r.batches === nBatches + 3)
+      assert(r.stateRows.size >= r.batches,
+        s"$join: ${r.stateRows.size} state reports for ${r.batches} batches")
+      assert(r.finalStateRows < r.peakStateRows / 4,
+        s"$join: post-watermark state ${r.finalStateRows} vs peak ${r.peakStateRows}")
+    }
+    assert(orphans > 0, "the left outer join emitted no null-side row")
   }
 }
