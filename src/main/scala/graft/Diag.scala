@@ -12,6 +12,9 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ReusedExchangeExec,
+  ShuffleExchangeLike}
 
 /** Developer entry point over [[SparkEntry.queries]], on the session every
   * graft entry point uses: [[Tables.localSession]] at [[Tables.cpus]] cores
@@ -25,7 +28,9 @@ import org.apache.spark.sql.execution.ExplainMode
   *  - `profile <q> <sfDir>` runs the query once, then prints one `STAGE`
   *    line per stage of a fresh re-execution and a `PROF` total.
   *  - `explain <q,…|all> <sfDir> [outDir]` prints the formatted post-AQE
-  *    plan of each query, or writes it to `<outDir>/<q>.txt`.
+  *    plan of each query, or writes it to `<outDir>/<q>.txt`, under a
+  *    header with the load average before and after the run and the
+  *    plan's [[Exchanges]].
   *  - `amplify <baseDir> <outDir> <factor> <mode> [copyOffset]` writes a
   *    [[ScaleProbe.amplify]] fixture.
   *
@@ -198,13 +203,37 @@ object Diag {
     println(f"PROF fresh_$name ${(System.nanoTime() - t0) / 1e9}%.3f")
   }
 
+  /** Exchange nodes of an executed query's final plan, AQE query stages
+    * and subqueries included. `reused` counts the reads of another
+    * exchange's output, which run no shuffle or broadcast of their own;
+    * exchanges inside a cached relation's plan are not counted. */
+  final case class Exchanges(shuffle: Int, broadcast: Int, reused: Int) {
+    /** The exchanges the plan runs. */
+    def run: Int = shuffle + broadcast
+  }
+
+  private object PlanWalk extends AdaptiveSparkPlanHelper
+
+  /** [[Exchanges]] of `df`, which must have been executed: AQE plans are
+    * final only then. */
+  def exchanges(df: DataFrame): Exchanges = {
+    val nodes = PlanWalk.collectWithSubqueries(df.queryExecution.executedPlan) { case p => p }
+    Exchanges(nodes.count(_.isInstanceOf[ShuffleExchangeLike]),
+      nodes.count(_.isInstanceOf[BroadcastExchangeLike]),
+      nodes.count(_.isInstanceOf[ReusedExchangeExec]))
+  }
+
   def explain(spark: SparkSession, queries: Seq[String], sfDir: String,
       outDir: Option[String]): Unit = {
     outDir.foreach(d => Files.createDirectories(Paths.get(d)))
     for (name <- queries) {
+      val loadStart = loadavg()
       val df = SparkEntry.queries(name)(spark, sfDir)
       df.collect() // AQE plans are final only once executed
-      val txt = s"# $name — explain(formatted), post-AQE, over $sfDir\n\n" +
+      val x = exchanges(df)
+      val txt = s"# $name — explain(formatted), post-AQE, over $sfDir\n" +
+        s"# loadavg start=$loadStart end=${loadavg()}\n" +
+        s"# exchanges shuffle=${x.shuffle} broadcast=${x.broadcast} reused=${x.reused}\n\n" +
         df.queryExecution.explainString(ExplainMode.fromString("formatted"))
       outDir match {
         case Some(d) =>

@@ -31,14 +31,15 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object StreamSoak {
 
-  /** One operator soak's measurement. `stateRows` holds `numRowsTotal` of
+  /** One operator soak's measurement. `emitted` is the number of rows the
+    * query wrote to its sink. `stateRows` holds `numRowsTotal` of
     * every stateful operator in each progress report, in report order:
     * peak and final state derive from it, and for the joins it is the
     * eviction evidence — rows RISE to the watermark-bounded plateau
     * during steady feed, then FALL once drain batches advance the
     * watermark past the buffered rows' eviction bounds.
     */
-  final case class Soak(rows: Long, wallSec: Double, batches: Int,
+  final case class Soak(rows: Long, wallSec: Double, batches: Int, emitted: Long,
       stateRows: Seq[Long], peakStateBytes: Long) {
     def rowsPerSec: Double = rows / wallSec
     def peakStateRows: Long = stateRows.foldLeft(0L)(math.max)
@@ -86,7 +87,8 @@ object StreamSoak {
       }
       val wall = (System.nanoTime() - t0) / 1e9
       val state = progressState(q)
-      Soak(rows, wall, nBatches, state.map(_._1), state.map(_._2).foldLeft(0L)(math.max))
+      Soak(rows, wall, nBatches, spark.table(name).count(), state.map(_._1),
+        state.map(_._2).foldLeft(0L)(math.max))
     } finally q.stop()
   }
 
@@ -173,14 +175,18 @@ object StreamSoak {
 
   /** Watermarked STREAM-STREAM interval join soak
     * ([[EventStream.purchaseLinkedErrors]]): alternating purchase/error
-    * load with event time advancing 15 min per batch. The 2 h watermark
+    * load with event time advancing 15 min per batch; purchase `i` and
+    * error `i + 1` share a user, 1 s apart, so the steady feed exercises
+    * the match path as well as buffering. The 2 h watermark
     * + 10 min join interval bound the buffer to ~9 batches of BOTH
     * sides, so buffered rows must PLATEAU at ~9·batchSize during the
     * steady feed — then three 8-row DRAIN batches jump event time
     * +6 h each, the watermark chases it, and Spark must EVICT the
     * buffered rows: the claim under measurement is that
     * post-drain state << peak (a join whose state only ever grows is
-    * the one shape a 100 TB/day stream cannot run).
+    * the one shape a 100 TB/day stream cannot run). The drain rows keep
+    * purchases on even users and errors on odd ones, so none of them
+    * matches: the left outer twin's null-side rows come from them.
     */
   def soakIntervalJoin(spark: SparkSession, nBatches: Int, batchSize: Int,
       nUsers: Int = 2000,
@@ -190,7 +196,7 @@ object StreamSoak {
     run[Event](spark, name, nBatches + 3)(ds => pipeline(ds.toDF())) { b =>
       if (b < nBatches) (0 until batchSize).map { i =>
         Event(b.toLong * batchSize + i, new Timestamp(eventMs(b, i)),
-          (i % nUsers).toLong, if (i % 2 == 0) "purchase" else "error", 1.0)
+          (i / 2 % nUsers).toLong, if (i % 2 == 0) "purchase" else "error", 1.0)
       }
       else { // drain: few rows, event time +6 h per batch
         val baseMs = (1440L + nBatches.toLong * 15) * 60000L +
@@ -473,7 +479,6 @@ object StreamSoak {
     spark.sparkContext.setLogLevel("WARN")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    def count(sql: String): Long = spark.sql(sql).head().getLong(0)
     val sess = soakSessionizer(spark, nBatches, batchSize, nUsers)
     val hh = soakHeavyHitters(spark, nBatches, batchSize)
     // join soak: 30 steady batches is ~3.3 plateau windows (buffer bound
@@ -491,17 +496,17 @@ object StreamSoak {
     val nPool = 200
     val ndCap = 8
     val nd = soakNearDup(spark, nBatches, batchSize, nPool, ndCap)
-    val ndHits = count("SELECT count(*) FROM soak_neardup")
+    val ndHits = nd.emitted
     val ttlSec = 5
     val ndTtl = soakNearDupTtl(spark, nBatches = 8, batchSize = math.max(1, nEvents / 100),
       nPool = nPool, cap = ndCap, ttlSec = ttlSec)
     val ndRestart = soakNearDupRestart(spark, nBatches = 10,
       batchSize = math.max(2, nEvents / 10000), cap = 12)
-    val funnelRows = count("SELECT count(*) FROM soak_funnel")
-    val funnelUsers = count("SELECT count(DISTINCT user_id) FROM soak_funnel")
+    val funnelRows = fun.emitted
+    val funnelUsers = spark.table("soak_funnel").select("user_id").distinct().count()
     // null-side rows can only emit at the watermark — a left-outer join
     // that never emits orphans is silently behaving as an inner join
-    val orphanRows = count("SELECT count(*) FROM soak_orphan")
+    val orphanRows = orphan.emitted
     val ndStateCeiling = nPool.toLong * 4 * ndCap
     val ndHitsCeiling = ndStateCeiling * (ndCap - 1) / 2
     def evicted(s: Soak): Boolean = s.finalStateRows < s.peakStateRows / 4
@@ -521,7 +526,7 @@ object StreamSoak {
       "metric" -> "stream_soak", "n_events" -> sess.rows,
       "n_users_active" -> nUsers, "store" -> "rocksdb",
       "sessionizer_tws" -> opJson(sess), "heavy_hitters_tws" -> opJson(hh),
-      "interval_join" -> joinJson(join),
+      "interval_join" -> joinJson(join, "matched_rows" -> join.emitted),
       "left_outer_join" -> joinJson(orphan, "null_side_rows_emitted" -> orphanRows),
       "ohlc_windows" -> opJson(ohlc), "cusum_tws" -> opJson(drift),
       "funnel_tws" -> opJson(fun, "conversions" -> funnelRows,
@@ -549,8 +554,9 @@ object StreamSoak {
     println(out)
     spark.stop()
     // the eviction claims are the artifact's point — fail LOUDLY if any
-    // join's buffered rows did not fall after the watermark advanced, or
-    // the outer join never produced a null-side row
+    // join's buffered rows did not fall after the watermark advanced, the
+    // inner join never matched, or the outer join never produced a
+    // null-side row
     // funnel contracts: exactly-once emission (terminal suppression) and
     // a |users|-bounded state ceiling
     val funnelOk = funnelRows == funnelUsers && funnelRows == nUsers &&
@@ -575,10 +581,11 @@ object StreamSoak {
     // restart contracts: exactly-once pair multiset across the kill and
     // at least one pair bridging the crash (state recovery evidence)
     val ndRestartOk = ndRestart.exactlyOnce && ndRestart.crossRestartHits > 0
-    if (!evicted(join) || !evicted(orphan) || orphanRows == 0 || !funnelOk || !ndOk
-        || !ndTtlOk || !ndRestartOk) {
+    if (!evicted(join) || join.emitted == 0 || !evicted(orphan) || orphanRows == 0 ||
+        !funnelOk || !ndOk || !ndTtlOk || !ndRestartOk) {
       System.err.println(s"[soak] state contract violated: " +
         s"inner peak=${join.peakStateRows} final=${join.finalStateRows} " +
+        s"matched=${join.emitted} " +
         s"outer peak=${orphan.peakStateRows} final=${orphan.finalStateRows} " +
         s"orphans=$orphanRows funnel conv=$funnelRows distinct=$funnelUsers " +
         s"peak=${fun.peakStateRows} (users=$nUsers) " +

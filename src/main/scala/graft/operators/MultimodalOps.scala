@@ -109,31 +109,6 @@ object MultimodalOps {
       .orderBy(col("doc_id"))
   }
 
-  /** 256-bin byte-value profile — the full-resolution sibling of
-    * [[extractFeatures]]'s 16-bin histogram, same partition-local
-    * mapPartitions kernel shape (one tight JVM loop over the payload,
-    * no shuffle, no codec). For real media this is the byte-distribution
-    * perceptual profile (a block-mean pHash would slot into the same
-    * kernel); over the stand-in text payloads it is the per-character
-    * frequency profile.
-    */
-  case class ByteProfile(docId: Long, byteLen: Long, hist: Array[Long])
-
-  def byteProfileOf(spark: SparkSession, media: DataFrame): Dataset[ByteProfile] = {
-    val s = spark
-    import s.implicits._
-    media.select(col("doc_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, payload) =>
-        val hist = new Array[Long](256)
-        var i = 0
-        while (i < payload.length) { hist(payload(i) & 0xff) += 1; i += 1 }
-        ByteProfile(id, payload.length.toLong, hist)
-      })
-  }
-
-  def byteProfile(spark: SparkSession, dir: String): Dataset[ByteProfile] =
-    byteProfileOf(spark, spread(spark, mediaTable(spark, dir)))
-
   /** Bucket cap + verify threshold for the binary near-dup pass.
     * MediaBandCap bounds every band bucket's pair quadratic at
     * C(64,2) exactly like the SimHash cap (the cap is mirrored in the
@@ -147,13 +122,45 @@ object MultimodalOps {
   val MediaBandCap = 64
   val MediaL1MaxBp = 250L
 
+  /** One document's row of the near-dup pass: byte length, payload md5,
+    * the dense 256-bin basis-point profile (`s10k(b)` = cnt·10⁴ div len,
+    * 0 for absent bytes) and its band keys. */
+  case class MediaProfile(docId: Long, byteLen: Long, digest: String,
+      s10k: Array[Int], bkeys: Array[String])
+
+  /** The byte kernel: one loop over the payload counts every byte value,
+    * one loop over the 256 bins quantizes the present ones — s10k in basis
+    * points for the verify, q8 = cnt·256 div len for blocking — and
+    * appends `byte:q8` to the key of the byte's residue band (byte mod
+    * [[MediaBands]]). A band key is `band|byte:q8,…` over the band's
+    * present bytes, ascending; a band with no present byte has no key.
+    */
+  def mediaProfile(docId: Long, payload: Array[Byte], digest: String): MediaProfile = {
+    val cnt = new Array[Long](256)
+    var i = 0
+    while (i < payload.length) { cnt(payload(i) & 0xff) += 1; i += 1 }
+    val len = payload.length.toLong
+    val s10k = new Array[Int](256)
+    val keys = Array.fill(MediaBands)(new java.lang.StringBuilder)
+    var b = 0
+    while (b < 256) {
+      if (cnt(b) > 0) {
+        s10k(b) = (cnt(b) * 10000 / len).toInt
+        val k = keys(b % MediaBands)
+        if (k.length == 0) k.append(b % MediaBands).append('|') else k.append(',')
+        k.append(b).append(':').append(cnt(b) * 256 / len)
+      }
+      b += 1
+    }
+    MediaProfile(docId, len, digest, s10k, keys.filter(_.length > 0).map(_.toString))
+  }
+
   /** Perceptual-hash-style near-dup detection over the BINARY payloads —
     * the multimodal twin of [[graft.operators.DedupOps.qDedupSimhashPairs]]:
     *
-    *  1. [[byteProfile]] (partition-local kernel) → sparse
-    *     (doc, byte, count) frame; shares quantized by exact integer
-    *     division (q8 = cnt·256 div len — 8-bit resolution for blocking,
-    *     s10k = cnt·10⁴ div len — basis points for the verify).
+    *  1. [[mediaProfile]] (partition-local kernel, one pass per payload)
+    *     → one row per document with its dense basis-point profile and
+    *     its band keys.
     *  2. Banded signature: byte residue class (byte mod 4) splits the
     *     profile into 4 interleaved bands; a band's key is its sorted
     *     `byte:q8` cell string. Near-identical payloads agree exactly on
@@ -166,10 +173,10 @@ object MultimodalOps {
     *     boilerplate byte-profile (empty images, silence) lands millions
     *     of payloads in one bucket; the cap bounds the quadratic by
     *     construction.
-    *  4. Exact verify on candidates only: full-outer merge of the two
-    *     sides' basis-point profiles, L1 distance, keep ≤ [[MediaL1MaxBp]];
-    *     `exact_dup` = payload-digest equality (the byte-identical
-    *     subset). All-integer output → hash-oracled.
+    *  4. Exact verify on candidates only: L1 distance of the two sides'
+    *     profiles, keep ≤ [[MediaL1MaxBp]]; `exact_dup` = payload-digest
+    *     equality (the byte-identical subset). All-integer output →
+    *     hash-oracled.
     *
     * Ref: the reference has no media pipeline; this is the
     * LLM-training-data operator the brief's multimodal family calls for
@@ -177,69 +184,38 @@ object MultimodalOps {
     * signatures, not exact bytes).
     */
   def qMediaNeardup(spark: SparkSession, dir: String): DataFrame =
-    mediaNeardupPairs(spark, spread(spark, mediaTable(spark, dir)))
+    mediaNeardupPairs(spark, mediaTable(spark, dir))
 
   /** Pipeline core over any (doc_id, payload binary) frame — the spec
     * plants byte-identical and perturbed clones through this entry.
+    *
+    * The profile frame is read three times (the band keys and both verify
+    * sides) and is not materialized: the verify sides are one broadcast
+    * of it, the second side reusing the first's exchange. The L1 distance
+    * sums |a − b| over all 256 bins, the same integer as the sum over the
+    * union of present bytes, since an absent byte is 0 on both sides.
+    * A null payload has no profile and never pairs, as in the oracle.
     */
   def mediaNeardupPairs(spark: SparkSession, media: DataFrame): DataFrame = {
-    // localCheckpoint: the partition-local byte-histogram kernel is the
-    // expensive pass (every payload byte), and the un-checkpointed frame
-    // was re-executed by each of its consumers — the band-key build and
-    // BOTH sides of the candidate verify — i.e. 3 full payload scans per
-    // run (r16 profile). Materializing the ~|docs|·|distinct bytes| sparse
-    // profile once keeps the payload pass single; the checkpoint runs
-    // inside the query's own construction, so every bench/oracle
-    // invocation still computes it from parquet.
-    val prof = byteProfileOf(spark, media).toDF()
-      .select(col("docId").as("doc_id"), col("byteLen").as("byte_len"),
-        posexplode(col("hist")).as(Seq("byte", "cnt")))
-      .filter(col("cnt") > 0)
-      .select(col("doc_id"), col("byte_len"), col("byte"), col("cnt"),
-        expr("cnt * 10000 div byte_len").as("s10k"),
-        expr("cnt * 256 div byte_len").as("q8"),
-        (col("byte") % MediaBands).as("band"))
-      .localCheckpoint()
+    val s = spark
+    import s.implicits._
+    val prof = media.select(col("doc_id"), col("payload"), md5(col("payload")))
+      .as[(Long, Array[Byte], String)]
+      .mapPartitions(_.collect { case (id, payload, digest) if payload != null =>
+        mediaProfile(id, payload, digest) })
+      .toDF()
     val cand = DedupOps.bucketPairs(
-      prof.groupBy(col("doc_id"), col("band"))
-        .agg(array_sort(collect_list(struct(col("byte"), col("q8")))).as("cells"))
-        .select(col("doc_id"),
-          concat(col("band").cast("string"), lit("|"),
-            array_join(transform(col("cells"), c =>
-              concat(c("byte").cast("string"), lit(":"),
-                c("q8").cast("string"))), ",")).as("bkey")),
+      prof.select(col("docId").as("doc_id"), explode(col("bkeys")).as("bkey")),
       "bkey", MediaBandCap)
-    // L1 verify as ONE join + a two-level aggregation instead of the old
-    // (cand⋈cells) full_outer (cand⋈cells) three-join shape (r16): each
-    // candidate pair fans to two signed sides, cells attach by a single
-    // doc-keyed join, and |va − vb| per byte is the absolute SIGNED SUM of
-    // the per-side contributions — a byte present on one side only
-    // contributes |±v| exactly as the full_outer's coalesce(…, 0) did.
-    // One shuffle of narrow (pair, byte, signed value) rows with map-side
-    // partial aggregation replaces two wide join exchanges.
-    val cells = prof.select(col("doc_id"), col("byte"), col("s10k"))
-    val sides = cand.select(col("doc_a"), col("doc_b"),
-        explode(array(
-          struct(col("doc_a").as("doc_id"), lit(1L).as("sign")),
-          struct(col("doc_b").as("doc_id"), lit(-1L).as("sign")))).as("s"))
-      .select(col("doc_a"), col("doc_b"), col("s.doc_id").as("doc_id"),
-        col("s.sign").as("sign"))
-    val l1 = sides.join(cells, "doc_id")
-      .groupBy(col("doc_a"), col("doc_b"), col("byte"))
-      .agg(sum(col("sign") * col("s10k")).as("d"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(sum(abs(col("d"))).as("l1_bp"))
+    val (a, b) = (prof.as("a"), prof.as("b"))
+    cand.join(a, col("doc_a") === col("a.docId"))
+      .join(b, col("doc_b") === col("b.docId"))
+      .select(col("doc_a"), col("doc_b"),
+        aggregate(zip_with(col("a.s10k"), col("b.s10k"), (x, y) => abs(x - y)),
+          lit(0L), (acc, d) => acc + d).as("l1_bp"),
+        col("a.byteLen").as("byte_len_a"), col("b.byteLen").as("byte_len_b"),
+        (col("a.digest") === col("b.digest")).cast("long").as("exact_dup"))
       .filter(col("l1_bp") <= MediaL1MaxBp)
-    val meta = media
-      .select(col("doc_id"), octet_length(col("payload")).cast("long").as("blen"),
-        md5(col("payload")).as("digest"))
-    l1.join(meta.select(col("doc_id").as("doc_a"), col("blen").as("byte_len_a"),
-        col("digest").as("dig_a")), "doc_a")
-      .join(meta.select(col("doc_id").as("doc_b"), col("blen").as("byte_len_b"),
-        col("digest").as("dig_b")), "doc_b")
-      .select(col("doc_a"), col("doc_b"), col("l1_bp"),
-        col("byte_len_a"), col("byte_len_b"),
-        (col("dig_a") === col("dig_b")).cast("long").as("exact_dup"))
       .orderBy(col("l1_bp"), col("doc_a"), col("doc_b"))
   }
 

@@ -35,9 +35,11 @@ object StatsOps {
     * The raw log collapses to (user, day) counts in one map-combined
     * aggregation; the ECDFs then live on the DISTINCT-count support
     * frame — tens of rows no matter the corpus size, which is why the
-    * one unpartitioned cumulative window here is safe at 100 TB (it is
-    * on the PlanAuditSpec tiny-frame allowlist for exactly that
-    * reason). All cumulative sums are exact longs; the only doubles are
+    * unpartitioned windows here are safe at 100 TB (the query is on the
+    * PlanAuditSpec tiny-frame allowlist for exactly that reason). The
+    * group totals are whole-frame window sums over that same single
+    * partition the cumulative window gathers, so they cost no shuffle or
+    * join of their own. All sums are exact longs; the only doubles are
     * the two final ECDF divisions on identical operands per engine.
     */
   def qKsTest(spark: SparkSession, dir: String): DataFrame = {
@@ -47,12 +49,13 @@ object StatsOps {
     val sup = daily.groupBy(col("n")).agg(
       sum(when(col("wk") === 0, 1L).otherwise(0L)).as("c_wd"),
       sum(when(col("wk") === 1, 1L).otherwise(0L)).as("c_we"))
-    val tot = sup.agg(sum(col("c_wd")).as("n_wd"), sum(col("c_we")).as("n_we"))
+    val all = Window.partitionBy()
     val w = Window.orderBy(col("n"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val crit = lit(1.358) * sqrt((col("n_wd") + col("n_we")).cast("double")
       / (col("n_wd") * col("n_we")).cast("double"))
-    sup.crossJoin(broadcast(tot))
+    sup.withColumn("n_wd", sum(col("c_wd")).over(all))
+      .withColumn("n_we", sum(col("c_we")).over(all))
       .withColumn("diff", abs(
         sum(col("c_wd")).over(w).cast("double") / col("n_wd").cast("double")
           - sum(col("c_we")).over(w).cast("double") / col("n_we").cast("double")))

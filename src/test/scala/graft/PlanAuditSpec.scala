@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+
 /** Physical-plan audit over EVERY declared query: the "would this survive
   * 100x" regression guard. Runs each plan at sf0.001 and rejects
   * plan shapes that explode at scale.
@@ -46,10 +48,10 @@ class PlanAuditSpec extends SparkSpec {
       // one-row broadcast crosses: the digit grand total / the
       // contingency totals row
       "q_benford", "q_chi2",
-      // one-row broadcast crosses: the group-totals row (KS), the
-      // |langs|-row smoothing grid + one-row corpus normalizer (KL),
-      // the one-row probe embedding (MMR shortlist scan)
-      "q_ks_test", "q_kl_divergence", "q_mmr_sample",
+      // one-row broadcast crosses: the |langs|-row smoothing grid +
+      // one-row corpus normalizer (KL), the one-row probe embedding (MMR
+      // shortlist scan)
+      "q_kl_divergence", "q_mmr_sample",
       // one-row broadcast crosses: the contingency grand-total row
       // (MI / Cramér's V) and the 1-row (μ, σ²) stats frame the
       // per-user distance reads (Mahalanobis)
@@ -64,10 +66,31 @@ class PlanAuditSpec extends SparkSpec {
       // (t0) the banded edit-distance verify reads (r16)
       "q_edit_distance")
 
-  private def finalPlan(name: String): String = {
+  private def executed(name: String): DataFrame = {
     val df = SparkEntry.queries(name)(spark, sf)
     df.collect() // let AQE finalize
-    df.queryExecution.executedPlan.toString
+    df
+  }
+
+  private def finalPlan(name: String): String =
+    executed(name).queryExecution.executedPlan.toString
+
+  // Exchanges (shuffles + broadcasts, reused ones excluded) each
+  // batch_pipeline operation's final plan runs at sf0.001: the budget a
+  // plan change may spend down but never exceed. q_zscore_anomaly and
+  // q_dedup_minhash read Memo-pinned frames, whose exchanges run once
+  // per session, inside the cached relation.
+  private val exchangeBudget = Map(
+    "q_preprocess" -> 1, "q_cumulative_users" -> 3, "q_ks_test" -> 3,
+    "q_zscore_anomaly" -> 0, "q_bloom_join" -> 4, "q_quality_score" -> 2,
+    "q_dedup_minhash" -> 1, "q_ann_brute" -> 3, "q_media_neardup" -> 5)
+
+  test("batch_pipeline operations stay within their exchange budgets") {
+    val over = exchangeBudget.toSeq.sorted.flatMap { case (name, budget) =>
+      val x = Diag.exchanges(executed(name))
+      Option.when(x.run > budget)(s"$name: $x > $budget")
+    }
+    assert(over.isEmpty, s"exchange budget exceeded: ${over.mkString("; ")}")
   }
 
   test("no query plans a cartesian product of non-scalar inputs") {

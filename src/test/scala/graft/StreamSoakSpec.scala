@@ -65,11 +65,10 @@ class StreamSoakSpec extends SparkSpec {
   test("interval join soaks: buffered rows evicted behind the watermark, outer twin emits orphans") {
     val nBatches = 12
     val batchSize = 200
-    val (inner, outer, orphans) = withRocksDb {
-      val inner = StreamSoak.soakIntervalJoin(spark, nBatches, batchSize, nUsers = 50)
-      val outer = StreamSoak.soakIntervalJoin(spark, nBatches, batchSize, nUsers = 50,
-        pipeline = EventStream.orphanErrors, name = "soak_orphan")
-      (inner, outer, spark.sql("SELECT count(*) FROM soak_orphan").head().getLong(0))
+    val (inner, outer) = withRocksDb {
+      (StreamSoak.soakIntervalJoin(spark, nBatches, batchSize, nUsers = 50),
+        StreamSoak.soakIntervalJoin(spark, nBatches, batchSize, nUsers = 50,
+          pipeline = EventStream.orphanErrors, name = "soak_orphan"))
     }
     for ((r, join) <- Seq(inner -> "inner", outer -> "left outer")) {
       // the three drain batches carry 8 rows each
@@ -80,6 +79,7 @@ class StreamSoakSpec extends SparkSpec {
       assert(r.finalStateRows < r.peakStateRows / 4,
         s"$join: post-watermark state ${r.finalStateRows} vs peak ${r.peakStateRows}")
     }
-    assert(orphans > 0, "the left outer join emitted no null-side row")
+    assert(inner.emitted > 0, "the inner interval join matched no error to a purchase")
+    assert(outer.emitted > 0, "the left outer join emitted no null-side row")
   }
 }

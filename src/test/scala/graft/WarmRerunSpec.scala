@@ -43,6 +43,19 @@ class WarmRerunSpec extends SparkSpec {
     assert(Diag.compiles() - before === 0)
   }
 
+  test("executor tasks resolve classes without an ExecutorClassLoader") {
+    // With artifact isolation on, every SQL job carries the session's REPL
+    // class URI and tasks resolve each generated-code class-name lookup
+    // through an ExecutorClassLoader: a jar scan, then a driver RPC.
+    val s = spark
+    import s.implicits._
+    val loaders = spark.range(0, 8, 1, 4)
+      .mapPartitions(_ => Iterator(Thread.currentThread().getContextClassLoader.getClass.getName))
+      .collect().distinct
+    assert(loaders.nonEmpty && !loaders.exists(_.endsWith("ExecutorClassLoader")),
+      s"task context class loaders: ${loaders.mkString(", ")}")
+  }
+
   test("a resolved parquet input is re-read without a Spark job, batch or stream, as a fresh relation") {
     Tables.events(spark, sf)
     Tables.documents(spark, sf)
