@@ -6,8 +6,8 @@ import graft.operators._
 /** Driver contract — see /root/repo/SURVEY.md §2 for the inventory. */
 object SparkEntry {
 
-  /** The co-access degree cap, interpolated into every oracle that must
-    * apply the same filter as the Spark side (six queries ride it) — one
+  /** The co-access degree cap, interpolated into [[coaccessCtes]] and
+    * [[handoffCtes]], which apply the same filter as the Spark side — one
     * source of truth, so retuning [[ThreatOps.CoaccessMaxDegree]] can't
     * silently break hash parity.
     */
@@ -268,6 +268,12 @@ object SparkEntry {
 
   /** Shared oracle-SQL fragments (DuckDB dialect). */
   private val tokSql = "regexp_split_to_array(trim(text), '\\s+')"
+  /** The reference's temporal rules over `ts` (data_preprocessing.py:14-28),
+    * the SQL twins of [[Tables.afterHours]] and [[Tables.weekend]]:
+    * after-hours is hour < 8 or > 18, weekend is weekday (Monday = 0) ≥ 5.
+    * Unparenthesized: each is a whole CASE WHEN or WHERE condition. */
+  private val afterHoursSql = "EXTRACT(hour FROM ts) < 8 OR EXTRACT(hour FROM ts) > 18"
+  private val weekendSql = "isodow(ts)-1 >= 5"
   /** Distinct word k-shingles of a token array `t` (mirror of
     * ShingleHash32's shingling) — k-parameterized so every oracle shares
     * ONE definition.
@@ -321,10 +327,10 @@ object SparkEntry {
 
   /** q_user_features body, shared by the anomaly-detection oracles. */
   private val userFeaturesSql =
-    """WITH lg AS (
-         SELECT user_id, event_type, json_extract_string(props,'$.k') AS resource,
-           CASE WHEN EXTRACT(hour FROM ts) < 8 OR EXTRACT(hour FROM ts) > 18 THEN 1 ELSE 0 END AS iah,
-           CASE WHEN isodow(ts)-1 >= 5 THEN 1 ELSE 0 END AS iw
+    s"""WITH lg AS (
+         SELECT user_id, event_type, json_extract_string(props,'$$.k') AS resource,
+           CASE WHEN $afterHoursSql THEN 1 ELSE 0 END AS iah,
+           CASE WHEN $weekendSql THEN 1 ELSE 0 END AS iw
          FROM events),
        base AS (
          SELECT user_id, count(*) AS total_activities,
@@ -364,6 +370,16 @@ object SparkEntry {
         SELECT doc_id, $fp AS simhash FROM votes"""
   }
 
+  /** Transitive closure over an undirected edge CTE `e(a, b)`: `reach(s, d)`
+    * pairs every node s with each node d it reaches, itself included, so
+    * min(d) per s is its component's min label. The enclosing WITH must
+    * be RECURSIVE. */
+  private val reachCte =
+    """reach(s, d) AS (
+          SELECT DISTINCT a AS s, a AS d FROM e
+          UNION
+          SELECT r.s, e.b FROM reach r JOIN e ON r.d = e.a)"""
+
   /** Connected-components CTE block over the thresholded pair graph
     * (expects a CTE `pr(doc_a, doc_b, jaccard)` in scope; the enclosing
     * WITH must be RECURSIVE) — shared by the cluster oracle and the
@@ -374,10 +390,7 @@ object SparkEntry {
           UNION ALL
           SELECT doc_b, doc_a FROM pr
             WHERE jaccard >= ${DedupOps.ClusterJaccard}),
-        reach(s, d) AS (
-          SELECT DISTINCT a AS s, a AS d FROM e
-          UNION
-          SELECT r.s, e.b FROM reach r JOIN e ON r.d = e.a),
+        $reachCte,
         comp AS (SELECT s AS doc_id, min(d) AS cluster_id FROM reach GROUP BY s)"""
 
   /** Distinct-bigram count over a token array `t` (mirror of
@@ -495,6 +508,214 @@ object SparkEntry {
 
   private val mlFeatures = MLOps.FeatureCols
 
+  /** The co-access projection every graph oracle starts from (mirror of
+    * ThreatOps.coaccessPairFrame): `ur`, the distinct (user_id, res)
+    * grid; if `capped`, `keep`, the resources at most
+    * ThreatOps.CoaccessMaxDegree distinct users touch; and
+    * `pr(ua, ub, c)`, the user pairs (ua < ub) sharing c ≥ 2 of them.
+    *
+    * ur, keep and pr stay PLAIN (inlined) CTEs and the cap stays the
+    * `a.res IN (SELECT res FROM keep)` semi-join: a materialized ur
+    * blocks DuckDB from pushing that semi-join into the pair self-join,
+    * and on a hot-key amplified fixture the unfiltered join is a Σ deg²
+    * spill (observed: out of disk at ×10). tools/graph_oracle_chunked.py
+    * reads the cap and the `count(*) >= 2` threshold from this text. */
+  private[graft] def coaccessCtes(capped: Boolean): String = {
+    val keep =
+      if (capped) s"keep AS (SELECT res FROM ur GROUP BY res HAVING count(*) <= $DegCap),"
+      else ""
+    val semi = if (capped) "WHERE a.res IN (SELECT res FROM keep)" else ""
+    s"""ur AS (SELECT DISTINCT user_id, json_extract_string(props,'$$.k') AS res
+           FROM events WHERE json_extract_string(props,'$$.k') IS NOT NULL
+             AND user_id IS NOT NULL),
+         $keep
+         pr AS (SELECT a.user_id AS ua, b.user_id AS ub, count(*) AS c
+           FROM ur a JOIN ur b ON a.res = b.res AND a.user_id < b.user_id
+           $semi
+           GROUP BY 1, 2 HAVING count(*) >= 2)"""
+  }
+  private val coaccessCappedCtes = coaccessCtes(capped = true)
+
+  /** Connected components of the `pr` graph by min label (mirror of
+    * ThreatOps.qCoaccessComponents; the enclosing WITH must be
+    * RECURSIVE): edges `e`, closure `reach`, `comp(uid, cid)` for users
+    * with an edge, and `c(user_id, component_id)` over every user, a
+    * user without an edge labelled with its own id. */
+  private val coaccessComponentCtes =
+    s"""e AS (SELECT ua AS a, ub AS b FROM pr UNION ALL SELECT ub, ua FROM pr),
+         $reachCte,
+         comp AS (SELECT s AS uid, min(d) AS cid FROM reach GROUP BY s),
+         users AS (SELECT DISTINCT user_id FROM events),
+         c AS (SELECT u.user_id, COALESCE(comp.cid, u.user_id) AS component_id
+           FROM users u LEFT JOIN comp ON u.user_id = comp.uid)"""
+
+  /** The kNN sparsifier of the `pr` graph and its triangles (mirror of
+    * ThreatOps.qKnnTriangles): `knn` keeps each user's 3 strongest
+    * partners (shared count desc, id asc), `und` the undirected edges,
+    * `tri` each triangle once (x < y < z), `tc(user_id, n_triangles)`. */
+  private val knnTriangleCtes =
+    """dirp AS (SELECT ua AS u, ub AS v, c FROM pr
+           UNION ALL SELECT ub, ua, c FROM pr),
+         knn AS (SELECT u, v FROM (
+             SELECT u, v, row_number() OVER (PARTITION BY u ORDER BY c DESC, v) AS rk
+             FROM dirp) WHERE rk <= 3),
+         und AS (SELECT DISTINCT least(u, v) AS a, greatest(u, v) AS b FROM knn),
+         tri AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z FROM und e1
+           JOIN und e2 ON e1.b = e2.a
+           JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b),
+         tc AS (SELECT user_id, count(*) AS n_triangles FROM (
+             SELECT x AS user_id FROM tri
+             UNION ALL SELECT y FROM tri
+             UNION ALL SELECT z FROM tri)
+           GROUP BY 1)"""
+
+  /** First-touch handoffs (mirror of ThreatOps.qHandoffPairs): `ft0`,
+    * each user's first touch (epoch µs) of each resource, bounded by the
+    * same degree cap as the co-access projection (`keep`, `ft`); `ho`,
+    * one row per resource whose first touch by user_to came 0 < Δ ≤ 1 h
+    * (exact integer µs) after user_from's. Equal first touches are
+    * excluded, so direction is well-defined. */
+  private val handoffCtes =
+    s"""ft0 AS (SELECT user_id,
+             json_extract_string(props,'$$.k') AS resource,
+             min(epoch_us(ts)) AS first_us
+           FROM events WHERE json_extract_string(props,'$$.k') IS NOT NULL
+           GROUP BY 1, 2),
+         keep AS (SELECT resource FROM ft0 GROUP BY 1
+           HAVING count(*) <= $DegCap),
+         ft AS (SELECT * FROM ft0 WHERE resource IN (SELECT resource FROM keep)),
+         ho AS (SELECT a.user_id AS user_from, b.user_id AS user_to
+           FROM ft a JOIN ft b ON a.resource = b.resource
+             AND a.user_id <> b.user_id
+             AND b.first_us > a.first_us
+             AND b.first_us - a.first_us <= 3600000000)"""
+
+  /** The two unsupervised embedding detectors: `e(vec_id, truth, l2, mx)`
+    * with truth = label 0, and `s(detector, truth, score)` in long form. */
+  private val detectorScoreCtes =
+    """e AS (
+           SELECT vec_id,
+             CASE WHEN label = 0 THEN 1 ELSE 0 END AS truth,
+             round(sqrt(list_sum(list_transform(embedding, x -> (x::DOUBLE)*(x::DOUBLE)))), 4) AS l2,
+             round(list_max(list_transform(embedding, x -> abs(x::DOUBLE))), 4) AS mx
+           FROM embeddings),
+         s AS (
+           SELECT 'l2_norm' AS detector, truth, l2 AS score FROM e
+           UNION ALL
+           SELECT 'max_abs' AS detector, truth, mx AS score FROM e)"""
+  /** The detectors' descending-threshold curve over `s`: `g`, one row per
+    * tied score; `c`, the cumulative counts from the top; `t`, each
+    * detector's positive and negative totals. */
+  private val detectorCurveCtes =
+    """g AS (
+           SELECT detector, score,
+             CAST(count(*) AS BIGINT) AS n, CAST(sum(truth) AS BIGINT) AS np
+           FROM s GROUP BY detector, score),
+         c AS (
+           SELECT detector, score, n, np,
+             sum(n) OVER w AS cum_n, sum(np) OVER w AS cum_np
+           FROM g WINDOW w AS (PARTITION BY detector ORDER BY score DESC)),
+         t AS (
+           SELECT detector, sum(np) AS pos, sum(n) - sum(np) AS neg
+           FROM g GROUP BY detector)"""
+
+  /** Global z-scores of the user features `uf` (mirror of
+    * MLOps.qZscoreAnomaly): `st`, each feature's population mean and sd;
+    * `z`, the per-feature scores (0 on zero variance); and
+    * `sc(user_id, cnt, anomaly_score, z_l2)`. */
+  private val zscoreCtes = {
+    val stats = mlFeatures.map(f =>
+      s"avg($f) AS mu_$f, stddev_pop($f) AS sd_$f").mkString(", ")
+    val zs = mlFeatures.map(f =>
+      s"CASE WHEN sd_$f IS NULL OR sd_$f = 0 THEN 0.0 ELSE ($f - mu_$f)/sd_$f END AS z_$f")
+      .mkString(", ")
+    s"""st AS (SELECT count(*) AS cnt, $stats FROM uf),
+          z AS (SELECT user_id, cnt, $zs FROM uf CROSS JOIN st),
+          sc AS (SELECT user_id, cnt,
+            round(greatest(${mlFeatures.map(f => s"abs(z_$f)").mkString(", ")}), 4) AS anomaly_score,
+            round(sqrt(${mlFeatures.map(f => s"z_$f*z_$f").mkString(" + ")}), 4) AS z_l2
+          FROM z)"""
+  }
+  /** The z-score flag over `sc`: the top 10% by score, ties by user id. */
+  private val zscoreFlagSql =
+    """CASE WHEN row_number() OVER (ORDER BY anomaly_score DESC, user_id)
+                 <= ceil(cnt * 0.1) THEN 1 ELSE 0 END"""
+  /** `fl(user_id, flag_<f>…)`: each feature's top-10% flag over `uf`
+    * (mirror of MLOps.qQuantileOutlier); [[quantileFlagSumSql]] counts
+    * a user's flags. */
+  private val quantileFlagCte = {
+    val flags = mlFeatures.map(f =>
+      s"""CASE WHEN row_number() OVER (ORDER BY $f DESC, user_id)
+            <= ceil(count(*) OVER () * 0.1) THEN 1 ELSE 0 END AS flag_$f""")
+      .mkString(", ")
+    s"fl AS (SELECT user_id, $flags FROM uf)"
+  }
+  private val quantileFlagSumSql = mlFeatures.map(f => s"flag_$f").mkString(" + ")
+  /** Per-event-type median absolute deviation of `value` (mirror of
+    * MLOps.qMadOutlier): `ev`, `med(met, med)`,
+    * `dev(user_id, event_type, adev, med)` and `mad(aet, mad)`;
+    * [[madOutlierSql]] is the 3σ-equivalent gate. */
+  private val madCtes =
+    """ev AS (SELECT user_id, event_type, value FROM events WHERE value IS NOT NULL),
+         med AS (SELECT event_type AS met, quantile_cont(value, 0.5) AS med
+                 FROM ev GROUP BY 1),
+         dev AS (SELECT user_id, event_type, abs(value - med) AS adev, med
+                 FROM ev JOIN med ON event_type = met),
+         mad AS (SELECT event_type AS aet, quantile_cont(adev, 0.5) AS mad
+                 FROM dev GROUP BY 1)"""
+  private val madOutlierSql = "adev > 3.0 * 1.4826 * mad"
+
+  /** Sequence packing (mirror of TextOps.qPackDocs; the enclosing WITH
+    * must be RECURSIVE): `toks`, each document's token count and its rank
+    * in its block; `pack`, the greedy walk that opens a new sequence
+    * when the next document would overflow the budget. */
+  private val packCtes =
+    s"""toks AS (
+            SELECT doc_id, CAST(len($tokSql) AS BIGINT) AS toks,
+              doc_id // ${TextOps.PackBlock} AS block,
+              row_number() OVER (PARTITION BY doc_id // ${TextOps.PackBlock}
+                ORDER BY doc_id) AS rn
+            FROM documents),
+          pack AS (
+            SELECT block, rn, doc_id, toks, CAST(0 AS BIGINT) AS seq,
+              toks AS fill
+            FROM toks WHERE rn = 1
+            UNION ALL
+            SELECT t.block, t.rn, t.doc_id, t.toks,
+              CASE WHEN p.fill > 0 AND p.fill + t.toks > ${TextOps.PackBudget}
+                   THEN p.seq + 1 ELSE p.seq END,
+              CASE WHEN p.fill > 0 AND p.fill + t.toks > ${TextOps.PackBudget}
+                   THEN t.toks ELSE p.fill + t.toks END
+            FROM pack p JOIN toks t ON t.block = p.block AND t.rn = p.rn + 1)"""
+
+  /** Per-user session summary: a user's session opens at their first
+    * event and wherever `newSession` holds between an event's `ts` and
+    * the previous event's `prev_ts` (ties ordered by event_id). */
+  private def sessionSummarySql(newSession: String): String =
+    s"""WITH s AS (
+           SELECT user_id, event_id, ts,
+             lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
+           FROM events),
+         b AS (
+           SELECT user_id, event_id, ts,
+             CASE WHEN prev_ts IS NULL
+                  OR $newSession
+               THEN 1 ELSE 0 END AS new_sess
+           FROM s),
+         c AS (
+           SELECT user_id, ts,
+             sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS session_id
+           FROM b),
+         g AS (
+           SELECT user_id, session_id, count(*) AS n_events,
+             epoch_us(max(ts))//1000000 - epoch_us(min(ts))//1000000 AS duration_s
+           FROM c GROUP BY user_id, session_id)
+         SELECT user_id, count(*) AS n_sessions,
+           max(n_events) AS max_session_events,
+           CAST(max(duration_s) AS BIGINT) AS max_session_duration_s,
+           round(avg(n_events), 4) AS avg_session_events
+         FROM g GROUP BY user_id ORDER BY user_id"""
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.
     */
@@ -524,7 +745,7 @@ object SparkEntry {
   // counts, raw rowcounts) — the policy would blind them on both sides.
   private val cleanExempt = Set("q_profile", "q_dq_checks")
 
-  private def withCleanEvents(sql: String): String = {
+  private[graft] def withCleanEvents(sql: String): String = {
     val out = eventsRef.replaceAllIn(sql, m => {
       val alias = Option(m.group(2)).getOrElse(" events")
       java.util.regex.Matcher.quoteReplacement(s"${m.group(1)} $cleanEventsSub$alias")
@@ -551,18 +772,18 @@ object SparkEntry {
 
   private def rawOracleSql: Map[String, String] = Map(
     "q_preprocess" ->
-      """SELECT event_id, user_id, event_type,
-         json_extract_string(props,'$.k') AS resource,
+      s"""SELECT event_id, user_id, event_type,
+         json_extract_string(props,'$$.k') AS resource,
          EXTRACT(hour FROM ts) AS hour_of_day,
          isodow(ts)-1 AS day_of_week,
-         CASE WHEN isodow(ts)-1 >= 5 THEN 1 ELSE 0 END::BIGINT AS is_weekend,
-         CASE WHEN EXTRACT(hour FROM ts) < 8 OR EXTRACT(hour FROM ts) > 18 THEN 1 ELSE 0 END::BIGINT AS is_after_hours
+         CASE WHEN $weekendSql THEN 1 ELSE 0 END::BIGINT AS is_weekend,
+         CASE WHEN $afterHoursSql THEN 1 ELSE 0 END::BIGINT AS is_after_hours
          FROM events
          WHERE user_id IS NOT NULL AND event_type IS NOT NULL AND ts IS NOT NULL
          ORDER BY event_id""",
     "q_after_hours_top" ->
-      """SELECT user_id, count(*) AS after_hours_count FROM events
-         WHERE EXTRACT(hour FROM ts) < 8 OR EXTRACT(hour FROM ts) > 18
+      s"""SELECT user_id, count(*) AS after_hours_count FROM events
+         WHERE $afterHoursSql
          GROUP BY user_id ORDER BY after_hours_count DESC, user_id LIMIT 10""",
     "q_resource_access" ->
       """SELECT user_id, count(DISTINCT json_extract_string(props,'$.k')) AS unique_resources,
@@ -599,46 +820,22 @@ object SparkEntry {
          GROUP BY user_id ORDER BY resource_entropy DESC, user_id""",
     "q_user_features" -> s"$userFeaturesSql ORDER BY b.user_id",
     "q_coaccess_pairs" ->
-      """WITH ur AS (SELECT DISTINCT user_id, json_extract_string(props,'$.k') AS res
-           FROM events WHERE json_extract_string(props,'$.k') IS NOT NULL)
-         SELECT a.user_id AS user_a, b.user_id AS user_b, count(*) AS shared_resources
-         FROM ur a JOIN ur b ON a.res = b.res AND a.user_id < b.user_id
-         GROUP BY 1, 2 HAVING count(*) >= 2
+      s"""WITH ${coaccessCtes(capped = false)}
+         SELECT ua AS user_a, ub AS user_b, c AS shared_resources FROM pr
          ORDER BY shared_resources DESC, user_a, user_b LIMIT 100""",
     // Same projection with the production degree cap: resources touched by
     // more than 1000 distinct users are dropped before pairing (the Spark
     // side's CoaccessMaxDegree) — the oracle applies the identical filter,
     // so the capped entry is hash-checked, not rows-only.
     "q_coaccess_capped" ->
-      s"""WITH ur AS (SELECT DISTINCT user_id, json_extract_string(props,'$$.k') AS res
-           FROM events WHERE json_extract_string(props,'$$.k') IS NOT NULL
-             AND user_id IS NOT NULL),
-         keep AS (SELECT res FROM ur GROUP BY res HAVING count(*) <= $DegCap)
-         SELECT a.user_id AS user_a, b.user_id AS user_b, count(*) AS shared_resources
-         FROM ur a JOIN ur b ON a.res = b.res AND a.user_id < b.user_id
-         WHERE a.res IN (SELECT res FROM keep)
-         GROUP BY 1, 2 HAVING count(*) >= 2
+      s"""WITH $coaccessCappedCtes
+         SELECT ua AS user_a, ub AS user_b, c AS shared_resources FROM pr
          ORDER BY shared_resources DESC, user_a, user_b LIMIT 100""",
     // Transitive closure over the capped pair graph; component id = min
     // reachable user id, singletons = users with no qualifying edge.
     "q_coaccess_components" ->
-      s"""WITH RECURSIVE ur AS (SELECT DISTINCT user_id, json_extract_string(props,'$$.k') AS res
-           FROM events WHERE json_extract_string(props,'$$.k') IS NOT NULL
-             AND user_id IS NOT NULL),
-         keep AS (SELECT res FROM ur GROUP BY res HAVING count(*) <= $DegCap),
-         pr AS (SELECT a.user_id AS ua, b.user_id AS ub
-           FROM ur a JOIN ur b ON a.res = b.res AND a.user_id < b.user_id
-           WHERE a.res IN (SELECT res FROM keep)
-           GROUP BY 1, 2 HAVING count(*) >= 2),
-         e AS (SELECT ua AS a, ub AS b FROM pr UNION ALL SELECT ub, ua FROM pr),
-         reach(s, d) AS (
-           SELECT DISTINCT a AS s, a AS d FROM e
-           UNION
-           SELECT r.s, e.b FROM reach r JOIN e ON r.d = e.a),
-         comp AS (SELECT s AS uid, min(d) AS cid FROM reach GROUP BY s),
-         users AS (SELECT DISTINCT user_id FROM events),
-         c AS (SELECT u.user_id, COALESCE(comp.cid, u.user_id) AS component_id
-           FROM users u LEFT JOIN comp ON u.user_id = comp.uid),
+      s"""WITH RECURSIVE $coaccessCappedCtes,
+         $coaccessComponentCtes,
          sz AS (SELECT component_id, CAST(count(*) AS BIGINT) AS component_size
            FROM c GROUP BY 1)
          SELECT c.user_id, c.component_id, sz.component_size
@@ -646,25 +843,17 @@ object SparkEntry {
     // Peer z-scores from exact-DECIMAL sufficient statistics per
     // component (population variance); mirrors the Mahalanobis oracle's
     // integer-exact accumulation so r4 is boundary-safe.
-    "q_peer_anomaly" ->
+    "q_peer_anomaly" -> {
+      // |v − μ| / σ of feature v against its component's Σ (s_<f>) and
+      // Σ² (ss_<f>), population variance; 0 when the variance is 0
+      def peerZ(v: String, f: String): String = {
+        val variance = s"(ss_$f::DOUBLE - s_$f::DOUBLE*s_$f::DOUBLE/n::DOUBLE)/n::DOUBLE"
+        s"""CASE WHEN $variance > 0
+               THEN abs($v::DOUBLE - s_$f::DOUBLE/n::DOUBLE) / sqrt($variance) ELSE 0 END"""
+      }
       s"""WITH RECURSIVE uf AS ($userFeaturesSql),
-         ur AS (SELECT DISTINCT user_id, json_extract_string(props,'$$.k') AS res
-           FROM events WHERE json_extract_string(props,'$$.k') IS NOT NULL
-             AND user_id IS NOT NULL),
-         keep AS (SELECT res FROM ur GROUP BY res HAVING count(*) <= $DegCap),
-         pr AS (SELECT a.user_id AS ua, b.user_id AS ub
-           FROM ur a JOIN ur b ON a.res = b.res AND a.user_id < b.user_id
-           WHERE a.res IN (SELECT res FROM keep)
-           GROUP BY 1, 2 HAVING count(*) >= 2),
-         e AS (SELECT ua AS a, ub AS b FROM pr UNION ALL SELECT ub, ua FROM pr),
-         reach(s, d) AS (
-           SELECT DISTINCT a AS s, a AS d FROM e
-           UNION
-           SELECT r.s, e.b FROM reach r JOIN e ON r.d = e.a),
-         comp AS (SELECT s AS uid, min(d) AS cid FROM reach GROUP BY s),
-         users AS (SELECT DISTINCT user_id FROM events),
-         c AS (SELECT u.user_id, COALESCE(comp.cid, u.user_id) AS component_id
-           FROM users u LEFT JOIN comp ON u.user_id = comp.uid),
+         $coaccessCappedCtes,
+         $coaccessComponentCtes,
          x AS (SELECT c.user_id, c.component_id,
              CAST(uf.total_activities AS DECIMAL(18,0)) AS ta,
              CAST(uf.unique_resources AS DECIMAL(18,0)) AS uq,
@@ -674,43 +863,21 @@ object SparkEntry {
              sum(ta) AS s_ta, sum(ta*ta) AS ss_ta,
              sum(uq) AS s_uq, sum(uq*uq) AS ss_uq,
              sum(ahr4) AS s_ah, sum(ahr4*ahr4) AS ss_ah
-           FROM x GROUP BY 1)
-         SELECT x.user_id, x.component_id, CAST(st.n AS BIGINT) AS peer_n,
-           round(greatest(
-             CASE WHEN (ss_ta::DOUBLE - s_ta::DOUBLE*s_ta::DOUBLE/n::DOUBLE)/n::DOUBLE > 0
-               THEN abs(ta::DOUBLE - s_ta::DOUBLE/n::DOUBLE)
-                 / sqrt((ss_ta::DOUBLE - s_ta::DOUBLE*s_ta::DOUBLE/n::DOUBLE)/n::DOUBLE) ELSE 0 END,
-             CASE WHEN (ss_uq::DOUBLE - s_uq::DOUBLE*s_uq::DOUBLE/n::DOUBLE)/n::DOUBLE > 0
-               THEN abs(uq::DOUBLE - s_uq::DOUBLE/n::DOUBLE)
-                 / sqrt((ss_uq::DOUBLE - s_uq::DOUBLE*s_uq::DOUBLE/n::DOUBLE)/n::DOUBLE) ELSE 0 END,
-             CASE WHEN (ss_ah::DOUBLE - s_ah::DOUBLE*s_ah::DOUBLE/n::DOUBLE)/n::DOUBLE > 0
-               THEN abs(ahr4::DOUBLE - s_ah::DOUBLE/n::DOUBLE)
-                 / sqrt((ss_ah::DOUBLE - s_ah::DOUBLE*s_ah::DOUBLE/n::DOUBLE)/n::DOUBLE) ELSE 0 END), 4) AS peer_z,
-           CAST(CASE WHEN round(greatest(
-             CASE WHEN (ss_ta::DOUBLE - s_ta::DOUBLE*s_ta::DOUBLE/n::DOUBLE)/n::DOUBLE > 0
-               THEN abs(ta::DOUBLE - s_ta::DOUBLE/n::DOUBLE)
-                 / sqrt((ss_ta::DOUBLE - s_ta::DOUBLE*s_ta::DOUBLE/n::DOUBLE)/n::DOUBLE) ELSE 0 END,
-             CASE WHEN (ss_uq::DOUBLE - s_uq::DOUBLE*s_uq::DOUBLE/n::DOUBLE)/n::DOUBLE > 0
-               THEN abs(uq::DOUBLE - s_uq::DOUBLE/n::DOUBLE)
-                 / sqrt((ss_uq::DOUBLE - s_uq::DOUBLE*s_uq::DOUBLE/n::DOUBLE)/n::DOUBLE) ELSE 0 END,
-             CASE WHEN (ss_ah::DOUBLE - s_ah::DOUBLE*s_ah::DOUBLE/n::DOUBLE)/n::DOUBLE > 0
-               THEN abs(ahr4::DOUBLE - s_ah::DOUBLE/n::DOUBLE)
-                 / sqrt((ss_ah::DOUBLE - s_ah::DOUBLE*s_ah::DOUBLE/n::DOUBLE)/n::DOUBLE) ELSE 0 END), 4) > 3.0
-             THEN 1 ELSE 0 END AS BIGINT) AS is_peer_outlier
-         FROM x JOIN st USING (component_id) ORDER BY x.user_id""",
+           FROM x GROUP BY 1),
+         pz AS (SELECT x.user_id, x.component_id, st.n,
+             round(greatest(${peerZ("ta", "ta")}, ${peerZ("uq", "uq")},
+               ${peerZ("ahr4", "ah")}), 4) AS peer_z
+           FROM x JOIN st USING (component_id))
+         SELECT user_id, component_id, CAST(n AS BIGINT) AS peer_n, peer_z,
+           CAST(CASE WHEN peer_z > 3.0 THEN 1 ELSE 0 END AS BIGINT) AS is_peer_outlier
+         FROM pz ORDER BY user_id"""
+    },
     // Bounded BFS unrolled to its 3 hop CTEs (no recursion — the depth
     // bound is the point); same capped pair graph as the components
     // oracle; min(hop) resolves multi-path visits exactly as the Spark
     // side's min-agg does.
     "q_blast_radius" ->
-      s"""WITH ur AS (SELECT DISTINCT user_id, json_extract_string(props,'$$.k') AS res
-           FROM events WHERE json_extract_string(props,'$$.k') IS NOT NULL
-             AND user_id IS NOT NULL),
-         keep AS (SELECT res FROM ur GROUP BY res HAVING count(*) <= $DegCap),
-         pr AS (SELECT a.user_id AS ua, b.user_id AS ub
-           FROM ur a JOIN ur b ON a.res = b.res AND a.user_id < b.user_id
-           WHERE a.res IN (SELECT res FROM keep)
-           GROUP BY 1, 2 HAVING count(*) >= 2),
+      s"""WITH $coaccessCappedCtes,
          e AS (SELECT ua AS a, ub AS b FROM pr UNION ALL SELECT ub, ua FROM pr),
          seeds AS (SELECT user_id AS seed FROM events GROUP BY 1
            ORDER BY count(*) DESC, user_id LIMIT 10),
@@ -733,21 +900,10 @@ object SparkEntry {
     // each e_i references e_{i-1} three times, so the inlined unrolling
     // is a 3^8-leaf scan tree (observed as an fd-exhaustion abort) —
     // materialization is the oracle-side twin of the engine side's
-    // per-round localCheckpoint.
-    // ur/keep/pr stay PLAIN (inlined) CTEs: materializing ur would block
-    // DuckDB from pushing the `res IN keep` semi-join into the pair
-    // self-join, and on a hot-key amplified fixture the unfiltered join
-    // is a Sigma-deg² spill (observed: out-of-disk at x10). Only the
-    // peel rounds need MATERIALIZED (see below).
+    // per-round localCheckpoint. The shared ur/keep/pr prefix stays
+    // plain ([[coaccessCtes]] says why).
     "q_kcore" ->
-      s"""WITH ur AS (SELECT DISTINCT user_id, json_extract_string(props,'$$.k') AS res
-           FROM events WHERE json_extract_string(props,'$$.k') IS NOT NULL
-             AND user_id IS NOT NULL),
-         keep AS (SELECT res FROM ur GROUP BY res HAVING count(*) <= $DegCap),
-         pr AS (SELECT a.user_id AS ua, b.user_id AS ub
-           FROM ur a JOIN ur b ON a.res = b.res AND a.user_id < b.user_id
-           WHERE a.res IN (SELECT res FROM keep)
-           GROUP BY 1, 2 HAVING count(*) >= 2),
+      s"""WITH $coaccessCappedCtes,
          e0 AS MATERIALIZED (SELECT ua AS a, ub AS b FROM pr UNION ALL SELECT ub, ua FROM pr),
          ${(1 to ThreatOps.KcoreRounds).map { i =>
              val p = i - 1
@@ -762,14 +918,7 @@ object SparkEntry {
     // arithmetic on both engines (no libm log to diverge); -1 marks
     // isolated users (no capped pair edge).
     "q_degree_dist" ->
-      s"""WITH ur AS (SELECT DISTINCT user_id, json_extract_string(props,'$$.k') AS res
-           FROM events WHERE json_extract_string(props,'$$.k') IS NOT NULL
-             AND user_id IS NOT NULL),
-         keep AS (SELECT res FROM ur GROUP BY res HAVING count(*) <= $DegCap),
-         pr AS (SELECT a.user_id AS ua, b.user_id AS ub
-           FROM ur a JOIN ur b ON a.res = b.res AND a.user_id < b.user_id
-           WHERE a.res IN (SELECT res FROM keep)
-           GROUP BY 1, 2 HAVING count(*) >= 2),
+      s"""WITH $coaccessCappedCtes,
          d AS (SELECT uid, CAST(count(*) AS BIGINT) AS degree FROM
            (SELECT ua AS uid FROM pr UNION ALL SELECT ub FROM pr) GROUP BY 1),
          users AS (SELECT DISTINCT user_id AS uid FROM events),
@@ -781,44 +930,15 @@ object SparkEntry {
            CAST(min(degree) AS BIGINT) AS min_degree,
            CAST(max(degree) AS BIGINT) AS max_degree
          FROM f GROUP BY 1 ORDER BY bucket""",
-    // first-touch frame bounds the pair term exactly like the capped
-    // co-access projection; the 1-h window is exact integer microseconds
-    // (epoch_us both engines); equal first touches excluded so direction
-    // is well-defined.
     "q_handoff_pairs" ->
-      s"""WITH ft0 AS (SELECT user_id,
-             json_extract_string(props,'$$.k') AS resource,
-             min(epoch_us(ts)) AS first_us
-           FROM events WHERE json_extract_string(props,'$$.k') IS NOT NULL
-           GROUP BY 1, 2),
-         keep AS (SELECT resource FROM ft0 GROUP BY 1
-           HAVING count(*) <= $DegCap),
-         ft AS (SELECT * FROM ft0 WHERE resource IN (SELECT resource FROM keep))
-         SELECT a.user_id AS user_from, b.user_id AS user_to,
-           count(*) AS n_handoffs
-         FROM ft a JOIN ft b ON a.resource = b.resource
-           AND a.user_id <> b.user_id
-           AND b.first_us > a.first_us
-           AND b.first_us - a.first_us <= 3600000000
+      s"""WITH $handoffCtes
+         SELECT user_from, user_to, count(*) AS n_handoffs FROM ho
          GROUP BY 1, 2
          ORDER BY n_handoffs DESC, user_from, user_to LIMIT 50""",
-    // Same ft0/keep/ft first-touch chain as q_handoff_pairs; both
-    // directions aggregated from the one directed-event join, merged on
-    // user_id. All-integer output.
+    // Both directions aggregated from the one directed join `ho`, merged
+    // on user_id. All-integer output.
     "q_handoff_balance" ->
-      s"""WITH ft0 AS (SELECT user_id,
-             json_extract_string(props,'$$.k') AS resource,
-             min(epoch_us(ts)) AS first_us
-           FROM events WHERE json_extract_string(props,'$$.k') IS NOT NULL
-           GROUP BY 1, 2),
-         keep AS (SELECT resource FROM ft0 GROUP BY 1
-           HAVING count(*) <= $DegCap),
-         ft AS (SELECT * FROM ft0 WHERE resource IN (SELECT resource FROM keep)),
-         ho AS (SELECT a.user_id AS user_from, b.user_id AS user_to
-           FROM ft a JOIN ft b ON a.resource = b.resource
-             AND a.user_id <> b.user_id
-             AND b.first_us > a.first_us
-             AND b.first_us - a.first_us <= 3600000000),
+      s"""WITH $handoffCtes,
          o AS (SELECT user_from AS user_id, count(*) AS n_out,
              count(DISTINCT user_to) AS n_recipients
            FROM ho GROUP BY 1),
@@ -833,27 +953,11 @@ object SparkEntry {
            CAST(COALESCE(n_senders, 0) AS BIGINT) AS n_senders
          FROM o FULL JOIN i ON o.user_id = i.user_id
          ORDER BY user_id""",
-    // Same ur/keep/pr/e/reach/comp closure as q_coaccess_components;
-    // edges attach to a component by ONE endpoint (both share it by
+    // Edges attach to a component by ONE endpoint (both share it by
     // definition); density = 2E·10000 // n(n−1) in pure integers.
     "q_component_density" ->
-      s"""WITH RECURSIVE ur AS (SELECT DISTINCT user_id, json_extract_string(props,'$$.k') AS res
-           FROM events WHERE json_extract_string(props,'$$.k') IS NOT NULL
-             AND user_id IS NOT NULL),
-         keep AS (SELECT res FROM ur GROUP BY res HAVING count(*) <= $DegCap),
-         pr AS (SELECT a.user_id AS ua, b.user_id AS ub
-           FROM ur a JOIN ur b ON a.res = b.res AND a.user_id < b.user_id
-           WHERE a.res IN (SELECT res FROM keep)
-           GROUP BY 1, 2 HAVING count(*) >= 2),
-         e AS (SELECT ua AS a, ub AS b FROM pr UNION ALL SELECT ub, ua FROM pr),
-         reach(s, d) AS (
-           SELECT DISTINCT a AS s, a AS d FROM e
-           UNION
-           SELECT r.s, e.b FROM reach r JOIN e ON r.d = e.a),
-         comp AS (SELECT s AS uid, min(d) AS cid FROM reach GROUP BY s),
-         users AS (SELECT DISTINCT user_id FROM events),
-         c AS (SELECT u.user_id, COALESCE(comp.cid, u.user_id) AS component_id
-           FROM users u LEFT JOIN comp ON u.user_id = comp.uid),
+      s"""WITH RECURSIVE $coaccessCappedCtes,
+         $coaccessComponentCtes,
          nc AS (SELECT component_id, count(*) AS n_users FROM c GROUP BY 1),
          ec AS (SELECT comp.cid AS component_id, count(*) AS n_edges
            FROM pr JOIN comp ON pr.ua = comp.uid GROUP BY 1)
@@ -869,13 +973,12 @@ object SparkEntry {
     // integer div) then max-pull back to users; both hops on the
     // DISTINCT (user, resource) grid.
     "q_risk_propagation" ->
-      """WITH risk AS (SELECT user_id,
-           CAST(sum(CASE WHEN EXTRACT(hour FROM ts) < 8
-             OR EXTRACT(hour FROM ts) > 18 THEN 1 ELSE 0 END) AS BIGINT) AS r
+      s"""WITH risk AS (SELECT user_id,
+           CAST(sum(CASE WHEN $afterHoursSql THEN 1 ELSE 0 END) AS BIGINT) AS r
            FROM events GROUP BY 1),
          grid AS (SELECT DISTINCT user_id,
-             json_extract_string(props,'$.k') AS resource
-           FROM events WHERE json_extract_string(props,'$.k') IS NOT NULL),
+             json_extract_string(props,'$$.k') AS resource
+           FROM events WHERE json_extract_string(props,'$$.k') IS NOT NULL),
          rres AS (SELECT resource,
              CAST(sum(r) * 10000 // count(*) AS BIGINT) AS resource_risk_bp
            FROM grid JOIN risk USING (user_id) GROUP BY 1)
@@ -903,32 +1006,10 @@ object SparkEntry {
              THEN 1 ELSE 0 END::BIGINT AS converted_1h
          FROM su LEFT JOIN pu ON su.user_id = pu.user_id
          ORDER BY su.user_id""",
+    // session_window compares the EXACT event-time gap (micros), not
+    // second-floored timestamps: the boundary must match exactly
     "q_session_window" ->
-      """WITH s AS (
-           SELECT user_id, event_id, ts,
-             lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-           FROM events),
-         b AS (
-           -- session_window compares the EXACT event-time gap (micros),
-           -- not second-floored timestamps: boundary must match exactly
-           SELECT user_id, event_id, ts,
-             CASE WHEN prev_ts IS NULL
-                  OR epoch_us(ts) - epoch_us(prev_ts) >= 1800000000
-               THEN 1 ELSE 0 END AS new_sess
-           FROM s),
-         c AS (
-           SELECT user_id, ts,
-             sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS session_id
-           FROM b),
-         g AS (
-           SELECT user_id, session_id, count(*) AS n_events,
-             epoch_us(max(ts))//1000000 - epoch_us(min(ts))//1000000 AS duration_s
-           FROM c GROUP BY user_id, session_id)
-         SELECT user_id, count(*) AS n_sessions,
-           max(n_events) AS max_session_events,
-           CAST(max(duration_s) AS BIGINT) AS max_session_duration_s,
-           round(avg(n_events), 4) AS avg_session_events
-         FROM g GROUP BY user_id ORDER BY user_id""",
+      sessionSummarySql("epoch_us(ts) - epoch_us(prev_ts) >= 1800000000"),
     // Same term universe as q_tfidf/q_vocab (unnest of the shared
     // tokenizer, no extra filtering) so the spectrum reconciles with
     // every other termFreq consumer.
@@ -957,62 +1038,27 @@ object SparkEntry {
               ORDER BY tfidf DESC, term) AS BIGINT) AS rk FROM sc)
           SELECT doc_id, term, tfidf, rk FROM r WHERE rk <= 5
           ORDER BY doc_id, rk""",
-    "q_zscore_anomaly" -> {
-      val stats = mlFeatures.map(f =>
-        s"avg($f) AS mu_$f, stddev_pop($f) AS sd_$f").mkString(", ")
-      val zs = mlFeatures.map(f =>
-        s"CASE WHEN sd_$f IS NULL OR sd_$f = 0 THEN 0.0 ELSE ($f - mu_$f)/sd_$f END AS z_$f")
-        .mkString(", ")
+    "q_zscore_anomaly" ->
       s"""WITH uf AS ($userFeaturesSql),
-          st AS (SELECT count(*) AS cnt, $stats FROM uf),
-          z AS (SELECT user_id, cnt, $zs FROM uf CROSS JOIN st),
-          sc AS (SELECT user_id, cnt,
-            round(greatest(${mlFeatures.map(f => s"abs(z_$f)").mkString(", ")}), 4) AS anomaly_score,
-            round(sqrt(${mlFeatures.map(f => s"z_$f*z_$f").mkString(" + ")}), 4) AS z_l2
-          FROM z)
+          $zscoreCtes
           SELECT user_id, anomaly_score, z_l2,
-            CASE WHEN row_number() OVER (ORDER BY anomaly_score DESC, user_id)
-                 <= ceil(cnt * 0.1) THEN 1 ELSE 0 END::BIGINT AS is_anomaly
-          FROM sc ORDER BY user_id"""
-    },
+            $zscoreFlagSql::BIGINT AS is_anomaly
+          FROM sc ORDER BY user_id""",
     // Replays the z-score chain, the per-feature quantile chain, and the
-    // MAD chain (each verbatim from its own gated oracle), derives the
+    // MAD chain (the fragments of their own gated oracles), derives the
     // three 0/1 user flags, and reduces them to one sums row — overlap
     // in exact integer basis points, no float anywhere.
-    "q_anomaly_overlap" -> {
-      val stats = mlFeatures.map(f =>
-        s"avg($f) AS mu_$f, stddev_pop($f) AS sd_$f").mkString(", ")
-      val zs = mlFeatures.map(f =>
-        s"CASE WHEN sd_$f IS NULL OR sd_$f = 0 THEN 0.0 ELSE ($f - mu_$f)/sd_$f END AS z_$f")
-        .mkString(", ")
-      val qflags = mlFeatures.map(f =>
-        s"""CASE WHEN row_number() OVER (ORDER BY $f DESC, user_id)
-            <= ceil(count(*) OVER () * 0.1) THEN 1 ELSE 0 END AS flag_$f""")
-        .mkString(", ")
+    "q_anomaly_overlap" ->
       s"""WITH uf AS ($userFeaturesSql),
-          st AS (SELECT count(*) AS cnt, $stats FROM uf),
-          z AS (SELECT user_id, cnt, $zs FROM uf CROSS JOIN st),
-          sc AS (SELECT user_id, cnt,
-            round(greatest(${mlFeatures.map(f => s"abs(z_$f)").mkString(", ")}), 4) AS anomaly_score
-          FROM z),
-          zf AS (SELECT user_id,
-            CASE WHEN row_number() OVER (ORDER BY anomaly_score DESC, user_id)
-              <= ceil(cnt * 0.1) THEN 1 ELSE 0 END AS fz FROM sc),
-          fl AS (SELECT user_id, $qflags FROM uf),
+          $zscoreCtes,
+          zf AS (SELECT user_id, $zscoreFlagSql AS fz FROM sc),
+          $quantileFlagCte,
           qf AS (SELECT user_id,
-            CASE WHEN ${mlFeatures.map(f => s"flag_$f").mkString(" + ")} >= 2
+            CASE WHEN $quantileFlagSumSql >= 2
               THEN 1 ELSE 0 END AS fq FROM fl),
-          ev AS (SELECT user_id, event_type, value FROM events
-            WHERE value IS NOT NULL AND user_id IS NOT NULL
-              AND ts IS NOT NULL AND event_type IS NOT NULL),
-          med AS (SELECT event_type AS met, quantile_cont(value, 0.5) AS med
-            FROM ev GROUP BY 1),
-          dev AS (SELECT user_id, event_type, abs(value - med) AS adev
-            FROM ev JOIN med ON event_type = met),
-          mad AS (SELECT event_type AS aet, quantile_cont(adev, 0.5) AS mad
-            FROM dev GROUP BY 1),
+          $madCtes,
           mf AS (SELECT user_id,
-              max(CASE WHEN adev > 3.0 * 1.4826 * mad THEN 1 ELSE 0 END) AS fm
+              max(CASE WHEN $madOutlierSql THEN 1 ELSE 0 END) AS fm
             FROM dev JOIN mad ON event_type = aet GROUP BY user_id),
           j AS (SELECT COALESCE(fz, 0) AS fz, COALESCE(fq, 0) AS fq,
               COALESCE(fm, 0) AS fm
@@ -1029,32 +1075,17 @@ object SparkEntry {
             SELECT 'mad' AS det_a, 'quantile' AS det_b, nm AS n_a, nq AS n_b, bqm AS n_both FROM s
             UNION ALL SELECT 'mad', 'zscore', nm, nz, bzm FROM s
             UNION ALL SELECT 'quantile', 'zscore', nq, nz, bzq FROM s)
-          ORDER BY det_a, det_b"""
-    },
-    "q_quantile_outlier" -> {
-      val flags = mlFeatures.map(f =>
-        s"""CASE WHEN row_number() OVER (ORDER BY $f DESC, user_id)
-            <= ceil(count(*) OVER () * 0.1) THEN 1 ELSE 0 END AS flag_$f""")
-        .mkString(", ")
+          ORDER BY det_a, det_b""",
+    "q_quantile_outlier" ->
       s"""WITH uf AS ($userFeaturesSql),
-          fl AS (SELECT user_id, $flags FROM uf)
+          $quantileFlagCte
           SELECT user_id,
-            CAST(${mlFeatures.map(f => s"flag_$f").mkString(" + ")} AS BIGINT) AS n_outlier_features,
-            CASE WHEN ${mlFeatures.map(f => s"flag_$f").mkString(" + ")} >= 2
+            CAST($quantileFlagSumSql AS BIGINT) AS n_outlier_features,
+            CASE WHEN $quantileFlagSumSql >= 2
               THEN 1 ELSE 0 END::BIGINT AS is_outlier
-          FROM fl ORDER BY user_id"""
-    },
+          FROM fl ORDER BY user_id""",
     "q_roc_auc" ->
-      """WITH e AS (
-           SELECT vec_id,
-             CASE WHEN label = 0 THEN 1 ELSE 0 END AS truth,
-             round(sqrt(list_sum(list_transform(embedding, x -> (x::DOUBLE)*(x::DOUBLE)))), 4) AS l2,
-             round(list_max(list_transform(embedding, x -> abs(x::DOUBLE))), 4) AS mx
-           FROM embeddings),
-         s AS (
-           SELECT 'l2_norm' AS detector, truth, l2 AS score FROM e
-           UNION ALL
-           SELECT 'max_abs' AS detector, truth, mx AS score FROM e),
+      s"""WITH $detectorScoreCtes,
          r AS (
            SELECT detector, truth,
              rank() OVER (PARTITION BY detector ORDER BY score)
@@ -1070,27 +1101,8 @@ object SparkEntry {
            round((rpos - n_pos*(n_pos+1)/2.0) / (n_pos * n_neg), 4) AS auc
          FROM a ORDER BY detector""",
     "q_roc_points" ->
-      """WITH e AS (
-           SELECT vec_id,
-             CASE WHEN label = 0 THEN 1 ELSE 0 END AS truth,
-             round(sqrt(list_sum(list_transform(embedding, x -> (x::DOUBLE)*(x::DOUBLE)))), 4) AS l2,
-             round(list_max(list_transform(embedding, x -> abs(x::DOUBLE))), 4) AS mx
-           FROM embeddings),
-         s AS (
-           SELECT 'l2_norm' AS detector, truth, l2 AS score FROM e
-           UNION ALL
-           SELECT 'max_abs' AS detector, truth, mx AS score FROM e),
-         g AS (
-           SELECT detector, score,
-             CAST(count(*) AS BIGINT) AS n, CAST(sum(truth) AS BIGINT) AS np
-           FROM s GROUP BY detector, score),
-         c AS (
-           SELECT detector, score, n, np,
-             sum(n) OVER w AS cum_n, sum(np) OVER w AS cum_np
-           FROM g WINDOW w AS (PARTITION BY detector ORDER BY score DESC)),
-         t AS (
-           SELECT detector, sum(np) AS pos, sum(n) - sum(np) AS neg
-           FROM g GROUP BY detector)
+      s"""WITH $detectorScoreCtes,
+         $detectorCurveCtes
          SELECT c.detector,
            round(score, 4) AS threshold,
            CAST(cum_np AS BIGINT) AS tp,
@@ -1102,27 +1114,8 @@ object SparkEntry {
     // PR curve: identical CTE chain to q_roc_points, projected to
     // precision (tp / threshold-predicted-positives) and recall (≡ tpr).
     "q_pr_points" ->
-      """WITH e AS (
-           SELECT vec_id,
-             CASE WHEN label = 0 THEN 1 ELSE 0 END AS truth,
-             round(sqrt(list_sum(list_transform(embedding, x -> (x::DOUBLE)*(x::DOUBLE)))), 4) AS l2,
-             round(list_max(list_transform(embedding, x -> abs(x::DOUBLE))), 4) AS mx
-           FROM embeddings),
-         s AS (
-           SELECT 'l2_norm' AS detector, truth, l2 AS score FROM e
-           UNION ALL
-           SELECT 'max_abs' AS detector, truth, mx AS score FROM e),
-         g AS (
-           SELECT detector, score,
-             CAST(count(*) AS BIGINT) AS n, CAST(sum(truth) AS BIGINT) AS np
-           FROM s GROUP BY detector, score),
-         c AS (
-           SELECT detector, score, n, np,
-             sum(n) OVER w AS cum_n, sum(np) OVER w AS cum_np
-           FROM g WINDOW w AS (PARTITION BY detector ORDER BY score DESC)),
-         t AS (
-           SELECT detector, sum(np) AS pos, sum(n) - sum(np) AS neg
-           FROM g GROUP BY detector)
+      s"""WITH $detectorScoreCtes,
+         $detectorCurveCtes
          SELECT c.detector,
            round(score, 4) AS threshold,
            CAST(cum_np AS BIGINT) AS tp,
@@ -1134,25 +1127,8 @@ object SparkEntry {
     // Average precision: AP = sum over descending-threshold tie groups of
     // (np/pos) * (cum_np/cum_n) — sklearn's step interpolation.
     "q_pr_auc" ->
-      """WITH e AS (
-           SELECT vec_id,
-             CASE WHEN label = 0 THEN 1 ELSE 0 END AS truth,
-             round(sqrt(list_sum(list_transform(embedding, x -> (x::DOUBLE)*(x::DOUBLE)))), 4) AS l2,
-             round(list_max(list_transform(embedding, x -> abs(x::DOUBLE))), 4) AS mx
-           FROM embeddings),
-         s AS (
-           SELECT 'l2_norm' AS detector, truth, l2 AS score FROM e
-           UNION ALL
-           SELECT 'max_abs' AS detector, truth, mx AS score FROM e),
-         g AS (
-           SELECT detector, score,
-             CAST(count(*) AS BIGINT) AS n, CAST(sum(truth) AS BIGINT) AS np
-           FROM s GROUP BY detector, score),
-         c AS (
-           SELECT detector, score, n, np,
-             sum(n) OVER w AS cum_n, sum(np) OVER w AS cum_np
-           FROM g WINDOW w AS (PARTITION BY detector ORDER BY score DESC)),
-         t AS (SELECT detector, sum(np) AS pos FROM g GROUP BY detector)
+      s"""WITH $detectorScoreCtes,
+         $detectorCurveCtes
          SELECT c.detector,
            round(sum(np * 1.0 / pos * (cum_np * 1.0 / cum_n)), 4) AS avg_precision
          FROM c JOIN t ON c.detector = t.detector
@@ -1240,29 +1216,7 @@ object SparkEntry {
            WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey))
          WHERE order_rank <= 3 ORDER BY o_custkey, order_rank""",
     "q_sessionize" ->
-      """WITH s AS (
-           SELECT user_id, event_id, ts,
-             lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-           FROM events),
-         b AS (
-           SELECT user_id, event_id, ts,
-             CASE WHEN prev_ts IS NULL
-                  OR epoch_us(ts)//1000000 - epoch_us(prev_ts)//1000000 > 1800
-               THEN 1 ELSE 0 END AS new_sess
-           FROM s),
-         c AS (
-           SELECT user_id, ts,
-             sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS session_id
-           FROM b),
-         g AS (
-           SELECT user_id, session_id, count(*) AS n_events,
-             epoch_us(max(ts))//1000000 - epoch_us(min(ts))//1000000 AS duration_s
-           FROM c GROUP BY user_id, session_id)
-         SELECT user_id, count(*) AS n_sessions,
-           max(n_events) AS max_session_events,
-           CAST(max(duration_s) AS BIGINT) AS max_session_duration_s,
-           round(avg(n_events), 4) AS avg_session_events
-         FROM g GROUP BY user_id ORDER BY user_id""",
+      sessionSummarySql("epoch_us(ts)//1000000 - epoch_us(prev_ts)//1000000 > 1800"),
     "q_windowed_counts" ->
       """SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start, event_type,
          count(*) AS n,
@@ -1484,16 +1438,11 @@ object SparkEntry {
          FROM e WHERE dt_us IS NOT NULL
          GROUP BY event_type, d ORDER BY event_type, day""",
     "q_coaccess_jaccard" ->
-      """WITH ur AS (SELECT DISTINCT user_id, json_extract_string(props,'$.k') AS res
-           FROM events WHERE json_extract_string(props,'$.k') IS NOT NULL
-             AND user_id IS NOT NULL),
-         cnt AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n FROM ur GROUP BY 1),
-         p AS (SELECT a.user_id AS ua, b.user_id AS ub, CAST(count(*) AS BIGINT) AS sh
-               FROM ur a JOIN ur b ON a.res = b.res AND a.user_id < b.user_id
-               GROUP BY 1, 2 HAVING count(*) >= 2)
-         SELECT ua AS user_a, ub AS user_b, sh AS shared_resources,
-           round(sh::DOUBLE / (ca.n + cb.n - sh)::DOUBLE, 4) AS jaccard
-         FROM p JOIN cnt ca ON ua = ca.user_id JOIN cnt cb ON ub = cb.user_id
+      s"""WITH ${coaccessCtes(capped = false)},
+         cnt AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n FROM ur GROUP BY 1)
+         SELECT ua AS user_a, ub AS user_b, c AS shared_resources,
+           round(c::DOUBLE / (ca.n + cb.n - c)::DOUBLE, 4) AS jaccard
+         FROM pr JOIN cnt ca ON ua = ca.user_id JOIN cnt cb ON ub = cb.user_id
          ORDER BY jaccard DESC, user_a, user_b LIMIT 50""",
     "q_burstiness" ->
       """WITH daily AS (
@@ -1599,17 +1548,11 @@ object SparkEntry {
            END AS acf
          FROM stats ORDER BY event_type, lag""",
     "q_mad_outlier" ->
-      """WITH ev AS (SELECT event_type, value FROM events WHERE value IS NOT NULL),
-         med AS (SELECT event_type AS met, quantile_cont(value, 0.5) AS med
-                 FROM ev GROUP BY 1),
-         dev AS (SELECT event_type, abs(value - med) AS adev, med
-                 FROM ev JOIN med ON event_type = met),
-         mad AS (SELECT event_type AS aet, quantile_cont(adev, 0.5) AS mad
-                 FROM dev GROUP BY 1)
+      s"""WITH $madCtes
          SELECT event_type, round(any_value(med), 4) AS median_value,
            round(any_value(mad), 4) AS mad,
            CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(CASE WHEN adev > 3.0 * 1.4826 * mad THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
+           CAST(sum(CASE WHEN $madOutlierSql THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
          FROM dev JOIN mad ON event_type = aet
          GROUP BY event_type ORDER BY event_type""",
     "q_attribution" ->
@@ -2077,56 +2020,17 @@ object SparkEntry {
     // oracle applies the identical degree filter so the entry stays
     // hash-checked with the production cap active.
     "q_knn_triangles" ->
-      s"""WITH ur AS (SELECT DISTINCT user_id, json_extract_string(props,'$$.k') AS res
-           FROM events
-           WHERE json_extract_string(props,'$$.k') IS NOT NULL AND user_id IS NOT NULL),
-         keep AS (SELECT res FROM ur GROUP BY res HAVING count(*) <= $DegCap),
-         pc AS (SELECT a.user_id AS ua, b.user_id AS ub, count(*) AS c
-           FROM ur a JOIN ur b ON a.res = b.res AND a.user_id < b.user_id
-           WHERE a.res IN (SELECT res FROM keep)
-           GROUP BY 1, 2 HAVING count(*) >= 2),
-         dirp AS (SELECT ua AS u, ub AS v, c FROM pc
-           UNION ALL SELECT ub, ua, c FROM pc),
-         knn AS (SELECT u, v FROM (
-             SELECT u, v, row_number() OVER (PARTITION BY u ORDER BY c DESC, v) AS rk
-             FROM dirp) WHERE rk <= 3),
-         und AS (SELECT DISTINCT least(u, v) AS a, greatest(u, v) AS b FROM knn),
-         tri AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z FROM und e1
-           JOIN und e2 ON e1.b = e2.a
-           JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b)
-         SELECT user_id, count(*) AS n_triangles FROM (
-           SELECT x AS user_id FROM tri
-           UNION ALL SELECT y FROM tri
-           UNION ALL SELECT z FROM tri)
-         GROUP BY 1 ORDER BY n_triangles DESC, user_id""",
-    // Repeats the ur/keep/pc/dirp/knn/und chain of q_knn_triangles
-    // (a copy); lcc is pure integer arithmetic (2·T·10000 // deg(deg−1))
-    // so the hash has no float to drift on.
+      s"""WITH $coaccessCappedCtes,
+         $knnTriangleCtes
+         SELECT user_id, n_triangles FROM tc
+         ORDER BY n_triangles DESC, user_id""",
+    // lcc is pure integer arithmetic (2·T·10000 // deg(deg−1)) so the
+    // hash has no float to drift on.
     "q_clustering_coeff" ->
-      s"""WITH ur AS (SELECT DISTINCT user_id, json_extract_string(props,'$$.k') AS res
-           FROM events
-           WHERE json_extract_string(props,'$$.k') IS NOT NULL AND user_id IS NOT NULL),
-         keep AS (SELECT res FROM ur GROUP BY res HAVING count(*) <= $DegCap),
-         pc AS (SELECT a.user_id AS ua, b.user_id AS ub, count(*) AS c
-           FROM ur a JOIN ur b ON a.res = b.res AND a.user_id < b.user_id
-           WHERE a.res IN (SELECT res FROM keep)
-           GROUP BY 1, 2 HAVING count(*) >= 2),
-         dirp AS (SELECT ua AS u, ub AS v, c FROM pc
-           UNION ALL SELECT ub, ua, c FROM pc),
-         knn AS (SELECT u, v FROM (
-             SELECT u, v, row_number() OVER (PARTITION BY u ORDER BY c DESC, v) AS rk
-             FROM dirp) WHERE rk <= 3),
-         und AS (SELECT DISTINCT least(u, v) AS a, greatest(u, v) AS b FROM knn),
+      s"""WITH $coaccessCappedCtes,
+         $knnTriangleCtes,
          dire AS (SELECT a, b FROM und UNION ALL SELECT b, a FROM und),
-         deg AS (SELECT a AS user_id, count(*) AS degree FROM dire GROUP BY 1),
-         tri AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z FROM und e1
-           JOIN und e2 ON e1.b = e2.a
-           JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b),
-         tc AS (SELECT user_id, count(*) AS n_triangles FROM (
-             SELECT x AS user_id FROM tri
-             UNION ALL SELECT y FROM tri
-             UNION ALL SELECT z FROM tri)
-           GROUP BY 1)
+         deg AS (SELECT a AS user_id, count(*) AS degree FROM dire GROUP BY 1)
          SELECT d.user_id, d.degree,
            CAST(COALESCE(tc.n_triangles, 0) AS BIGINT) AS n_triangles,
            CAST(CASE WHEN d.degree >= 2
@@ -2600,16 +2504,7 @@ object SparkEntry {
            JOIN ln lb ON lb.doc_id = doc_b
          ORDER BY l1_bp, doc_a, doc_b""",
     "q_calibration" ->
-      """WITH e AS (
-           SELECT vec_id,
-             CASE WHEN label = 0 THEN 1 ELSE 0 END AS truth,
-             round(sqrt(list_sum(list_transform(embedding, x -> (x::DOUBLE)*(x::DOUBLE)))), 4) AS l2,
-             round(list_max(list_transform(embedding, x -> abs(x::DOUBLE))), 4) AS mx
-           FROM embeddings),
-         s AS (
-           SELECT 'l2_norm' AS detector, truth, l2 AS score FROM e
-           UNION ALL
-           SELECT 'max_abs' AS detector, truth, mx AS score FROM e),
+      s"""WITH $detectorScoreCtes,
          mm AS (SELECT detector, min(score) AS mn, max(score) AS mxs
            FROM s GROUP BY detector),
          p AS (SELECT s.detector AS detector, truth,
@@ -2689,45 +2584,12 @@ object SparkEntry {
             round(sqrt(n_tokens::DOUBLE / max_tokens), 4) AS temp_ratio
           FROM s CROSS JOIN t ORDER BY source""",
     "q_pack_docs" ->
-      s"""WITH RECURSIVE toks AS (
-            SELECT doc_id, CAST(len($tokSql) AS BIGINT) AS toks,
-              doc_id // ${TextOps.PackBlock} AS block,
-              row_number() OVER (PARTITION BY doc_id // ${TextOps.PackBlock}
-                ORDER BY doc_id) AS rn
-            FROM documents),
-          pack AS (
-            SELECT block, rn, doc_id, toks, CAST(0 AS BIGINT) AS seq,
-              toks AS fill
-            FROM toks WHERE rn = 1
-            UNION ALL
-            SELECT t.block, t.rn, t.doc_id, t.toks,
-              CASE WHEN p.fill > 0 AND p.fill + t.toks > ${TextOps.PackBudget}
-                   THEN p.seq + 1 ELSE p.seq END,
-              CASE WHEN p.fill > 0 AND p.fill + t.toks > ${TextOps.PackBudget}
-                   THEN t.toks ELSE p.fill + t.toks END
-            FROM pack p JOIN toks t ON t.block = p.block AND t.rn = p.rn + 1)
+      s"""WITH RECURSIVE $packCtes
           SELECT doc_id, toks, block, seq AS seq_in_block
           FROM pack ORDER BY doc_id""",
-    // Repeats q_pack_docs' recursive pack CTE (a copy); the profile is
-    // two integer rollups on top.
+    // The packing profile: two integer rollups over q_pack_docs' `pack`.
     "q_pack_efficiency" ->
-      s"""WITH RECURSIVE toks AS (
-            SELECT doc_id, CAST(len($tokSql) AS BIGINT) AS toks,
-              doc_id // ${TextOps.PackBlock} AS block,
-              row_number() OVER (PARTITION BY doc_id // ${TextOps.PackBlock}
-                ORDER BY doc_id) AS rn
-            FROM documents),
-          pack AS (
-            SELECT block, rn, doc_id, toks, CAST(0 AS BIGINT) AS seq,
-              toks AS fill
-            FROM toks WHERE rn = 1
-            UNION ALL
-            SELECT t.block, t.rn, t.doc_id, t.toks,
-              CASE WHEN p.fill > 0 AND p.fill + t.toks > ${TextOps.PackBudget}
-                   THEN p.seq + 1 ELSE p.seq END,
-              CASE WHEN p.fill > 0 AND p.fill + t.toks > ${TextOps.PackBudget}
-                   THEN t.toks ELSE p.fill + t.toks END
-            FROM pack p JOIN toks t ON t.block = p.block AND t.rn = p.rn + 1),
+      s"""WITH RECURSIVE $packCtes,
           bins AS (SELECT block, seq, CAST(count(*) AS BIGINT) AS docs,
               CAST(sum(toks) AS BIGINT) AS fill
             FROM pack GROUP BY 1, 2)
@@ -2859,9 +2721,8 @@ object SparkEntry {
            round(2.0 * srx / (nu * sx) - (nu + 1.0) / nu, 4) AS gini
          FROM g ORDER BY event_type""",
     "q_chi2" ->
-      """WITH cell AS (SELECT event_type, count(*) AS n_total,
-             CAST(sum(CASE WHEN EXTRACT(hour FROM ts) < 8
-                        OR EXTRACT(hour FROM ts) > 18
+      s"""WITH cell AS (SELECT event_type, count(*) AS n_total,
+             CAST(sum(CASE WHEN $afterHoursSql
                       THEN 1 ELSE 0 END) AS BIGINT) AS n_after
            FROM events GROUP BY event_type),
          tot AS (SELECT sum(n_total)::DOUBLE AS t, sum(n_after)::DOUBLE AS a
@@ -2873,8 +2734,8 @@ object SparkEntry {
                     + 1.0 / (n_total * (t - a) / t)), 4) AS chi2_term
          FROM cell CROSS JOIN tot ORDER BY event_type""",
     "q_ks_test" ->
-      """WITH daily AS (SELECT user_id, CAST(ts AS DATE) AS d,
-             CASE WHEN isodow(ts)-1 >= 5 THEN 1 ELSE 0 END AS wk,
+      s"""WITH daily AS (SELECT user_id, CAST(ts AS DATE) AS d,
+             CASE WHEN $weekendSql THEN 1 ELSE 0 END AS wk,
              count(*) AS n
            FROM events GROUP BY 1, 2, 3),
          sup AS (SELECT n,
@@ -2898,16 +2759,16 @@ object SparkEntry {
              AS drift_flag
          FROM ecdf GROUP BY n_wd, n_we""",
     "q_welch_ttest" ->
-      """WITH g AS (SELECT
+      s"""WITH g AS (SELECT
              CAST(sum(CASE WHEN isodow(ts)-1 < 5 THEN 1 ELSE 0 END) AS BIGINT) AS n0,
              sum(CASE WHEN isodow(ts)-1 < 5
                THEN CAST(value AS DECIMAL(18,2)) END) AS s0,
              sum(CASE WHEN isodow(ts)-1 < 5
                THEN CAST(value AS DECIMAL(18,2)) * CAST(value AS DECIMAL(18,2)) END) AS ss0,
-             CAST(sum(CASE WHEN isodow(ts)-1 >= 5 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-             sum(CASE WHEN isodow(ts)-1 >= 5
+             CAST(sum(CASE WHEN $weekendSql THEN 1 ELSE 0 END) AS BIGINT) AS n1,
+             sum(CASE WHEN $weekendSql
                THEN CAST(value AS DECIMAL(18,2)) END) AS s1,
-             sum(CASE WHEN isodow(ts)-1 >= 5
+             sum(CASE WHEN $weekendSql
                THEN CAST(value AS DECIMAL(18,2)) * CAST(value AS DECIMAL(18,2)) END) AS ss1
            FROM events WHERE value IS NOT NULL),
          m AS (SELECT n0, n1,
@@ -2967,8 +2828,8 @@ object SparkEntry {
          FROM pr GROUP BY pair ORDER BY freq DESC, pair LIMIT 50""",
     "q_ref_integrity" -> refIntegritySql,
     "q_mutual_info" ->
-      """WITH cells AS (SELECT event_type,
-             CASE WHEN EXTRACT(hour FROM ts) < 8 OR EXTRACT(hour FROM ts) > 18
+      s"""WITH cells AS (SELECT event_type,
+             CASE WHEN $afterHoursSql
                THEN 1 ELSE 0 END AS ah,
              count(*) AS n_tc
            FROM events GROUP BY 1, 2),
@@ -3056,14 +2917,7 @@ object SparkEntry {
     // the DuckDB side mirrors the Spark side's DECIMAL(38,0)); the final
     // ratio is one double expression of identical shape on both engines.
     "q_assortativity" ->
-      s"""WITH ur AS (SELECT DISTINCT user_id, json_extract_string(props,'$$.k') AS res
-           FROM events WHERE json_extract_string(props,'$$.k') IS NOT NULL
-             AND user_id IS NOT NULL),
-         keep AS (SELECT res FROM ur GROUP BY res HAVING count(*) <= $DegCap),
-         pr AS (SELECT a.user_id AS ua, b.user_id AS ub
-           FROM ur a JOIN ur b ON a.res = b.res AND a.user_id < b.user_id
-           WHERE a.res IN (SELECT res FROM keep)
-           GROUP BY 1, 2 HAVING count(*) >= 2),
+      s"""WITH $coaccessCappedCtes,
          e AS (SELECT ua AS src, ub AS dst FROM pr
            UNION ALL SELECT ub, ua FROM pr),
          d AS (SELECT src AS u, count(*)::HUGEINT AS deg FROM e GROUP BY 1),
@@ -3420,10 +3274,9 @@ object SparkEntry {
     "count(*) AS n_events",
     "count(DISTINCT event_type) AS n_types",
     "count(DISTINCT CAST(ts AS DATE)) AS n_days",
-    """CAST(sum(CASE WHEN EXTRACT(hour FROM ts) < 8
-        OR EXTRACT(hour FROM ts) > 18 THEN 1 ELSE 0 END) AS BIGINT)
+    s"""CAST(sum(CASE WHEN $afterHoursSql THEN 1 ELSE 0 END) AS BIGINT)
         AS n_after_hours""",
-    """CAST(sum(CASE WHEN isodow(ts)-1 >= 5 THEN 1 ELSE 0 END) AS BIGINT)
+    s"""CAST(sum(CASE WHEN $weekendSql THEN 1 ELSE 0 END) AS BIGINT)
         AS n_weekend""").mkString(",\n           ")
 
   private def corrMatrixSql: String = {

@@ -4,7 +4,7 @@ import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -118,6 +118,13 @@ object Tables {
   def cleanEvents(s: SparkSession, d: String): DataFrame =
     events(s, d).filter(
       col("user_id").isNotNull && col("ts").isNotNull && col("event_type").isNotNull)
+
+  /** The reference's temporal rules (data_preprocessing.py:14-28) for the
+    * batch, stream and source paths: after-hours is an hour of day below 8
+    * or above 18, weekend a weekday (Monday = 0) of 5 or more. SparkEntry's
+    * `afterHoursSql` / `weekendSql` are the oracle twins. */
+  def afterHours(hourOfDay: Column): Column = hourOfDay < 8 || hourOfDay > 18
+  def weekend(dayOfWeek: Column): Column = dayOfWeek >= 5
 
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")

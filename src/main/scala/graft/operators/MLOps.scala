@@ -2,11 +2,16 @@ package graft.operators
 
 import graft.Tables._
 import graft.functions.TextFunctions._
-import org.apache.spark.ml.classification.RandomForestClassifier
+import org.apache.spark.ml.Estimator
+import org.apache.spark.ml.classification.{GBTClassifier, LinearSVC, RandomForestClassifier}
+import org.apache.spark.ml.evaluation.{BinaryClassificationEvaluator, Evaluator,
+  MulticlassClassificationEvaluator}
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.feature.{PCA, StandardScaler, VectorAssembler}
 import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
 import org.apache.spark.ml.linalg.{Vector, Vectors}
+import org.apache.spark.ml.param.ParamMap
+import org.apache.spark.ml.tuning.{CrossValidator, ParamGridBuilder}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -553,115 +558,96 @@ object MLOps {
       .orderBy("user_id")
   }
 
+  /** Held-out predictions of one supervised track: the labeled
+    * embeddings as (vec_id, label, fv) with `label` as the target, a
+    * CrossValidator (3-fold, seed 42) over `grid` scored by `evaluator`
+    * and fit on the rest, and the winner applied to the deterministic
+    * hash split vec_id % 5 == 0, never seen by CV. The CV folds and every
+    * candidate fit run as cluster jobs; only the winning params live on
+    * the driver. The estimator reads features `fv` and label `label`.
+    */
+  private def crossValidated(spark: SparkSession, dir: String, label: Column,
+      estimator: Estimator[_], grid: Array[ParamMap],
+      evaluator: Evaluator): DataFrame = {
+    val e = embeddings(spark, dir).select(
+      col("vec_id"), label.as("label"),
+      array_to_vector(toDouble(col("embedding"))).as("fv"))
+    new CrossValidator().setEstimator(estimator).setEvaluator(evaluator)
+      .setEstimatorParamMaps(grid).setNumFolds(3).setSeed(42)
+      .fit(e.filter(col("vec_id") % 5 =!= 0))
+      .transform(e.filter(col("vec_id") % 5 === 0))
+  }
+  /** Label 1.0 for the anomalous class (label 0), else 0.0. */
+  private val isAnomalyLabel = when(col("label") === 0, 1.0).otherwise(0.0)
+  /** vec_id, label and prediction as longs, the first columns of every
+    * supervised track's output. */
+  private val predictionCols = Seq(col("vec_id"),
+    col("label").cast("long").as("label"),
+    col("prediction").cast("long").as("prediction"))
+
   /** Gradient-boosted trees on the binary anomaly target (label 0 vs
     * rest) — the MLlib stand-in for the reference's XGBoost track
     * (Comparaison_ML.py:551-707; XGBoost itself isn't on the cluster
     * classpath, and GBT is the same boosted-ensemble family). The
     * reference grid-searches XGBoost like its other supervised tracks,
-    * so this one gets the same CrossValidator treatment as SVC/RF:
-    * 3-fold, seed 42, areaUnderROC-scored, maxDepth grid (boosting
-    * depth is the capacity knob that actually moves GBT). The CV folds
-    * and every candidate fit run as cluster jobs; only the winning
-    * params live on the driver. Deterministic hash split: vec_id % 5
-    * == 0 is the held-out test fold, never seen by CV.
+    * so this one gets the same [[crossValidated]] treatment as SVC/RF,
+    * areaUnderROC-scored over a maxDepth grid (boosting depth is the
+    * capacity knob that actually moves GBT).
     */
   def qSupervisedGbt(spark: SparkSession, dir: String): DataFrame =
     graft.Memo("gbt", spark, dir) {
-    import org.apache.spark.ml.classification.GBTClassifier
-    import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
-    import org.apache.spark.ml.tuning.{CrossValidator, ParamGridBuilder}
-    val e = embeddings(spark, dir).select(
-      col("vec_id"),
-      when(col("label") === 0, 1.0).otherwise(0.0).as("label"),
-      array_to_vector(toDouble(col("embedding"))).as("fv"))
-    val train = e.filter(col("vec_id") % 5 =!= 0)
-    val test = e.filter(col("vec_id") % 5 === 0)
     val gbt = new GBTClassifier()
       .setMaxIter(20).setSeed(42)
       .setFeaturesCol("fv").setLabelCol("label")
     val grid = new ParamGridBuilder()
       .addGrid(gbt.maxDepth, Array(3, 4)).build()
-    val cv = new CrossValidator().setEstimator(gbt)
-      .setEvaluator(new BinaryClassificationEvaluator().setLabelCol("label"))
-      .setEstimatorParamMaps(grid).setNumFolds(3).setSeed(42)
-    cv.fit(train).transform(test)
-      .select(col("vec_id"),
-        col("label").cast("long").as("label"),
-        col("prediction").cast("long").as("prediction"),
-        r4(element_at(vector_to_array(col("probability")), 2)).as("prob_anomaly"))
+    crossValidated(spark, dir, isAnomalyLabel, gbt, grid,
+        new BinaryClassificationEvaluator().setLabelCol("label"))
+      .select(predictionCols :+
+        r4(element_at(vector_to_array(col("probability")), 2)).as("prob_anomaly"): _*)
       .orderBy(col("vec_id"))
   }
 
   /** Linear SVM with cross-validated grid search — the reference's SVC +
     * GridSearchCV track (Comparaison_ML.py:551-707) re-expressed as
-    * MLlib LinearSVC + CrossValidator (3-fold, regParam grid). The CV
-    * folds and fits all run as cluster jobs; only the winning params
-    * live on the driver.
+    * MLlib LinearSVC + [[crossValidated]] over a regParam grid.
     */
   def qSupervisedSvc(spark: SparkSession, dir: String): DataFrame =
     graft.Memo("svc", spark, dir) {
-    import org.apache.spark.ml.classification.LinearSVC
-    import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
-    import org.apache.spark.ml.tuning.{CrossValidator, ParamGridBuilder}
-    val e = embeddings(spark, dir).select(
-      col("vec_id"),
-      when(col("label") === 0, 1.0).otherwise(0.0).as("label"),
-      array_to_vector(toDouble(col("embedding"))).as("fv"))
-    val train = e.filter(col("vec_id") % 5 =!= 0)
-    val test = e.filter(col("vec_id") % 5 === 0)
     val svc = new LinearSVC().setMaxIter(20)
       .setFeaturesCol("fv").setLabelCol("label")
     val grid = new ParamGridBuilder()
       .addGrid(svc.regParam, Array(0.01, 0.1)).build()
-    val cv = new CrossValidator().setEstimator(svc)
-      .setEvaluator(new BinaryClassificationEvaluator().setLabelCol("label"))
-      .setEstimatorParamMaps(grid).setNumFolds(3).setSeed(42)
-    cv.fit(train).transform(test)
-      .select(col("vec_id"),
-        col("label").cast("long").as("label"),
-        col("prediction").cast("long").as("prediction"),
-        r4(element_at(vector_to_array(col("rawPrediction")), 2)).as("margin"))
+    crossValidated(spark, dir, isAnomalyLabel, svc, grid,
+        new BinaryClassificationEvaluator().setLabelCol("label"))
+      .select(predictionCols :+
+        r4(element_at(vector_to_array(col("rawPrediction")), 2)).as("margin"): _*)
       .orderBy(col("vec_id"))
   }
 
   /** RandomForest with cross-validated grid search over the labeled
     * embeddings — the reference grid-searches its RF track too
     * (Comparaison_ML.py:551+ GridSearchCV), so this one gets the same
-    * treatment as the SVC track: CrossValidator(3-fold, seed 42) over
-    * numTrees × maxDepth, F1-scored (the labels are multiclass). The
-    * CV folds and every candidate fit run as cluster jobs; only the
-    * winning params live on the driver. Deterministic hash split:
-    * vec_id % 5 == 0 is the 20% held-out test fold, never seen by CV.
-    * `prob_anomaly` (P of class 0, the anomalous class) feeds the
-    * consolidated model report's AUC head-to-head.
+    * [[crossValidated]] treatment as the SVC track over numTrees ×
+    * maxDepth, F1-scored (the labels are multiclass). `prob_anomaly`
+    * (P of class 0, the anomalous class) feeds the consolidated model
+    * report's AUC head-to-head.
     */
   def qSupervisedRf(spark: SparkSession, dir: String): DataFrame =
     graft.Memo("rf", spark, dir) {
-    import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
-    import org.apache.spark.ml.tuning.{CrossValidator, ParamGridBuilder}
-    val e = embeddings(spark, dir).select(
-      col("vec_id"),
-      col("label").cast("double").as("label"),
-      array_to_vector(toDouble(col("embedding"))).as("fv"))
-    val train = e.filter(col("vec_id") % 5 =!= 0)
-    val test = e.filter(col("vec_id") % 5 === 0)
     val rf = new RandomForestClassifier().setSeed(42)
       .setFeaturesCol("fv").setLabelCol("label")
     val grid = new ParamGridBuilder()
       .addGrid(rf.numTrees, Array(20, 50))
       .addGrid(rf.maxDepth, Array(4, 6))
       .build()
-    val cv = new CrossValidator().setEstimator(rf)
-      .setEvaluator(new MulticlassClassificationEvaluator()
-        .setLabelCol("label").setMetricName("f1"))
-      .setEstimatorParamMaps(grid).setNumFolds(3).setSeed(42)
-    cv.fit(train).transform(test)
-      .select(col("vec_id"),
-        col("label").cast("long").as("label"),
-        col("prediction").cast("long").as("prediction"),
+    crossValidated(spark, dir, col("label").cast("double"), rf, grid,
+        new MulticlassClassificationEvaluator()
+          .setLabelCol("label").setMetricName("f1"))
+      .select(predictionCols ++ Seq(
         r4(element_at(vector_to_array(col("probability")),
           col("prediction").cast("int") + 1)).as("prob"),
-        r4(element_at(vector_to_array(col("probability")), 1)).as("prob_anomaly"))
+        r4(element_at(vector_to_array(col("probability")), 1)).as("prob_anomaly")): _*)
       .orderBy("vec_id")
   }
 

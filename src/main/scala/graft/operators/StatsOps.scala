@@ -21,10 +21,7 @@ import org.apache.spark.sql.functions._
   */
 object StatsOps {
 
-  /** Monday=0 .. Sunday=6, weekend = Sat/Sun (matches ThreatOps). */
-  private val isWeekend: Column = when(expr("weekday(ts)") >= 5, 1L).otherwise(0L)
-  private val isAfterHours: Column =
-    when(hour(col("ts")) < 8 || hour(col("ts")) > 18, 1L).otherwise(0L)
+  import ThreatOps.{isAfterHours, isWeekend}
 
   /** Two-sample Kolmogorov–Smirnov test: does the distribution of
     * per-user DAILY activity volume differ between weekdays and

@@ -41,9 +41,9 @@ object ThreatOps {
   private val hourOfDay: Column = hour(col("ts"))
   // Monday=0 .. Sunday=6 (matches pandas dt.dayofweek used by the ref).
   private val dayOfWeek: Column = expr("weekday(ts)")
-  private val isAfterHours: Column =
-    when(hourOfDay < 8 || hourOfDay > 18, 1L).otherwise(0L)
-  private val isWeekend: Column = when(dayOfWeek >= 5, 1L).otherwise(0L)
+  private[operators] val isAfterHours: Column =
+    when(afterHours(hourOfDay), 1L).otherwise(0L)
+  private[operators] val isWeekend: Column = when(weekend(dayOfWeek), 1L).otherwise(0L)
 
   /** Temporal-feature derivation (ref: data_preprocessing.py:14-28):
     * timestamp → hour_of_day / day_of_week / is_weekend / is_after_hours,
@@ -68,7 +68,7 @@ object ThreatOps {
     */
   def qAfterHoursTop(spark: SparkSession, dir: String): DataFrame =
     events(spark, dir)
-      .filter(hourOfDay < 8 || hourOfDay > 18)
+      .filter(afterHours(hourOfDay))
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("after_hours_count"))
       .orderBy(col("after_hours_count").desc, col("user_id").asc)
@@ -402,9 +402,38 @@ object ThreatOps {
     * practice). The oracle-checked entry runs uncapped.
     */
   def coaccessPairs(spark: SparkSession, dir: String, maxDegree: Int): DataFrame =
-    coaccessPairFrame(spark, dir, maxDegree)
-      .orderBy(col("shared_resources").desc, col("user_a"), col("user_b"))
+    topPairs(coaccessPairFrame(spark, dir, maxDegree))
+
+  /** The 100 strongest pairs, ties by (user_a, user_b). */
+  private def topPairs(pairs: DataFrame): DataFrame =
+    pairs.orderBy(col("shared_resources").desc, col("user_a"), col("user_b"))
       .limit(100)
+
+  /** The (resource, user_id) edges of the co-access projection and each
+    * resource's degree, its count of distinct users. The user is never
+    * NULL: [[activityLog]] reads [[graft.Tables.cleanEvents]].
+    */
+  private def resourceEdges(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val edges = activityLog(spark, dir).filter(col("resource").isNotNull)
+    val deg = edges.select(col("resource"), col("user_id")).distinct()
+      .groupBy(col("resource")).agg(count(lit(1)).as("deg"))
+    (edges, deg)
+  }
+
+  /** [[resourceEdges]] on the resources of degree ≤ `maxDegree` only.
+    * The degree filter runs BEFORE any per-resource collect_set, or the
+    * hot key still materializes its full degree-sized array in one
+    * aggregation buffer — the exact blowup the cap exists to prevent.
+    * One extra (cheap, two-column) counting aggregation buys that.
+    * Uncapped, the edges pass through: the caller's collect_set dedupes
+    * (user, resource) while grouping, so no distinct() pre-pass.
+    */
+  private def cappedEdges(spark: SparkSession, dir: String, maxDegree: Int): DataFrame = {
+    val (edges, deg) = resourceEdges(spark, dir)
+    if (maxDegree == Int.MaxValue) edges
+    else edges.join(deg.filter(col("deg") <= maxDegree).select(col("resource")),
+      Seq("resource"), "left_semi")
+  }
 
   /** The full (unordered, unlimited) co-access pair frame — the edge list
     * of the user-user projected graph. Shared by [[coaccessPairs]] (top-k
@@ -431,10 +460,7 @@ object ThreatOps {
     */
   private[graft] def coaccessGeneratorVolume(
       spark: SparkSession, dir: String, maxDegree: Int): Long = {
-    val deg = activityLog(spark, dir)
-      .filter(col("resource").isNotNull && col("user_id").isNotNull)
-      .select(col("resource"), col("user_id")).distinct()
-      .groupBy(col("resource")).agg(count(lit(1)).as("deg"))
+    val deg = resourceEdges(spark, dir)._2
       .filter(col("deg") >= 2 && col("deg") <= maxDegree)
     deg.select(sum(col("deg") * (col("deg") - 1) / 2).cast("long").as("v"))
       .collect().headOption.map(r => if (r.isNullAt(0)) 0L else r.getLong(0))
@@ -445,33 +471,14 @@ object ThreatOps {
       spark: SparkSession, dir: String, maxDegree: Int): DataFrame = {
     val s = spark
     import s.implicits._
-    // NULL user_id rows carry no pair signal (collect_set would drop them
-    // anyway) — filter them explicitly so the packable-range guard below
-    // never sees a NULL (when(NULL) falls through to the raise_error
-    // branch, turning an expected-dirty row into a query failure).
-    val edges = activityLog(spark, dir)
-      .filter(col("resource").isNotNull && col("user_id").isNotNull)
-    // Capped path: the degree filter must run BEFORE collect_set, or the
-    // hot key still materializes its full degree-sized array in one
-    // aggregation buffer — the exact blowup the cap exists to prevent.
-    // One extra (cheap, two-column) counting aggregation buys that; the
-    // uncapped path keeps the single fused aggregation (collect_set
-    // dedupes (user, resource) while grouping, so no distinct() pre-pass).
-    val capped =
-      if (maxDegree == Int.MaxValue) edges
-      else {
-        val deg = edges.select(col("resource"), col("user_id")).distinct()
-          .groupBy(col("resource")).agg(count(lit(1)).as("deg"))
-          .filter(col("deg") <= maxDegree)
-          .select(col("resource"))
-        edges.join(deg, Seq("resource"), "left_semi")
-      }
     // Packed (a<<32 | b) pair keys need ids in [0, 2^31). Validate in the
     // scan stage — one codegen'd comparison per row — so an oversized id
     // fails the FIRST stage with an actionable message instead of a bare
     // require() deep inside the pair-fold shuffle. Id spaces beyond 2^31
     // are served by [[coaccessPairsWide]] (struct pair keys, no packing).
-    val guarded = capped.withColumn("user_id",
+    // cleanEvents already dropped NULL ids, so only a real out-of-range
+    // id reaches the raise_error branch.
+    val guarded = cappedEdges(spark, dir, maxDegree).withColumn("user_id",
       when(col("user_id") >= 0 && col("user_id") < (1L << 31), col("user_id"))
         .otherwise(raise_error(concat(
           lit("qCoaccessPairs: user_id "), col("user_id").cast("string"),
@@ -542,23 +549,12 @@ object ThreatOps {
       maxDegree: Int = Int.MaxValue): DataFrame = {
     val s = spark
     import s.implicits._
-    val edges = activityLog(spark, dir)
-      .filter(col("resource").isNotNull && col("user_id").isNotNull)
-    val capped =
-      if (maxDegree == Int.MaxValue) edges
-      else {
-        val deg = edges.select(col("resource"), col("user_id")).distinct()
-          .groupBy(col("resource")).agg(count(lit(1)).as("deg"))
-          .filter(col("deg") <= maxDegree)
-          .select(col("resource"))
-        edges.join(deg, Seq("resource"), "left_semi")
-      }
-    val perResource = capped
+    val perResource = cappedEdges(spark, dir, maxDegree)
       .groupBy(col("resource"))
       .agg(collect_set(col("user_id")).as("users"))
       .filter(size(col("users")) >= 2)
       .select(sort_array(col("users")).as("users"))
-    perResource
+    val pairs = perResource
       .as[Array[Long]]
       // Lazy pair generation: a strict for-yield would materialize all
       // C(deg,2) pairs of one resource as an in-memory collection before
@@ -573,8 +569,7 @@ object ThreatOps {
       .groupBy(col("user_a"), col("user_b"))
       .agg(count(lit(1)).as("shared_resources"))
       .filter(col("shared_resources") >= 2)
-      .orderBy(col("shared_resources").desc, col("user_a"), col("user_b"))
-      .limit(100)
+    topPairs(pairs)
   }
 
   /** Partition-local pair-count map bound for [[foldPairs]]. */
@@ -896,7 +891,7 @@ object ThreatOps {
     // queries and unpersists deterministically.
     val contribs = graft.Memo.cached("pagerankContribs", spark, dir) {
       val ur = activityLog(spark, dir)
-        .filter(col("resource").isNotNull && col("user_id").isNotNull)
+        .filter(col("resource").isNotNull)
         .select(concat(lit("u"), col("user_id")).as("u"),
           concat(lit("r"), col("resource")).as("r"))
         .distinct()

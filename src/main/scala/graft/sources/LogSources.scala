@@ -62,9 +62,9 @@ object LogSources {
         col("timestamp").isNotNull)
       .withColumn("hour_of_day", hour(col("timestamp")).cast("long"))
       .withColumn("day_of_week", expr("weekday(timestamp)").cast("long"))
-      .withColumn("is_weekend", when(col("day_of_week") >= 5, 1L).otherwise(0L))
+      .withColumn("is_weekend", when(graft.Tables.weekend(col("day_of_week")), 1L).otherwise(0L))
       .withColumn("is_after_hours",
-        when(col("hour_of_day") < 8 || col("hour_of_day") > 18, 1L).otherwise(0L))
+        when(graft.Tables.afterHours(col("hour_of_day")), 1L).otherwise(0L))
 
   /** Date-partitioned parquet sink: the ingest layout for an unbounded
     * log. Daily partitions make the time-range predicates in every

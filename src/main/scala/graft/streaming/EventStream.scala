@@ -147,7 +147,7 @@ object EventStream {
   def afterHoursAlerts(events: DataFrame): DataFrame =
     cleanStream(events)
       .withColumn("hour_of_day", hour(col("ts")))
-      .filter(col("hour_of_day") < 8 || col("hour_of_day") > 18)
+      .filter(Tables.afterHours(col("hour_of_day")))
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("hour_of_day"))
 
@@ -157,7 +157,7 @@ object EventStream {
   def afterHoursWindowed(events: DataFrame): DataFrame =
     cleanStream(events)
       .withWatermark("ts", "2 hours")
-      .filter(hour(col("ts")) < 8 || hour(col("ts")) > 18)
+      .filter(Tables.afterHours(hour(col("ts"))))
       .groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"), col("user_id"))
       .agg(count(lit(1)).as("after_hours_count"))
       .select(col("w.start").as("window_start"), col("user_id"),
@@ -203,7 +203,7 @@ object EventStream {
     val base = userBaseline.select(col("user_id"),
       col("after_hours_ratio"), col("total_activities"))
     cleanStream(events)
-      .filter(hour(col("ts")) < 8 || hour(col("ts")) > 18)
+      .filter(Tables.afterHours(hour(col("ts"))))
       .join(base, Seq("user_id"), "inner")
       .filter(col("after_hours_ratio") >= ratioThreshold)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),

@@ -49,6 +49,34 @@ class OraclePolicySpec extends AnyFunSuite {
     }
   }
 
+  test("co-access oracles share one projection and carry one degree cap") {
+    // tools/graph_oracle_chunked.py reads the cap and the thresholds its
+    // tails transcribe from these registered texts; a text that loses
+    // one fails here instead of at the next chunked gate run.
+    val capped = Seq("q_coaccess_capped", "q_coaccess_components",
+      "q_peer_anomaly", "q_blast_radius", "q_kcore", "q_degree_dist",
+      "q_component_density", "q_knn_triangles", "q_clustering_coeff",
+      "q_assortativity")
+    val uncapped = Seq("q_coaccess_pairs", "q_coaccess_jaccard")
+    val degreeCap = """HAVING count\(\*\) <= (\d+)""".r
+    def occurrences(sql: String, part: String): Int =
+      sql.split(java.util.regex.Pattern.quote(part), -1).length - 1
+    for ((names, isCapped) <- Seq(capped -> true, uncapped -> false); name <- names) {
+      val sql = SparkEntry.oracleSql(name)
+      val projection = SparkEntry.withCleanEvents(SparkEntry.coaccessCtes(isCapped))
+      assert(occurrences(sql, projection) === 1,
+        s"$name does not carry the shared co-access projection exactly once")
+      assert(sql.contains("count(*) >= 2"), s"$name lost the pair threshold")
+      val caps = degreeCap.findAllMatchIn(sql).map(_.group(1).toInt).toList
+      val expected =
+        if (isCapped) List(graft.operators.ThreatOps.CoaccessMaxDegree) else Nil
+      assert(caps === expected, s"$name degree caps")
+    }
+    for (name <- Seq("q_knn_triangles", "q_clustering_coeff"))
+      assert(SparkEntry.oracleSql(name).contains("rk <= 3"),
+        s"$name lost the kNN fanout")
+  }
+
   test("exempt set is exactly the two dirty-row profilers") {
     // q_profile counts the nulls themselves; q_dq_checks grades them.
     // Anything else appearing here would silently drop the policy.

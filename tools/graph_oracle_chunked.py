@@ -63,9 +63,25 @@ POLICIED = ("(SELECT * FROM events WHERE user_id IS NOT NULL "
 
 # ---------------------------------------------------------------------------
 # Downstream tails, verbatim from SparkEntry.oracleSql (the shared
-# ur/keep/pr(pc)/e/reach+comp CTE prefix is replaced by the materialized
-# tables of the same name and content; `pr` == `pc` minus the count col).
+# ur/keep/pr/e/reach+comp CTE prefix is replaced by the materialized
+# tables of the same content; `pr` is materialized as `pc`).
 # ---------------------------------------------------------------------------
+# The kNN sparsifier and its triangle count (SparkEntry.knnTriangleCtes).
+KNN_TRIANGLES = """        WITH dirp AS (SELECT ua AS u, ub AS v, c FROM pc
+           UNION ALL SELECT ub, ua, c FROM pc),
+         knn AS (SELECT u, v FROM (
+             SELECT u, v, row_number() OVER (PARTITION BY u ORDER BY c DESC, v) AS rk
+             FROM dirp) WHERE rk <= 3),
+         und AS (SELECT DISTINCT least(u, v) AS a, greatest(u, v) AS b FROM knn),
+         tri AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z FROM und e1
+           JOIN und e2 ON e1.b = e2.a
+           JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b),
+         tc AS (SELECT user_id, count(*) AS n_triangles FROM (
+             SELECT x AS user_id FROM tri
+             UNION ALL SELECT y FROM tri
+             UNION ALL SELECT z FROM tri)
+           GROUP BY 1)"""
+
 TAILS = {
     "q_coaccess_components": f"""
         WITH users AS (SELECT DISTINCT user_id FROM {POLICIED}),
@@ -105,38 +121,14 @@ TAILS = {
          SELECT seed AS seed_user, uid AS user_id,
            CAST(min(hop) AS BIGINT) AS hop
          FROM allh GROUP BY 1, 2 ORDER BY seed_user, hop, user_id""",
-    "q_knn_triangles": """
-        WITH dirp AS (SELECT ua AS u, ub AS v, c FROM pc
-           UNION ALL SELECT ub, ua, c FROM pc),
-         knn AS (SELECT u, v FROM (
-             SELECT u, v, row_number() OVER (PARTITION BY u ORDER BY c DESC, v) AS rk
-             FROM dirp) WHERE rk <= 3),
-         und AS (SELECT DISTINCT least(u, v) AS a, greatest(u, v) AS b FROM knn),
-         tri AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z FROM und e1
-           JOIN und e2 ON e1.b = e2.a
-           JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b)
-         SELECT user_id, count(*) AS n_triangles FROM (
-           SELECT x AS user_id FROM tri
-           UNION ALL SELECT y FROM tri
-           UNION ALL SELECT z FROM tri)
-         GROUP BY 1 ORDER BY n_triangles DESC, user_id""",
-    "q_clustering_coeff": """
-        WITH dirp AS (SELECT ua AS u, ub AS v, c FROM pc
-           UNION ALL SELECT ub, ua, c FROM pc),
-         knn AS (SELECT u, v FROM (
-             SELECT u, v, row_number() OVER (PARTITION BY u ORDER BY c DESC, v) AS rk
-             FROM dirp) WHERE rk <= 3),
-         und AS (SELECT DISTINCT least(u, v) AS a, greatest(u, v) AS b FROM knn),
+    "q_knn_triangles": f"""
+{KNN_TRIANGLES}
+         SELECT user_id, n_triangles FROM tc
+         ORDER BY n_triangles DESC, user_id""",
+    "q_clustering_coeff": f"""
+{KNN_TRIANGLES},
          dire AS (SELECT a, b FROM und UNION ALL SELECT b, a FROM und),
-         deg AS (SELECT a AS user_id, count(*) AS degree FROM dire GROUP BY 1),
-         tri AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z FROM und e1
-           JOIN und e2 ON e1.b = e2.a
-           JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b),
-         tc AS (SELECT user_id, count(*) AS n_triangles FROM (
-             SELECT x AS user_id FROM tri
-             UNION ALL SELECT y FROM tri
-             UNION ALL SELECT z FROM tri)
-           GROUP BY 1)
+         deg AS (SELECT a AS user_id, count(*) AS degree FROM dire GROUP BY 1)
          SELECT d.user_id, d.degree,
            CAST(COALESCE(tc.n_triangles, 0) AS BIGINT) AS n_triangles,
            CAST(CASE WHEN d.degree >= 2
@@ -182,30 +174,17 @@ TAILS = {
              sum(ta) AS s_ta, sum(ta*ta) AS ss_ta,
              sum(uq) AS s_uq, sum(uq*uq) AS ss_uq,
              sum(ahr4) AS s_ah, sum(ahr4*ahr4) AS ss_ah
-           FROM x GROUP BY 1)
-         SELECT x.user_id, x.component_id, CAST(st.n AS BIGINT) AS peer_n,
-           round(greatest(
-             CASE WHEN (ss_ta::DOUBLE - s_ta::DOUBLE*s_ta::DOUBLE/n::DOUBLE)/n::DOUBLE > 0
-               THEN abs(ta::DOUBLE - s_ta::DOUBLE/n::DOUBLE)
-                 / sqrt((ss_ta::DOUBLE - s_ta::DOUBLE*s_ta::DOUBLE/n::DOUBLE)/n::DOUBLE) ELSE 0 END,
-             CASE WHEN (ss_uq::DOUBLE - s_uq::DOUBLE*s_uq::DOUBLE/n::DOUBLE)/n::DOUBLE > 0
-               THEN abs(uq::DOUBLE - s_uq::DOUBLE/n::DOUBLE)
-                 / sqrt((ss_uq::DOUBLE - s_uq::DOUBLE*s_uq::DOUBLE/n::DOUBLE)/n::DOUBLE) ELSE 0 END,
-             CASE WHEN (ss_ah::DOUBLE - s_ah::DOUBLE*s_ah::DOUBLE/n::DOUBLE)/n::DOUBLE > 0
-               THEN abs(ahr4::DOUBLE - s_ah::DOUBLE/n::DOUBLE)
-                 / sqrt((ss_ah::DOUBLE - s_ah::DOUBLE*s_ah::DOUBLE/n::DOUBLE)/n::DOUBLE) ELSE 0 END), 4) AS peer_z,
-           CAST(CASE WHEN round(greatest(
-             CASE WHEN (ss_ta::DOUBLE - s_ta::DOUBLE*s_ta::DOUBLE/n::DOUBLE)/n::DOUBLE > 0
-               THEN abs(ta::DOUBLE - s_ta::DOUBLE/n::DOUBLE)
-                 / sqrt((ss_ta::DOUBLE - s_ta::DOUBLE*s_ta::DOUBLE/n::DOUBLE)/n::DOUBLE) ELSE 0 END,
-             CASE WHEN (ss_uq::DOUBLE - s_uq::DOUBLE*s_uq::DOUBLE/n::DOUBLE)/n::DOUBLE > 0
-               THEN abs(uq::DOUBLE - s_uq::DOUBLE/n::DOUBLE)
-                 / sqrt((ss_uq::DOUBLE - s_uq::DOUBLE*s_uq::DOUBLE/n::DOUBLE)/n::DOUBLE) ELSE 0 END,
-             CASE WHEN (ss_ah::DOUBLE - s_ah::DOUBLE*s_ah::DOUBLE/n::DOUBLE)/n::DOUBLE > 0
-               THEN abs(ahr4::DOUBLE - s_ah::DOUBLE/n::DOUBLE)
-                 / sqrt((ss_ah::DOUBLE - s_ah::DOUBLE*s_ah::DOUBLE/n::DOUBLE)/n::DOUBLE) ELSE 0 END), 4) > 3.0
-             THEN 1 ELSE 0 END AS BIGINT) AS is_peer_outlier
-         FROM x JOIN st USING (component_id) ORDER BY x.user_id""",
+           FROM x GROUP BY 1),
+         pz AS (SELECT x.user_id, x.component_id, st.n,
+             round(greatest(CASE WHEN (ss_ta::DOUBLE - s_ta::DOUBLE*s_ta::DOUBLE/n::DOUBLE)/n::DOUBLE > 0
+               THEN abs(ta::DOUBLE - s_ta::DOUBLE/n::DOUBLE) / sqrt((ss_ta::DOUBLE - s_ta::DOUBLE*s_ta::DOUBLE/n::DOUBLE)/n::DOUBLE) ELSE 0 END, CASE WHEN (ss_uq::DOUBLE - s_uq::DOUBLE*s_uq::DOUBLE/n::DOUBLE)/n::DOUBLE > 0
+               THEN abs(uq::DOUBLE - s_uq::DOUBLE/n::DOUBLE) / sqrt((ss_uq::DOUBLE - s_uq::DOUBLE*s_uq::DOUBLE/n::DOUBLE)/n::DOUBLE) ELSE 0 END,
+               CASE WHEN (ss_ah::DOUBLE - s_ah::DOUBLE*s_ah::DOUBLE/n::DOUBLE)/n::DOUBLE > 0
+               THEN abs(ahr4::DOUBLE - s_ah::DOUBLE/n::DOUBLE) / sqrt((ss_ah::DOUBLE - s_ah::DOUBLE*s_ah::DOUBLE/n::DOUBLE)/n::DOUBLE) ELSE 0 END), 4) AS peer_z
+           FROM x JOIN st USING (component_id))
+         SELECT user_id, component_id, CAST(n AS BIGINT) AS peer_n, peer_z,
+           CAST(CASE WHEN peer_z > 3.0 THEN 1 ELSE 0 END AS BIGINT) AS is_peer_outlier
+         FROM pz ORDER BY user_id""",
 }
 
 
