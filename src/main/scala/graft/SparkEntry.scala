@@ -458,10 +458,15 @@ object SparkEntry {
   private val minhashJaccardSql =
     """round(len(list_intersect(sa.hj, sb.hj))*1.0
           / len(list_distinct(list_concat(sa.hj, sb.hj))), 4)"""
-  /** `p / (10⁴·q)` rounded HALF_UP to 4 dp in integer arithmetic — mirror
-    * of DedupOps.halfUp4. */
+  /** `p / (10⁴·q)` rounded half away from zero to 4 dp in integer
+    * arithmetic — mirror of DedupOps.halfUp4. */
   private def halfUp4Sql(p: String, q: String): String =
-    s"CAST((2 * ($p) + ($q)) // (2 * ($q)) AS DOUBLE) / 10000"
+    s"CAST((2 * ($p) + CASE WHEN ($p) < 0 THEN -($q) ELSE ($q) END) // (2 * ($q))" +
+      " AS DOUBLE) / 10000"
+  /** Mean of the 2-dp `value` column over its non-null count, half-up at
+    * 4 dp in exact integers — mirror of RelationalOps.valueAvg4. */
+  private val valueAvg4Sql =
+    halfUp4Sql("CAST(sum(value::DECIMAL(14,2)) * 10000 AS BIGINT)", "count(value)")
 
   /** MinHash-LSH verified candidate pairs (mirror of
     * DedupOps.qDedupMinhashPairs) — shared by the pairs oracle and the
@@ -1463,7 +1468,7 @@ object SparkEntry {
              AS burstiness
          FROM st WHERE c >= 2 ORDER BY fano DESC, user_id""",
     "q_ohlc" ->
-      """WITH e AS (
+      s"""WITH e AS (
            SELECT event_type, CAST(ts AS DATE) AS d, value,
              printf('%020d-%012d', epoch_us(ts), event_id) AS k
            FROM events WHERE value IS NOT NULL)
@@ -1471,7 +1476,7 @@ object SparkEntry {
            min_by(value, k) AS open, max(value) AS high, min(value) AS low,
            max_by(value, k) AS close,
            CAST(count(*) AS BIGINT) AS n_events,
-           round(sum(value::DECIMAL(14,2))::DOUBLE / count(value), 4) AS mean_value
+           $valueAvg4Sql AS mean_value
          FROM e GROUP BY event_type, d
          ORDER BY event_type, day""",
     "q_skyline" ->
@@ -1933,12 +1938,12 @@ object SparkEntry {
          GROUP BY GROUPING SETS ((h), (d), (w), ())
          ORDER BY grain, bucket""",
     "q_ntile" ->
-      """WITH d AS (SELECT event_type, value,
+      s"""WITH d AS (SELECT event_type, value,
            ntile(10) OVER (PARTITION BY event_type ORDER BY value, event_id) AS decile
            FROM events)
          SELECT event_type, CAST(decile AS BIGINT) AS decile, count(*) AS n,
            round(min(value), 4) AS min_v, round(max(value), 4) AS max_v,
-           round(sum(value::DECIMAL(14,2))::DOUBLE / count(value), 4) AS avg_v
+           $valueAvg4Sql AS avg_v
          FROM d GROUP BY 1, 2 ORDER BY 1, 2""",
     "q_gap_fill" ->
       """WITH daily AS (SELECT user_id, CAST(ts AS DATE) AS d, count(*) AS n
@@ -2069,9 +2074,9 @@ object SparkEntry {
                          AND o.o_orderpriority = '1-URGENT')
          ORDER BY c_custkey""",
     "q_percentiles" ->
-      """SELECT event_type, count(*) AS n,
+      s"""SELECT event_type, count(*) AS n,
            round(min(value), 4) AS min_v,
-           round(sum(value::DECIMAL(14,2))::DOUBLE / count(value), 4) AS avg_v,
+           $valueAvg4Sql AS avg_v,
            round(max(value), 4) AS max_v,
            round(quantile_cont(value, 0.25), 4) AS p25,
            round(quantile_cont(value, 0.5), 4) AS p50,

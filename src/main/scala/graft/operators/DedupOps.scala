@@ -242,14 +242,16 @@ object DedupOps {
       .orderBy(col("decile"))
   }
 
-  /** `p / (10⁴·q)` rounded HALF_UP to 4 dp, for a 10⁴-scaled integer
-    * numerator `p` and a positive integer count `q`: the integer
-    * quotient `(2p + q) div 2q`, then one correctly rounded division by
-    * 10⁴. The oracle computes the same integer, so the emitted doubles
-    * are bit-equal — where rounding a double quotient on each engine
-    * rounds some ties apart (0.96045 → 0.9604 vs 0.9605). */
+  /** `p / (10⁴·q)` rounded half away from zero to 4 dp, for a
+    * 10⁴-scaled integer numerator `p` and a positive integer count `q`:
+    * the integer quotient `(2p ± q) div 2q` (`−q` for a negative `p`:
+    * `div` truncates toward zero on both engines), then one correctly
+    * rounded division by 10⁴. The oracle ([[graft.SparkEntry]]'s
+    * `halfUp4Sql`) computes the same integer, so the emitted doubles are
+    * bit-equal — where rounding a double quotient on each engine rounds
+    * some ties apart (0.96045 → 0.9604 vs 0.9605). */
   private[graft] def halfUp4(p: Column, q: Column): Column =
-    call_function("div", p * 2 + q, q * 2) / 10000.0
+    call_function("div", p * 2 + when(p < 0, -q).otherwise(q), q * 2) / 10000.0
 
   /** 60-bit SimHash fingerprint (15 hex chars of md5 → bits 0..59; 16 hex
     * chars would overflow a signed long): per token, hash to 60 bits; sum

@@ -18,6 +18,9 @@ import org.apache.spark.sql.functions._
   */
 object GraphOps {
 
+  /** [[minLabelPropagation]]'s round cap (see the object doc). */
+  val MaxLabelRounds = 100
+
   /** Min-label propagation over an UNDIRECTED edge list given as a
     * `(src, dst)` frame already symmetrized by the caller (both
     * directions present). Returns `(id, lbl)` for every node appearing
@@ -25,7 +28,7 @@ object GraphOps {
     * caller should localCheckpoint `edges` first if its lineage is
     * expensive — every round re-reads it.
     */
-  def minLabelPropagation(edges: DataFrame, maxRounds: Int = 100): DataFrame = {
+  def minLabelPropagation(edges: DataFrame): DataFrame = {
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("lbl", col("id")).localCheckpoint()
     def lblSum(df: DataFrame): Long =
@@ -33,7 +36,7 @@ object GraphOps {
     var prevSum = Long.MaxValue
     var curSum = lblSum(labels)
     var rounds = 0
-    while (curSum < prevSum && rounds < maxRounds) {
+    while (curSum < prevSum && rounds < MaxLabelRounds) {
       val nbrMin = edges.join(labels, col("dst") === col("id"))
         .groupBy(col("src")).agg(min(col("lbl")).as("nbr_lbl"))
       labels = labels.join(nbrMin, col("id") === col("src"), "left")
@@ -49,8 +52,8 @@ object GraphOps {
     // a Memo would serve the wrong labels for the rest of the session.
     if (curSum < prevSum)
       throw new IllegalStateException("minLabelPropagation: hit " +
-        s"$maxRounds rounds before convergence — component diameter " +
-        "exceeds the cap; raise maxRounds or check the edge set")
+        s"$MaxLabelRounds rounds before convergence — component diameter " +
+        "exceeds the cap; raise MaxLabelRounds or check the edge set")
     labels
   }
 

@@ -6,8 +6,8 @@ import org.apache.spark.ml.Estimator
 import org.apache.spark.ml.classification.{GBTClassifier, LinearSVC, RandomForestClassifier}
 import org.apache.spark.ml.evaluation.{BinaryClassificationEvaluator, Evaluator,
   MulticlassClassificationEvaluator}
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.feature.{PCA, StandardScaler, VectorAssembler}
+import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
+import org.apache.spark.ml.feature.{PCA, PCAModel, StandardScaler, VectorAssembler}
 import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
 import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.ml.param.ParamMap
@@ -192,23 +192,39 @@ object MLOps {
         .select(col("user_id"), col("sfv"))
     }
 
-  /** KMeans(k=2, seed=42) on standardized features; the smaller cluster is
-    * the anomalous one, scored by distance-to-centroid
-    * (ref Comparaison_ML.py:172-196). Only the k=2 cluster sizes reach the
-    * driver — never the data.
+  /** KMeans(k=2, seed=42) on the standardized features
+    * (ref Comparaison_ML.py:172-196), fit once per (session, dir):
+    * [[qKmeansAnomaly]] and [[qSilhouette]] read the same centroids.
     */
-  /** Memoized via [[graft.Memo]]: an MLlib fit isn't plan-cacheable the
-    * way a DataFrame is, so without this the ensemble would re-cluster
-    * from scratch.
+  private def kmeansModel(spark: SparkSession, dir: String): KMeansModel =
+    graft.Memo("kmeansModel", spark, dir) {
+      new KMeans().setK(2).setSeed(42)
+        .setFeaturesCol("sfv").setPredictionCol("cluster")
+        .fit(standardizedFeatures(spark, dir))
+    }
+
+  /** PCA(2) on the standardized features (ref Comparaison_ML.py:323-325),
+    * fit once per (session, dir): [[qPcaProject]], [[qPcaVariance]] and
+    * [[qReconError]] read the same components.
+    */
+  private def pcaModel(spark: SparkSession, dir: String): PCAModel =
+    graft.Memo("pcaModel", spark, dir) {
+      new PCA().setK(2).setInputCol("sfv").setOutputCol("pc")
+        .fit(standardizedFeatures(spark, dir))
+    }
+
+  /** The k=2 split of [[kmeansModel]]: the smaller cluster is the
+    * anomalous one, scored by distance-to-centroid
+    * (ref Comparaison_ML.py:172-196). Only the k=2 cluster sizes reach the
+    * driver — never the data. Memo-pinned: the ensemble and the report
+    * read this |users|-row frame instead of re-running the transform.
     */
   def qKmeansAnomaly(spark: SparkSession, dir: String): DataFrame =
     graft.Memo.cached("kmeans", spark, dir)(kmeansImpl(spark, dir))
 
   private def kmeansImpl(spark: SparkSession, dir: String): DataFrame = {
     val sf = standardizedFeatures(spark, dir)
-    val model = new KMeans().setK(2).setSeed(42)
-      .setFeaturesCol("sfv").setPredictionCol("cluster")
-      .fit(sf)
+    val model = kmeansModel(spark, dir)
     val pred = model.transform(sf)
     val sizes = pred.groupBy("cluster").count().collect()
     val anomalous = sizes.minBy(r => (r.getLong(1), r.getInt(0))).getInt(0)
@@ -225,9 +241,7 @@ object MLOps {
     */
   def qPcaProject(spark: SparkSession, dir: String): DataFrame =
     graft.Memo.cached("pca", spark, dir) {
-    val sf = standardizedFeatures(spark, dir)
-    new PCA().setK(2).setInputCol("sfv").setOutputCol("pc")
-      .fit(sf).transform(sf)
+    pcaModel(spark, dir).transform(standardizedFeatures(spark, dir))
       .select(col("user_id"),
         r4(element_at(vector_to_array(col("pc")), 1)).as("pc1"),
         r4(element_at(vector_to_array(col("pc")), 2)).as("pc2"))
@@ -238,16 +252,14 @@ object MLOps {
     * reference prints alongside its projection
     * (Comparaison_ML.py:323-325, `pca.explained_variance_ratio_`) and
     * the one an analyst actually quotes ("PC1+PC2 carry X% of the
-    * variance"). One row per component plus the cumulative total; the
-    * fit iterates over the pinned |users|-row standardized matrix and
-    * only k scalars reach the driver. Fitted-model output → rows-only
-    * (deterministic: covariance eigendecomposition has no seed).
+    * variance"). One row per component plus the cumulative total, read
+    * off [[pcaModel]]: only k scalars reach the driver. Fitted-model
+    * output → rows-only (deterministic: covariance eigendecomposition
+    * has no seed).
     */
   def qPcaVariance(spark: SparkSession, dir: String): DataFrame =
     graft.Memo("pcaVariance", spark, dir) {
-      val sfr = standardizedFeatures(spark, dir)
-      val model = new PCA().setK(2).setInputCol("sfv").setOutputCol("pc").fit(sfr)
-      val evr = model.explainedVariance.toArray
+      val evr = pcaModel(spark, dir).explainedVariance.toArray
       val rows = evr.zipWithIndex.map { case (v, i) =>
         (s"pc${i + 1}", math.rint(v * 10000) / 10000)
       } :+ ("cumulative", math.rint(evr.sum * 10000) / 10000)
@@ -539,7 +551,7 @@ object MLOps {
   def qReconError(spark: SparkSession, dir: String): DataFrame =
     graft.Memo.cached("recon", spark, dir) {
     val sf = standardizedFeatures(spark, dir)
-    val model = new PCA().setK(2).setInputCol("sfv").setOutputCol("pc").fit(sf)
+    val model = pcaModel(spark, dir)
     val arr = vector_to_array(col("sfv"))
     val projSq = (0 until 2).map { i =>
       val comp = array(model.pc.colIter.toSeq(i).toArray.map(lit): _*)
@@ -651,6 +663,22 @@ object MLOps {
       .orderBy("vec_id")
   }
 
+  /** (event_type, value, user_id, med, adev) — the per-event absolute
+    * deviations from each type's median, pinned once per (session, dir):
+    * [[qMadOutlier]]'s rollup and [[qAnomalyOverlap]]'s per-user MAD
+    * flag both fold it (user_id never reaches qMadOutlier's groupBy).
+    */
+  private def madDev(spark: SparkSession, dir: String): DataFrame =
+    graft.Memo.cached("madDev", spark, dir) {
+      val ev = cleanEvents(spark, dir)
+        .select(col("event_type"), col("value"), col("user_id"))
+        .filter(col("value").isNotNull)
+      val med = ev.groupBy(col("event_type").as("met"))
+        .agg(percentile(col("value"), lit(0.5)).as("med"))
+      ev.join(broadcast(med), col("event_type") === col("met"))
+        .withColumn("adev", abs(col("value") - col("med")))
+    }
+
   /** Robust per-type value outliers via median absolute deviation — the
     * heavy-tail-proof alternative to [[qZscoreAnomaly]] (one planted
     * extreme value shifts a mean and explodes a stddev, but moves neither
@@ -668,22 +696,6 @@ object MLOps {
     * widest frame every consumer shares) is pinned via Memo.cached, the
     * same treatment autocorrDaily/skylineCandidates get.
     */
-  /** (event_type, value, user_id, med, adev) — the per-event absolute
-    * deviations from each type's median, pinned once per (session, dir):
-    * [[qMadOutlier]]'s rollup and [[qAnomalyOverlap]]'s per-user MAD
-    * flag both fold it (user_id never reaches qMadOutlier's groupBy).
-    */
-  private def madDev(spark: SparkSession, dir: String): DataFrame =
-    graft.Memo.cached("madDev", spark, dir) {
-      val ev = cleanEvents(spark, dir)
-        .select(col("event_type"), col("value"), col("user_id"))
-        .filter(col("value").isNotNull)
-      val med = ev.groupBy(col("event_type").as("met"))
-        .agg(percentile(col("value"), lit(0.5)).as("med"))
-      ev.join(broadcast(med), col("event_type") === col("met"))
-        .withColumn("adev", abs(col("value") - col("med")))
-    }
-
   def qMadOutlier(spark: SparkSession, dir: String): DataFrame = {
     val dev = madDev(spark, dir)
     val mad = dev.groupBy(col("event_type").as("aet"))
@@ -785,14 +797,6 @@ object MLOps {
           / (col("_np") * (col("_n") - col("_np")))).as("auc"))
   }
 
-  /** ROC AUC per detector — the reference's headline metric
-    * (Comparaison_ML.py:353-355: roc_curve + auc per model). Two
-    * deterministic detector scores over the labeled embeddings (L2
-    * norm and max-|component|, truth = label 0) ranked by the
-    * Mann–Whitney identity in [[groupedAuc]]; SQL-expressible, so this
-    * one is DuckDB-hash-oracled, unlike the fitted-model AUCs in
-    * [[qModelReport]].
-    */
   /** Stacked (detector, truth, score) frame over the labeled embeddings
     * — the shared input of [[qRocAuc]] and [[qRocPoints]]: two
     * deterministic detector scores (L2 norm, max-|component|), truth =
@@ -808,8 +812,25 @@ object MLOps {
         col("mx").as("score")))
   }
 
+  /** ROC AUC per detector — the reference's headline metric
+    * (Comparaison_ML.py:353-355: roc_curve + auc per model). Two
+    * deterministic detector scores over the labeled embeddings (L2
+    * norm and max-|component|, truth = label 0) ranked by the
+    * Mann–Whitney identity in [[groupedAuc]]; SQL-expressible, so this
+    * one is DuckDB-hash-oracled, unlike the fitted-model AUCs in
+    * [[qModelReport]].
+    */
   def qRocAuc(spark: SparkSession, dir: String): DataFrame =
     groupedAuc(detectorScores(spark, dir), "detector").orderBy(col("detector"))
+
+  /** The deterministic-detector curve frame, Memo-pinned: three queries
+    * consume it (the curve itself, its PR projection, and the AP
+    * integral) — one rank pass serves all three, |distinct scores| rows.
+    */
+  private def detectorRocPoints(spark: SparkSession, dir: String): DataFrame =
+    graft.Memo.cached("detectorRocPoints", spark, dir) {
+      rocPointsOver(detectorScores(spark, dir), "detector")
+    }
 
   /** The ROC curve ITSELF — the reference's roc_curve output
     * (Comparaison_ML.py:353-355 plots fpr/tpr per threshold; [[qRocAuc]]
@@ -822,15 +843,6 @@ object MLOps {
     * the detector's start offset (a broadcast |detectors|-row frame) —
     * no unpartitioned window, no per-row sort, any corpus size.
     */
-  /** The deterministic-detector curve frame, Memo-pinned: three queries
-    * consume it (the curve itself, its PR projection, and the AP
-    * integral) — one rank pass serves all three, |distinct scores| rows.
-    */
-  private def detectorRocPoints(spark: SparkSession, dir: String): DataFrame =
-    graft.Memo.cached("detectorRocPoints", spark, dir) {
-      rocPointsOver(detectorScores(spark, dir), "detector")
-    }
-
   def qRocPoints(spark: SparkSession, dir: String): DataFrame =
     detectorRocPoints(spark, dir)
       .orderBy(col("detector"), col("threshold").desc)
@@ -914,17 +926,6 @@ object MLOps {
     rocPointsOver(supervisedScores(spark, dir).withColumnRenamed("model", "detector"),
       "detector")
 
-  /** Consolidated supervised comparison — the reference's
-    * rapport_performances.csv / resultats_supervise.csv analogue
-    * (Comparaison_ML.py:551-707 prints per-model metrics side by
-    * side): per-model confusion counts, precision/recall/F1/accuracy
-    * on the SAME held-out fold (vec_id % 5 == 0), plus Mann–Whitney
-    * AUC on each model's anomaly score. All three tracks binarize to
-    * the anomaly target (label 0 vs rest); the RF track is multiclass,
-    * so its anomaly score is P(class 0) head-to-head with GBT's
-    * P(anomaly) and SVC's margin. Model internals aren't
-    * SQL-expressible → rows-only, contract-specced.
-    */
   /** Stacked `(model, truth, pred, score)` frame over the three
     * supervised tracks' held-out predictions — shared by
     * [[qModelReport]] (confusion + AUC) and [[qRocPointsSupervised]]
@@ -946,6 +947,17 @@ object MLOps {
     rf.unionByName(gbt).unionByName(svc)
   }
 
+  /** Consolidated supervised comparison — the reference's
+    * rapport_performances.csv / resultats_supervise.csv analogue
+    * (Comparaison_ML.py:551-707 prints per-model metrics side by
+    * side): per-model confusion counts, precision/recall/F1/accuracy
+    * on the SAME held-out fold (vec_id % 5 == 0), plus Mann–Whitney
+    * AUC on each model's anomaly score. All three tracks binarize to
+    * the anomaly target (label 0 vs rest); the RF track is multiclass,
+    * so its anomaly score is P(class 0) head-to-head with GBT's
+    * P(anomaly) and SVC's margin. Model internals aren't
+    * SQL-expressible → rows-only, contract-specced.
+    */
   def qModelReport(spark: SparkSession, dir: String): DataFrame = {
     val stacked = supervisedScores(spark, dir)
     val cm = stacked.groupBy(col("model")).agg(
@@ -1044,11 +1056,9 @@ object MLOps {
     */
   def qSilhouette(spark: SparkSession, dir: String): DataFrame =
     graft.Memo("silhouette", spark, dir) {
-    val sf = standardizedFeatures(spark, dir)
-    val model = new KMeans().setK(2).setSeed(42)
-      .setFeaturesCol("sfv").setPredictionCol("cluster").fit(sf)
+    val model = kmeansModel(spark, dir)
     val dist = centroidDist(model.clusterCenters)
-    model.transform(sf)
+    model.transform(standardizedFeatures(spark, dir))
       .select(col("user_id"), col("cluster").cast("long").as("cluster"),
         dist(col("sfv"), col("cluster").cast("int")).as("a_own"),
         dist(col("sfv"), (lit(1) - col("cluster")).cast("int")).as("b_other"))

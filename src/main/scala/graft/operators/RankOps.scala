@@ -58,7 +58,7 @@ object RankOps {
     * holding the running sum of `expr` up to and including the current
     * row in `sort` order.
     *
-    * `pin` (default on) caches the input before ranking:
+    * The input is always pinned (cached) before ranking:
     * `repartitionByRange` runs a SAMPLING job over its input and then
     * re-reads it for the shuffle write, so un-pinned input lineage
     * executes 2-3× per action (measured 36× wall-clock on a scoring
@@ -70,8 +70,6 @@ object RankOps {
     * every pinned frame is registered (deduplicated by semantic hash)
     * so [[releasePins]] can unpersist the lot deterministically — a
     * long-lived session doesn't accrete unaccounted InMemoryRelations.
-    * Pass `pin = false` when the input is a trivial projection of an
-    * already-cached frame.
     *
     * Each `cumSums` name present in `cumTotalNames` additionally emits
     * that sum's GRAND total under the mapped column name — it rides the
@@ -81,10 +79,10 @@ object RankOps {
     * job + crossJoin.
     */
   def withGlobalRank(df: DataFrame, rankName: String, sort: Seq[Column],
-      cumSums: Seq[(String, Column)] = Nil, pin: Boolean = true,
+      cumSums: Seq[(String, Column)] = Nil,
       totalName: Option[String] = None,
       cumTotalNames: Map[String, String] = Map.empty): DataFrame = {
-    val in = if (pin) registerPin(df) else df
+    val in = registerPin(df)
     val n = df.sparkSession.sparkContext.defaultParallelism
     // Explicit numPartitions: a user-specified width AQE won't coalesce,
     // so spark_partition_id() stays aligned with the range ordering.

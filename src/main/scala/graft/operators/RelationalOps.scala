@@ -29,13 +29,16 @@ object RelationalOps {
     * rows of ROLLUP/GROUPING SETS aggregate EVERY row into one group —
     * the worst case. `value` is 2-dp exact by construction, so the
     * decimal sum is bit-identical at any scale; doubles reappear only
-    * after the final round. `valueAvg4` divides by the NON-NULL count
-    * (avg semantics) in double — both engines see identical operands.
+    * after the final round. `valueAvg4` is the mean over the NON-NULL
+    * count (avg semantics) rounded half-up to 4 dp in exact integers
+    * ([[DedupOps.halfUp4]] of 10⁴·Σvalue = Σcents·100): rounding the
+    * double quotient splits .xxxx5 ties between engines (307.03 / 8 =
+    * 38.37875 rounded to 38.3788 by Spark, 38.3787 by DuckDB).
     */
   private[operators] def valueSum2: Column =
     round(sum(col("value").cast("decimal(14,2)")), 2).cast("double")
-  private[operators] def valueAvg4: Column =
-    r4(sum(col("value").cast("decimal(14,2)")).cast("double") /
+  private[graft] def valueAvg4: Column =
+    DedupOps.halfUp4((sum(col("value").cast("decimal(14,2)")) * 10000).cast("long"),
       count(col("value")))
 
   /** TPC-H Q1-style pricing summary. One scan of lineitem with the date

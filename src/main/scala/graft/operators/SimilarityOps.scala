@@ -3,6 +3,8 @@ package graft.operators
 import graft.Tables._
 import graft.functions.TextFunctions._
 import graft.functions.VectorExpressions.{cosineSim, dotProd}
+import org.apache.spark.ml.clustering.KMeans
+import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -20,21 +22,31 @@ object SimilarityOps {
   val ProbeCount = 5
   val TopK = 10
 
+  /** The probe set every ANN search runs: the vectors with
+    * `vec_id < ProbeCount` of a `(vec_id, embedding, …)` frame as
+    * `(probe_id, probe_emb)`, plus `extra` columns over the same rows
+    * (list ids, bucket keys, lookup tables). */
+  private def probeFrame(vecs: DataFrame, extra: Column*): DataFrame =
+    vecs.filter(col("vec_id") < ProbeCount)
+      .select(col("vec_id").as("probe_id") +: col("embedding").as("probe_emb") +: extra: _*)
+
+  /** Each probe's [[TopK]] best candidates of a `(probe_id, vec_id, cos)`
+    * frame: long `rank` by cosine descending, vec_id ascending breaking
+    * ties, so every search ranks with the same total order. */
+  private def topKPerProbe(cands: DataFrame): DataFrame =
+    cands.withColumn("rank", row_number().over(Window.partitionBy(col("probe_id"))
+        .orderBy(col("cos").desc, col("vec_id").asc)).cast("long"))
+      .filter(col("rank") <= TopK)
+
   /** Brute-force cosine top-k: probes (vec_id < ProbeCount) broadcast
     * against every vector; rank per probe with deterministic tiebreak.
     * All math in double after exact float widening (oracle-reproducible).
     */
   def qAnnBrute(spark: SparkSession, dir: String): DataFrame = {
     val all = embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    val probes = all.filter(col("vec_id") < ProbeCount)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("probe_emb"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    all.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id"),
-        r4(cosineSim(col("probe_emb"), col("embedding"))).as("cos"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= TopK)
+    topKPerProbe(all.join(broadcast(probeFrame(all)), col("vec_id") =!= col("probe_id"))
+        .select(col("probe_id"), col("vec_id"),
+          r4(cosineSim(col("probe_emb"), col("embedding"))).as("cos")))
       .orderBy(col("probe_id"), col("rank"))
   }
 
@@ -84,89 +96,89 @@ object SimilarityOps {
     Seq.fill(nPlanes)(Seq.fill(dim)(rng.nextGaussian()))
   }
 
-  /** IVF-bucketed approximate nearest neighbors — the data-adaptive scale
-    * path. A KMeans coarse quantizer (k=16, seed=42, fitted on a sample)
-    * assigns every vector to its nearest centroid's inverted list; each
-    * probe searches only its `nprobe`=4 closest lists. At corpus scale the
-    * lists are the partitioning: a probe touches nprobe/k of the data.
-    * Centroids come from an MLlib fit → rows-only check.
-    */
-  /** Squared L2 distance of a float-array column to a literal centroid —
+  /** Squared L2 distance of a double-array column to a literal centroid —
     * a narrow codegen projection (‖v‖² − 2 v·c + ‖c‖²). */
-  private def ivfDist2(vec: Column, c: Array[Double]): Column = {
+  private def dist2(vec: Column, c: Array[Double]): Column = {
     val cc = array(c.map(lit): _*)
     dotProd(vec, vec) - lit(2.0) * dotProd(vec, cc) + lit(c.map(x => x * x).sum)
   }
 
   /** The `n` nearest inverted-list ids for a vector, over literal
     * centroids (in-row array_sort — no shuffle, no UDF). Shared by the
-    * IVF search, the IVF+PQ search shape, and the recall sweep. */
+    * IVF search, the IVF+PQ search, and the recall sweep. */
   private def ivfNearestLists(centroids: Array[Array[Double]])(
       vec: Column, n: Int): Column = {
     val scored = array(centroids.zipWithIndex.map { case (c, i) =>
-      struct(ivfDist2(vec, c).as("d"), lit(i).as("i"))
+      struct(dist2(vec, c).as("d"), lit(i).as("i"))
     }: _*)
     slice(transform(array_sort(scored), s => s.getField("i")), 1, n)
   }
 
-  /** Coarse IVF quantizer for `dir`: k=16 seeded KMeans fit on a bounded
-    * DETERMINISTIC sample (id-range, not limit(): an unordered limit
-    * takes whichever rows arrive first and would break cross-run
-    * reproducibility). The model is tiny (k centroids) regardless of
-    * corpus size; memoized so the IVF search and the recall sweep score
-    * against the SAME quantizer. Keyed by the embeddings table's CONTENT
-    * fingerprint (names/sizes/mtimes — the same identity the persisted
-    * minhash index uses), not by (session, dir): a fixture regenerated
-    * at the same path within one process refits instead of silently
-    * serving stale centroids, and the map retains only plain double
-    * arrays — never a (possibly stopped) SparkSession reference. The
-    * fit itself is seeded, so a concurrent double-fit is benign.
+  /** Lists each IVF probe searches. */
+  val IvfProbes = 4
+
+  /** Models fitted on one directory's embeddings (the IVF coarse
+    * quantizer, the PQ codebooks), keyed by (model, embeddings path) and
+    * holding (content fingerprint, model). The table's CONTENT
+    * fingerprint (names/sizes/mtimes — the identity the persisted minhash
+    * index uses), not (session, dir), decides a hit: a fixture
+    * regenerated at the same path within one process refits instead of
+    * serving stale centroids, and REPLACES its path's entry, so the map
+    * holds one model per path however often a fixture is rewritten.
+    * Values are plain double arrays — never a (possibly stopped)
+    * SparkSession reference. The fits are seeded, so a concurrent
+    * double-fit is benign.
     */
-  private val ivfCentroids = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Array[Array[Double]])]()
-  private[graft] def ivfModelCentroids(spark: SparkSession, dir: String): Array[Array[Double]] = {
-    // Keyed by PATH, holding (fingerprint, centroids): a regenerated
-    // fixture at the same path replaces its entry instead of adding one,
-    // so a long-lived process that rewrites a fixture N times (the
-    // DedupSimilaritySpec regeneration test) holds exactly one centroid
-    // set per distinct path — the cache is bounded by paths, not by
-    // content generations.
-    val fp = graft.Tables.contentFingerprint(s"$dir/embeddings.parquet")
-    ivfCentroids.compute(s"$dir/embeddings.parquet", { (_, prev) =>
+  private val embeddingModels = new java.util.concurrent.ConcurrentHashMap[
+    (String, String), (String, AnyRef)]()
+
+  /** `fit` over the embeddings' bounded DETERMINISTIC fit sample
+    * (id-range, not limit(): an unordered limit takes whichever rows
+    * arrive first and would break cross-run reproducibility), once per
+    * content of `dir`'s embeddings. The models are tiny regardless of
+    * corpus size. */
+  private def fittedOnEmbeddings[T <: AnyRef](model: String, spark: SparkSession,
+      dir: String)(fit: DataFrame => T): T = {
+    val path = s"$dir/embeddings.parquet"
+    val fp = graft.Tables.contentFingerprint(path)
+    embeddingModels.compute((model, path), { (_, prev) =>
       if (prev != null && prev._1 == fp) prev
-      else {
-        import org.apache.spark.ml.clustering.KMeans
-        import org.apache.spark.ml.functions.array_to_vector
-        val fit = embeddings(spark, dir)
-          .filter(col("vec_id") < 2000)
-          .select(array_to_vector(toDouble(col("embedding"))).as("fv"))
-        (fp, new KMeans().setK(16).setSeed(42)
-          .setFeaturesCol("fv").setPredictionCol("list_id")
-          .fit(fit).clusterCenters.map(_.toArray))
-      }
-    })._2
+      else (fp, fit(embeddings(spark, dir).filter(col("vec_id") < 2000)))
+    })._2.asInstanceOf[T]
   }
 
+  /** Centroids of a seeded KMeans over the vector column `fv`. */
+  private def kmeansCenters(fv: DataFrame, k: Int, seed: Long): Array[Array[Double]] =
+    new KMeans().setK(k).setSeed(seed).setFeaturesCol("fv")
+      .fit(fv).clusterCenters.map(_.toArray)
+
+  /** Coarse IVF quantizer for `dir`: k=16 seeded KMeans over the fit
+    * sample — the one quantizer [[qAnnIvf]], [[qAnnIvfPq]] and
+    * [[qAnnRecallSweep]] all search. */
+  private[graft] def ivfModelCentroids(spark: SparkSession, dir: String): Array[Array[Double]] =
+    fittedOnEmbeddings("ivf", spark, dir) { sample =>
+      kmeansCenters(sample.select(array_to_vector(toDouble(col("embedding"))).as("fv")),
+        k = 16, seed = 42)
+    }
+
+  /** IVF-bucketed approximate nearest neighbors — the data-adaptive scale
+    * path. The coarse quantizer ([[ivfModelCentroids]]) assigns every
+    * vector to its nearest centroid's inverted list; each probe searches
+    * only its [[IvfProbes]] closest lists. At corpus scale the lists are
+    * the partitioning: a probe touches nprobe/k of the data. Centroids
+    * come from an MLlib fit → rows-only check.
+    */
   def qAnnIvf(spark: SparkSession, dir: String): DataFrame =
     graft.Memo("ann_ivf", spark, dir) {
-    val nprobe = 4
     val e = embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    val centroids = ivfModelCentroids(spark, dir)
-    def nearestLists(vec: Column, n: Int): Column =
-      ivfNearestLists(centroids)(vec, n)
+    val nearestLists = ivfNearestLists(ivfModelCentroids(spark, dir)) _
     val lists = e.select(col("vec_id"), col("embedding"),
       nearestLists(col("embedding"), 1).getItem(0).as("list_id"))
-    val probes = e.filter(col("vec_id") < ProbeCount)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("probe_emb"),
-        explode(nearestLists(col("embedding"), nprobe)).as("list_id"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    lists.join(broadcast(probes), Seq("list_id"))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id"), col("list_id"),
-        r4(cosineSim(col("probe_emb"), col("embedding"))).as("cos"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= TopK)
+    val probes = probeFrame(e, explode(nearestLists(col("embedding"), IvfProbes)).as("list_id"))
+    topKPerProbe(lists.join(broadcast(probes), Seq("list_id"))
+        .filter(col("vec_id") =!= col("probe_id"))
+        .select(col("probe_id"), col("vec_id"), col("list_id"),
+          r4(cosineSim(col("probe_emb"), col("embedding"))).as("cos")))
       .orderBy(col("probe_id"), col("rank"))
   }
 
@@ -227,22 +239,20 @@ object SimilarityOps {
     * each vector labeled by the RANK of the probe list that found it
     * (candidate visible at nprobe ≥ rank), so all five settings share a
     * single join; recall and scan fractions are exact integer basis
-    * points from overlap/row counts. Seeded KMeans quantizer (shared
-    * with [[qAnnIvf]] via the model registry) → rows-only; the spec pins
+    * points from overlap/row counts. Seeded KMeans quantizer (the same
+    * [[ivfModelCentroids]] fit [[qAnnIvf]] searches) → rows-only; the spec pins
     * recall monotone in nprobe and EXACTLY 10⁴ bp at nprobe = k, where
     * visiting every list degenerates to [[qAnnBrute]] by construction.
     */
   def qAnnRecallSweep(spark: SparkSession, dir: String): DataFrame =
     graft.Memo("ann_recall_sweep", spark, dir) {
-      val k = 16
       val e = embeddings(spark, dir).select(col("vec_id"), col("embedding"))
       val centroids = ivfModelCentroids(spark, dir)
+      val nearestLists = ivfNearestLists(centroids) _
       val lists = e.select(col("vec_id"), col("embedding"),
-        ivfNearestLists(centroids)(col("embedding"), 1).getItem(0).as("list_id"))
-      val probes = e.filter(col("vec_id") < ProbeCount)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("probe_emb"),
-          posexplode(ivfNearestLists(centroids)(col("embedding"), k))
-            .as(Seq("lr", "list_id")))
+        nearestLists(col("embedding"), 1).getItem(0).as("list_id"))
+      val probes = probeFrame(e,
+        posexplode(nearestLists(col("embedding"), centroids.length)).as(Seq("lr", "list_id")))
       val cand = lists.join(broadcast(probes), Seq("list_id"))
         .filter(col("vec_id") =!= col("probe_id"))
         .select(col("probe_id"), col("vec_id"),
@@ -251,15 +261,12 @@ object SimilarityOps {
         .cache()
       val brute = qAnnBrute(spark, dir).select(col("probe_id"), col("vec_id"))
       val nVec = e.count()
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("probe_id")).orderBy(col("cos").desc, col("vec_id").asc)
       // 5 bounded driver-side measurements over the one cached candidate
       // frame — a constant number of jobs, not a per-row loop
       val rows = SweepNprobes.map { np =>
         val vis = cand.filter(col("list_rank") <= np)
-        val top = vis.withColumn("rk", row_number().over(w))
-          .filter(col("rk") <= TopK)
-        val hits = top.join(brute, Seq("probe_id", "vec_id"), "left_semi").count()
+        val hits = topKPerProbe(vis)
+          .join(brute, Seq("probe_id", "vec_id"), "left_semi").count()
         (np.toLong, hits, vis.count())
       }
       cand.unpersist()
@@ -310,12 +317,8 @@ object SimilarityOps {
     // |corpus| narrow rows once and is a no-op at scale (splits ≥ cores).
     val all = spread(spark, embeddings(spark, dir))
       .select(col("vec_id"), col("embedding"), keys)
-    val probes = all.filter(col("vec_id") < ProbeCount)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("probe_emb"),
-        col("bucket"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    all.join(broadcast(probes), Seq("bucket"))
+    val probes = probeFrame(all, col("bucket"))
+    topKPerProbe(all.join(broadcast(probes), Seq("bucket"))
       .filter(col("vec_id") =!= col("probe_id"))
       // score BEFORE deduplicating: cos is deterministic per pair, so a
       // pair sharing several tables still yields one distinct row — but
@@ -326,9 +329,7 @@ object SimilarityOps {
       // shuffling 512-byte rows).
       .select(col("probe_id"), col("vec_id"),
         r4(cosineSim(col("probe_emb"), col("embedding"))).as("cos"))
-      .distinct() // a pair sharing several tables is verified once
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= TopK)
+      .distinct()) // a pair sharing several tables is verified once
       .orderBy(col("probe_id"), col("rank"))
   }
 
@@ -360,120 +361,95 @@ object SimilarityOps {
   val PqDims = 16
   val PqK = 16
 
+  /** Subvector `s` of a float-array embedding as doubles: dims
+    * s·[[PqDims]] until (s+1)·[[PqDims]]. */
+  private def subvector(vec: Column, s: Int): Column =
+    toDouble(slice(vec, s * PqDims + 1, PqDims))
+
+  /** The [[PqSub]] per-subspace PQ codebooks for `dir`: seeded KMeans
+    * (k = [[PqK]], seed 42 + s) over each subvector of the fit sample,
+    * held beside the IVF quantizer — the one codebook set [[qPqCodes]]
+    * emits and [[qAnnIvfPq]] searches. */
+  private[graft] def pqCodebooks(spark: SparkSession,
+      dir: String): IndexedSeq[Array[Array[Double]]] =
+    fittedOnEmbeddings("pq", spark, dir) { sample =>
+      (0 until PqSub).map(s => kmeansCenters(
+        sample.select(array_to_vector(subvector(col("embedding"), s)).as("fv")),
+        k = PqK, seed = 42 + s))
+    }
+
+  /** Nearest code of a subvector: the `(d, i)` struct of the closest of
+    * the literal centroids, as one sorted struct array (codegen'd dotProd
+    * inside). */
+  private def bestCode(vec: Column, cents: Array[Array[Double]]): Column =
+    array_sort(array(cents.zipWithIndex.map { case (c, i) =>
+      struct(dist2(vec, c).as("d"), lit(i.toLong).as("i"))
+    }: _*)).getItem(0)
+
   /** IVF + PQ asymmetric-distance search (the composed billion-vector ANN
     * architecture: IVF picks which inverted lists to visit, PQ makes the
     * in-list scan read 4 bytes per vector instead of 256): probes search
-    * their `nprobe` closest lists, rank candidates by PQ asymmetric
-    * distance (per-probe lookup table of probe-subvector→centroid
-    * distances, summed via element_at over the 4 stored codes — the ADC
-    * trick), shortlist 4×k, then re-rank ONLY the shortlist with exact
-    * cosine. At corpus scale the exact re-rank touches 4k vectors per
-    * probe no matter how big the lists are; everything upstream of it is
-    * a narrow codegen projection + one broadcast join. Seeded fits →
-    * rows-only; the spec asserts a recall floor vs [[qAnnBrute]].
+    * their [[IvfProbes]] closest lists of [[ivfModelCentroids]] (the
+    * quantizer [[qAnnIvf]] searches), rank candidates by PQ asymmetric
+    * distance over [[pqCodebooks]] (the codes [[qPqCodes]] emits; per-probe
+    * lookup table of probe-subvector→centroid distances, summed via
+    * element_at over the 4 stored codes — the ADC trick), shortlist 4×k,
+    * then re-rank ONLY the shortlist with exact cosine. At corpus scale
+    * the exact re-rank touches 4k vectors per probe no matter how big the
+    * lists are; everything upstream of it is a narrow codegen projection
+    * + one broadcast join. Seeded fits → rows-only; the spec asserts a
+    * recall floor vs [[qAnnBrute]].
     */
   def qAnnIvfPq(spark: SparkSession, dir: String): DataFrame =
     graft.Memo("ann_ivfpq", spark, dir) {
-      import org.apache.spark.ml.clustering.KMeans
-      import org.apache.spark.ml.functions.array_to_vector
-      val k = 16; val nprobe = 4; val shortlist = 4 * TopK
-      val base = embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-      val withSubs = base.select(col("vec_id") +: col("embedding") +:
-        (0 until PqSub).map(s =>
-          toDouble(slice(col("embedding"), s * PqDims + 1, PqDims)).as(s"sub_$s")): _*)
-      val sample = withSubs.filter(col("vec_id") < 2000)
-      // coarse quantizer (same contract as qAnnIvf) + per-subspace codebooks
-      // (same seeds as qPqCodes, so the two indexes would share storage)
-      val coarse = new KMeans().setK(k).setSeed(42)
-        .setFeaturesCol("fv").setPredictionCol("list_id")
-        .fit(sample.select(array_to_vector(toDouble(col("embedding"))).as("fv")))
-        .clusterCenters.map(_.toArray)
-      val codebooks = (0 until PqSub).map { s =>
-        new KMeans().setK(PqK).setSeed(42 + s)
-          .setFeaturesCol("fv").setPredictionCol("code")
-          .fit(sample.select(array_to_vector(col(s"sub_$s")).as("fv")))
-          .clusterCenters.map(_.toArray)
-      }
-      def dist2(vec: Column, c: Array[Double]): Column = {
-        val cc = array(c.map(lit): _*)
-        dotProd(vec, vec) - lit(2.0) * dotProd(vec, cc) + lit(c.map(x => x * x).sum)
-      }
-      def nearestLists(vec: Column, n: Int): Column =
-        slice(transform(array_sort(array(coarse.zipWithIndex.map { case (c, i) =>
-          struct(dist2(vec, c).as("d"), lit(i).as("i"))
-        }: _*)), s => s.getField("i")), 1, n)
-      def bestCode(vec: Column, cents: Array[Array[Double]]): Column =
-        array_sort(array(cents.zipWithIndex.map { case (c, i) =>
-          struct(dist2(vec, c).as("d"), lit(i.toLong).as("i"))
-        }: _*)).getItem(0).getField("i")
+      val shortlist = 4 * TopK
+      val withSubs = embeddings(spark, dir).select(col("vec_id") +: col("embedding") +:
+        (0 until PqSub).map(s => subvector(col("embedding"), s).as(s"sub_$s")): _*)
+      val nearestLists = ivfNearestLists(ivfModelCentroids(spark, dir)) _
+      val codebooks = pqCodebooks(spark, dir)
       // stored index: list id + 4 one-byte codes per vector (narrow)
       val indexed = withSubs.select(
         col("vec_id") +: col("embedding") +:
           nearestLists(col("embedding"), 1).getItem(0).as("list_id") +:
-          (0 until PqSub).map(s => bestCode(col(s"sub_$s"), codebooks(s)).as(s"code_$s")): _*)
+          (0 until PqSub).map(s =>
+            bestCode(col(s"sub_$s"), codebooks(s)).getField("i").as(s"code_$s")): _*)
       // per-probe ADC lookup tables: distance from the probe's subvector
       // to each of the 16 centroids, one 16-float array per subspace
-      val probes = withSubs.filter(col("vec_id") < ProbeCount)
-        .select(col("vec_id").as("probe_id") +: col("embedding").as("probe_emb") +:
-          explode(nearestLists(col("embedding"), nprobe)).as("list_id") +:
+      val probes = probeFrame(withSubs,
+        explode(nearestLists(col("embedding"), IvfProbes)).as("list_id") +:
           (0 until PqSub).map(s =>
             array(codebooks(s).map(c => dist2(col(s"sub_$s"), c)): _*).as(s"adc_$s")): _*)
       val approxDist = (0 until PqSub).map(s =>
         element_at(col(s"adc_$s"), col(s"code_$s").cast("int") + 1)).reduce(_ + _)
       val wApprox = Window.partitionBy(col("probe_id"))
         .orderBy(col("approx_dist").asc, col("vec_id").asc)
-      val wExact = Window.partitionBy(col("probe_id"))
-        .orderBy(col("cos").desc, col("vec_id").asc)
-      indexed.join(broadcast(probes), Seq("list_id"))
-        .filter(col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("vec_id"), col("probe_emb"), col("embedding"),
-          approxDist.as("approx_dist"))
-        .withColumn("pq_rank", row_number().over(wApprox))
-        .filter(col("pq_rank") <= shortlist)
-        .select(col("probe_id"), col("vec_id"),
-          r4(cosineSim(col("probe_emb"), col("embedding"))).as("cos"))
-        .withColumn("rank", row_number().over(wExact).cast("long"))
-        .filter(col("rank") <= TopK)
+      topKPerProbe(indexed.join(broadcast(probes), Seq("list_id"))
+          .filter(col("vec_id") =!= col("probe_id"))
+          .select(col("probe_id"), col("vec_id"), col("probe_emb"), col("embedding"),
+            approxDist.as("approx_dist"))
+          .withColumn("pq_rank", row_number().over(wApprox))
+          .filter(col("pq_rank") <= shortlist)
+          .select(col("probe_id"), col("vec_id"),
+            r4(cosineSim(col("probe_emb"), col("embedding"))).as("cos")))
         .orderBy(col("probe_id"), col("rank"))
     }
 
   /** Product quantization (Jégou 2011): split each embedding into
-    * [[PqSub]] subvectors, learn a seeded KMeans codebook per subspace,
-    * emit the per-vector code word + exact reconstruction error — the
-    * compressed-index path that makes billion-vector ANN fit in RAM
-    * (IVF picks the lists, PQ shrinks what's inside them). Codebooks are
-    * fit on a bounded deterministic id-range sample (same contract as
-    * [[qAnnIvf]]'s coarse quantizer); assignment + error are narrow
-    * projections against literal centroids — scan-speed at any corpus
-    * size, nothing but the tiny models on the driver.
+    * [[PqSub]] subvectors, code each against its subspace's seeded
+    * KMeans codebook ([[pqCodebooks]]), emit the per-vector code word +
+    * exact reconstruction error — the compressed-index path that makes
+    * billion-vector ANN fit in RAM (IVF picks the lists, PQ shrinks
+    * what's inside them). Assignment + error are narrow projections
+    * against literal centroids — scan-speed at any corpus size, nothing
+    * but the tiny models on the driver.
     */
   def qPqCodes(spark: SparkSession, dir: String): DataFrame =
     graft.Memo("pq_codes", spark, dir) {
-      import org.apache.spark.ml.clustering.KMeans
-      import org.apache.spark.ml.functions.array_to_vector
-      val e = embeddings(spark, dir)
-        .select(col("vec_id") +: (0 until PqSub).map(s =>
-          toDouble(slice(col("embedding"), s * PqDims + 1, PqDims)).as(s"sub_$s")): _*)
-      val sample = e.filter(col("vec_id") < 2000)
-      val codebooks = (0 until PqSub).map { s =>
-        new KMeans().setK(PqK).setSeed(42 + s)
-          .setFeaturesCol("fv").setPredictionCol("code")
-          .fit(sample.select(array_to_vector(col(s"sub_$s")).as("fv")))
-          .clusterCenters.map(_.toArray)
-      }
-      def dist2(vec: Column, c: Array[Double]): Column = {
-        val cc = array(c.map(lit): _*)
-        dotProd(vec, vec) - lit(2.0) * dotProd(vec, cc) + lit(c.map(x => x * x).sum)
-      }
-      // nearest code per subspace: argmin over the 16 literal centroids,
-      // evaluated as one sorted struct array (codegen'd dotProd inside)
-      def bestCode(vec: Column, cents: Array[Array[Double]]): Column =
-        array_sort(array(cents.zipWithIndex.map { case (c, i) =>
-          struct(dist2(vec, c).as("d"), lit(i.toLong).as("i"))
-        }: _*)).getItem(0)
-      val coded = e.select(
-        col("vec_id") +: (0 until PqSub).map(s =>
-          bestCode(col(s"sub_$s"), codebooks(s)).as(s"best_$s")): _*)
+      val codebooks = pqCodebooks(spark, dir)
+      val e = embeddings(spark, dir).select(col("vec_id") +:
+        (0 until PqSub).map(s => subvector(col("embedding"), s).as(s"sub_$s")): _*)
+      val coded = e.select(col("vec_id") +: (0 until PqSub).map(s =>
+        bestCode(col(s"sub_$s"), codebooks(s)).as(s"best_$s")): _*)
       coded.select(
         col("vec_id") +:
           (0 until PqSub).map(s => col(s"best_$s").getField("i").as(s"code_$s")) :+
@@ -585,8 +561,6 @@ object SimilarityOps {
     * seeded, so rows-only like every MLlib fit in the suite.
     */
   private[graft] def semanticDedupFrame(e: DataFrame, tau: Double): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
     val keyed = e.select(col("vec_id"), col("embedding"),
       md5(concat_ws(",", transform(col("embedding"), _.cast("string")))).as("ek"))
     // one row per distinct vector; members carry identical arrays so

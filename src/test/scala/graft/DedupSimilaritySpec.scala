@@ -954,16 +954,19 @@ class DedupSimilaritySpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-ivfcache").toString
+    // 64 dims: the PQ codebooks held beside the centroids split 4 x 16
     def writeEmb(seed: Long): Unit = {
       val rnd = new scala.util.Random(seed)
-      (0L until 64L).map(i => (i, Array.fill(8)(rnd.nextFloat())))
+      (0L until 64L).map(i => (i, Array.fill(64)(rnd.nextFloat())))
         .toDF("vec_id", "embedding")
         .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
     }
     writeEmb(seed = 1)
     val c1 = SimilarityOps.ivfModelCentroids(spark, tmp)
+    val p1 = SimilarityOps.pqCodebooks(spark, tmp)
     // same content -> cache hit (the SAME array instance, no refit)
     assert(SimilarityOps.ivfModelCentroids(spark, tmp) eq c1)
+    assert(SimilarityOps.pqCodebooks(spark, tmp) eq p1)
     // regenerate the fixture AT THE SAME PATH with different content:
     // the content fingerprint changes (new part-file names/sizes), so
     // the cache must REFIT instead of serving seed-1 centroids — the
@@ -972,5 +975,8 @@ class DedupSimilaritySpec extends SparkSpec {
     val c2 = SimilarityOps.ivfModelCentroids(spark, tmp)
     assert(!(c2 eq c1) && c2.flatten.toSeq != c1.flatten.toSeq,
       "regenerated embeddings must produce freshly fitted centroids")
+    val p2 = SimilarityOps.pqCodebooks(spark, tmp)
+    assert(!(p2 eq p1) && p2.flatten.flatten != p1.flatten.flatten,
+      "regenerated embeddings must produce freshly fitted PQ codebooks")
   }
 }

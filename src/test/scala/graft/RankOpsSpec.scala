@@ -24,7 +24,7 @@ class RankOpsSpec extends SparkSpec {
     val df = spark.range(n.toLong).select(
       (col("id") % 977).as("k"), col("id").as("id"))
     val ranked = RankOps.withGlobalRank(df, "grk",
-      Seq(col("k"), col("id")), pin = false)
+      Seq(col("k"), col("id")))
     val rows = ranked.select(col("k"), col("id"), col("grk")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._3)
     assert(rows.length === n)
@@ -40,7 +40,7 @@ class RankOpsSpec extends SparkSpec {
       (col("id") % 311).as("k"), col("id").as("id"), lit(1L).as("w"))
     val ranked = RankOps.withGlobalRank(df, "grk",
       Seq(col("k"), col("id")), cumSums = Seq("cw" -> col("w")),
-      pin = false, totalName = Some("tot"),
+      totalName = Some("tot"),
       cumTotalNames = Map("cw" -> "cw_tot"))
     val rows = ranked.select(col("grk"), col("cw"), col("tot"), col("cw_tot"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))

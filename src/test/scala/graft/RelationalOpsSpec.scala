@@ -636,6 +636,25 @@ class RelationalOpsSpec extends SparkSpec {
     assert(rows.length === direct)
   }
 
+  test("valueAvg4 rounds the exact mean half away from zero at the measured ties") {
+    def avg(vs: Double*): Double = {
+      val s = spark
+      import s.implicits._
+      vs.toDF("value").agg(RelationalOps.valueAvg4).head.getDouble(0)
+    }
+    // q_ohlc's sf0.001 tie group (signup, 2024-01-18): 307.03 / 8 = 38.37875,
+    // where DuckDB's round of the double quotient gave 38.3787
+    val tieGroup = Seq(14.64, 66.51, 63.1, 39.17, 0.03, 8.76, 15.48, 99.34)
+    assert(avg(tieGroup: _*) === 38.3788)
+    // 0.15 / 24 = 0.00625, whose double quotient 0.0062499999999999995
+    // rounds down on both engines; a negative sum rounds away from zero
+    assert(avg(0.15 +: Seq.fill(23)(0.0): _*) === 0.0063)
+    assert(avg(-0.15 +: Seq.fill(23)(0.0): _*) === -0.0063)
+    // neighbours that are not ties round to nearest
+    assert(avg(tieGroup.updated(4, 0.04): _*) === 38.38)
+    assert(avg(tieGroup.patch(4, Nil, 1): _*) === 43.8571)
+  }
+
   test("qSkyline: frontier is mutually non-dominating and dominates every other customer") {
     val sky = RelationalOps.qSkyline(spark, sf).collect()
       .map(r => (r.getAs[Long]("c_custkey"), r.getAs[Double]("c_acctbal"),
