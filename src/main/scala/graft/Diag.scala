@@ -89,11 +89,11 @@ object Diag {
   def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Times `queries`; with `artifact`, also writes the sweep there through
-    * [[finish]]. Each query's `warm_compiles` counts the classes compiled
-    * during runs 2..N: identical runs regenerate identical source, which
-    * the codegen cache serves, so a non-zero count names a query whose
-    * generated source changes from run to run. False when any query
-    * failed. */
+    * [[finish]]. Each query's `cold_compiles` counts the classes compiled
+    * during run 1, and `warm_compiles` those compiled during runs 2..N:
+    * identical runs regenerate identical source, which the codegen cache
+    * serves, so a non-zero warm count names a query whose generated
+    * source changes from run to run. False when any query failed. */
   def time(spark: SparkSession, queries: Seq[String], sfDir: String, runs: Int,
       artifact: Option[String]): Boolean = {
     require(runs >= 2, s"runs=$runs: run 1 is the cold run, warm needs at least one more")
@@ -103,18 +103,19 @@ object Diag {
       materialize(SparkEntry.queries(name)(spark, sfDir))
       (System.nanoTime() - t0) / 1e9
     }
-    val timed: Seq[(String, Option[(Seq[Double], Long)])] = queries.map { name =>
+    val timed: Seq[(String, Option[(Seq[Double], Long, Long)])] = queries.map { name =>
       val times =
         try {
-          val cold = run(name)
           val c0 = compiles()
+          val cold = run(name)
+          val c1 = compiles()
           val warm = (2 to runs).map(_ => run(name))
-          Some((cold +: warm, compiles() - c0))
+          Some((cold +: warm, c1 - c0, compiles() - c1))
         } catch { case NonFatal(e) =>
           System.err.println(s"[diag] $name failed: ${e.getMessage}")
           None
         }
-      times.foreach { case (ts, _) =>
+      times.foreach { case (ts, _, _) =>
         println(s"TIMEQ $name " + ts.map(t => f"$t%.3f").mkString(" "))
       }
       name -> times
@@ -122,10 +123,11 @@ object Diag {
     val failed = timed.collect { case (n, None) => n }
     artifact.foreach { path =>
       val ok = timed.collect { case (n, Some(r)) => n -> r }
-      val warm = ok.map { case (n, (ts, _)) => n -> ts.tail.min }.toMap
-      val rows = TreeMap(ok.map { case (n, (ts, wc)) =>
+      val warm = ok.map { case (n, (ts, _, _)) => n -> ts.tail.min }.toMap
+      val rows = TreeMap(ok.map { case (n, (ts, cc, wc)) =>
         n -> ListMap("cold" -> r3(ts.head), "warm" -> r3(warm(n)),
-          "spread" -> r3((ts.tail.max - warm(n)) / warm(n)), "warm_compiles" -> wc)
+          "spread" -> r3((ts.tail.max - warm(n)) / warm(n)), "cold_compiles" -> cc,
+          "warm_compiles" -> wc)
       }: _*)
       val sweep = ListMap("cpus" -> Tables.cpus, "sf" -> sfDir, "runs" -> runs,
         "codegen_cache_entries" -> spark.conf.get("spark.sql.codegen.cache.maxEntries").toInt,

@@ -5,69 +5,121 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
-/** In-process registry of fitted models and of query results whose
-  * plans embed one. A DataFrame's logical plan caches/reuses fine through
-  * `.cache()`, but a model FIT is driver-side work Spark can't
-  * deduplicate — calling qKmeansAnomaly twice would cluster twice. Every
-  * fit here is seeded and deterministic, so memoizing by (operator,
-  * session, input) is semantics-preserving: the moral equivalent of a
-  * model registry keyed by training snapshot. A value is a DataFrame or
-  * the fitted model itself (`MLOps.pcaModel`), so every query that reads
-  * a model shares its one fit.
+/** The process's one cache of state derived from input directories:
+  * fitted models, pinned DataFrames, rank pins and parquet schemas.
+  *
+  * One rule. An entry is keyed by (op, session, dir) and belongs to the
+  * generation of its (session, dir), which records the dir's
+  * [[Tables.contentFingerprint]] when it was made. Every lookup walks the
+  * dir again; when the fingerprint differs, the whole generation is
+  * released (DataFrames unpersisted, fitted values dropped) and the
+  * entry is computed anew over the new content. A rewritten input is
+  * therefore never served stale, and nothing has to be invalidated by
+  * hand: the first read after a rewrite goes through [[Tables.table]],
+  * whose schema lookup is an entry here, and so releases the old pins
+  * before Spark's CacheManager could substitute one of them into a plan
+  * that is not memoized at all.
+  *
+  * A fit is driver-side work Spark cannot deduplicate (calling
+  * qKmeansAnomaly twice would cluster twice). Every fit here is seeded
+  * and deterministic, so memoizing by (operator, session, content) is
+  * semantics-preserving: a model registry keyed by training snapshot.
+  * Directories are local paths, keyed absolute and normalized.
   */
 object Memo {
-  private val store = new ConcurrentHashMap[(String, SparkSession, String), Any]()
+  /** The entries made from one content of one (session, dir), by op. */
+  private final class Generation(val fingerprint: String) {
+    val entries = new ConcurrentHashMap[String, Any]()
+  }
 
-  /** NOT computeIfAbsent: memoized bodies call other memoized queries
+  private val store = new ConcurrentHashMap[(SparkSession, String), Generation]()
+
+  /** The generation of (`spark`, `dir`) for `fingerprint`: the current one
+    * if it matches, else a new empty one, after releasing the old. */
+  private def generation(spark: SparkSession, dir: String, fingerprint: String): Generation = {
+    var stale: Generation = null
+    val gen = store.compute((spark, dir), (_, prev) =>
+      if (prev != null && prev.fingerprint == fingerprint) prev
+      else { stale = prev; new Generation(fingerprint) })
+    if (stale != null) stale.entries.values().forEach(release)
+    gen
+  }
+
+  private def current(spark: SparkSession, dir: String): Generation = {
+    val d = java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString
+    generation(spark, d, Tables.contentFingerprint(d))
+  }
+
+  /** `op`'s entry in `gen`, made by `f` on a miss (and cached when `pin`).
+    * NOT computeIfAbsent: memoized bodies call other memoized queries
     * (density → pca), and a mapping function that re-enters the same
     * ConcurrentHashMap violates its contract (IllegalStateException
     * "Recursive update" when keys share a bin). Compute outside the
-    * lock; a rare duplicate fit under concurrency is benign (same
-    * seeded result) and putIfAbsent keeps the first. Each `op` name
-    * always stores one type `T`.
-    */
-  def apply[T](op: String, spark: SparkSession, dir: String)(f: => T): T = {
-    val key = (op, spark, dir)
-    val hit = store.get(key)
-    if (hit != null) hit.asInstanceOf[T]
+    * lock; a rare duplicate fit under concurrency is benign (same seeded
+    * result) and putIfAbsent keeps the first. Each `op` name always
+    * stores one type. */
+  private def entry(gen: Generation, op: String, pin: Boolean)(f: => Any): Any = {
+    val hit = gen.entries.get(op)
+    if (hit != null) hit
     else {
       val v = f
-      val prev = store.putIfAbsent(key, v)
-      if (prev != null) prev.asInstanceOf[T] else v
+      if (pin) v.asInstanceOf[DataFrame].cache()
+      val prev = gen.entries.putIfAbsent(op, v)
+      if (prev == null) v
+      else {
+        // Race loser. CacheManager matches plans by EQUIVALENCE, not
+        // object identity: a loser whose plan differs from the winner's
+        // (a freshly fitted scaler) holds an unreachable registration →
+        // unpersist it; an equivalent loser's cache() was a no-op on the
+        // winner's entry, and unpersisting it would evict the winner.
+        if (pin) try {
+          val df = v.asInstanceOf[DataFrame]
+          if (!df.queryExecution.analyzed.sameResult(prev.asInstanceOf[DataFrame].queryExecution.analyzed))
+            df.unpersist()
+        } catch { case NonFatal(_) => () }
+        prev
+      }
     }
   }
+
+  /** `f`'s value for (`op`, `spark`, the current content of `dir`): a
+    * fitted model, a driver-side scalar or a DataFrame whose plan embeds
+    * one. */
+  def apply[T](op: String, spark: SparkSession, dir: String)(f: => T): T =
+    entry(current(spark, dir), op, pin = false)(f).asInstanceOf[T]
 
   /** Memoize AND pin: the shared-plan variant for small derived tables
     * (feature matrices, term frequencies) that several operators consume.
     * Returning the SAME DataFrame object on every call means exactly one
-    * `.cache()` registration per (op, session, dir) — repeated invocations
-    * don't stack fresh InMemoryRelations — and [[invalidate]] can
-    * unpersist it deterministically.
+    * `.cache()` registration per entry (repeated invocations don't stack
+    * fresh InMemoryRelations), unpersisted when its dir's content changes.
     */
-  def cached(op: String, spark: SparkSession, dir: String)(f: => DataFrame): DataFrame = {
-    val key = (op, spark, dir)
-    val hit = store.get(key)
-    if (hit != null) hit.asInstanceOf[DataFrame]
+  def cached(op: String, spark: SparkSession, dir: String)(f: => DataFrame): DataFrame =
+    entry(current(spark, dir), op, pin = true)(f).asInstanceOf[DataFrame]
+
+  /** Pins `df` in the generation of every directory its plan reads (the
+    * parents of its file relations' root paths) and returns the pinned
+    * frame: an earlier pin of an equivalent plan (same semantic hash)
+    * while that is still current everywhere, else `df`, cached. A frame
+    * that reads no local files is pinned under no directory and released
+    * only by [[clear]]. */
+  def pin(df: DataFrame): DataFrame = {
+    val spark = df.sparkSession
+    val plan = df.queryExecution.analyzed
+    val dirs = plan.collect {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs.location.rootPaths
+    }.flatten.filter(p => p.toUri.getScheme == "file" && p.getParent != null)
+      .map(_.getParent.toUri.getPath).distinct
+    val gens = if (dirs.isEmpty) Seq(generation(spark, "", "")) else dirs.map(current(spark, _))
+    val op = "pin:" + (try plan.semanticHash() catch { case NonFatal(_) => System.identityHashCode(df) })
+    val hits = gens.map(_.entries.get(op).asInstanceOf[AnyRef])
+    if (hits.head != null && hits.forall(_ eq hits.head)) hits.head.asInstanceOf[DataFrame]
     else {
-      val v = f
-      v.cache()
-      val prev = store.putIfAbsent(key, v).asInstanceOf[DataFrame]
-      if (prev != null) {
-        // Race loser. Two cases, because CacheManager matches plans by
-        // EQUIVALENCE, not object identity:
-        //  - loser's plan differs from the winner's (e.g. a freshly
-        //    fitted scaler): its registration would be unreachable →
-        //    unpersist it;
-        //  - plans are equivalent (deterministic bodies like termFreq):
-        //    the loser's cache() was a no-op on the same entry, and an
-        //    unpersist here would evict the WINNER's cache — skip it.
-        try {
-          if (!v.queryExecution.analyzed.sameResult(prev.queryExecution.analyzed))
-            v.unpersist()
-        } catch { case NonFatal(_) => () }
-        prev
-      } else v
+      df.cache()
+      gens.foreach(_.entries.put(op, df))
+      df
     }
   }
 
@@ -77,30 +129,10 @@ object Memo {
     case _ => ()
   }
 
-  /** Drop every memoized entry whose input directory is `dir`,
-    * unpersisting the DataFrames — call after rewriting the data under
-    * `dir` in a long-lived session, so stale fitted models / cached plans
-    * can't be served.
-    */
-  def invalidate(dir: String): Unit = {
-    val it = store.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._3 == dir) {
-        release(e.getValue)
-        it.remove()
-      }
-    }
-  }
-
-  /** Full reset: unpersist the DataFrames and forget everything (e.g.
-    * between test suites or at session teardown). Also releases RankOps'
-    * pinned rank inputs — they aren't dir-keyed (RankOps sees only a
-    * frame), so the session-wide reset is their deterministic unpersist
-    * point. */
+  /** Full reset: unpersist every DataFrame and forget everything (e.g.
+    * between test suites, at session teardown, or to force a re-run). */
   def clear(): Unit = {
-    store.values().forEach(release)
+    store.values().forEach(_.entries.values().forEach(release))
     store.clear()
-    operators.RankOps.releasePins()
   }
 }

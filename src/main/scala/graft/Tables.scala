@@ -1,31 +1,40 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
-
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Table loaders + shared helpers for the graft engine.
   *
   * All queries read the driver-generated parquet tables under a scale-factor
   * directory (see TESTDATA.md). Loaders are declarative parquet scans with
-  * the schema supplied by [[parquetSchema]]: Catalyst still pushes
+  * the schema supplied by [[table]]: Catalyst still pushes
   * filters/column pruning into the parquet reader — at 100 TB that
   * pushdown is the difference between scanning a column slice and
   * scanning everything.
   */
 object Tables {
 
-  /** A fresh parquet relation over `<dir>/<name>.parquet`. Only the schema
-    * is reused ([[parquetSchema]]); the Dataset is built anew on every
-    * call, so a self-join of two calls keeps distinct attributes. A
-    * missing path takes the plain read, so it fails exactly as that does. */
+  /** A fresh parquet relation over `<dir>/<name>.parquet`, read with its
+    * inferred schema. Inference is a footer-read Spark job, 100-130 ms
+    * per call warm, against 8-13 ms for a read with the schema supplied;
+    * every query calls this once per input, so the schema is a [[Memo]]
+    * entry of `dir`, keyed also by the [[SchemaConfs]] values: a fixture
+    * rewritten under `dir` (its content fingerprint changes) or a conf
+    * flip such as [[events]]' nanosAsLong infers again. Being the one
+    * read path, that lookup is also what releases `dir`'s stale Memo
+    * entries after a rewrite. The Dataset is built anew on every call, so
+    * a self-join of two calls keeps distinct attributes. A missing path
+    * takes the plain read, so it fails exactly as that does. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    parquetSchema(spark, path).fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path))) spark.read.parquet(path)
+    else {
+      val confs = SchemaConfs.map(k => spark.conf.getOption(k).orNull).mkString("|")
+      spark.read.schema(Memo(s"schema:$name|$confs", spark, dir)(spark.read.parquet(path).schema))
+        .parquet(path)
+    }
   }
 
   /** The parquet confs that change what schema inference returns for the
@@ -36,29 +45,6 @@ object Tables {
     "spark.sql.parquet.int96AsTimestamp",
     "spark.sql.parquet.inferTimestampNTZ.enabled",
     "spark.sql.parquet.mergeSchema")
-
-  private val schemas = new ConcurrentHashMap[(SparkSession, String), (String, StructType)]()
-
-  /** The inferred schema of the parquet input at a local `path`, or None
-    * when the path does not exist. Inference is a footer-read Spark job,
-    * 100-130 ms per call warm, against 8-13 ms for a read with the schema
-    * supplied; every query calls [[table]] once per input, so a warm pass
-    * paid that job per input. The schema is cached per (session, path)
-    * under a key of [[contentFingerprint]] (0.2-0.3 ms) plus the
-    * [[SchemaConfs]] values: a fixture rewritten at the same path, or a
-    * conf flip such as [[events]]' nanosAsLong, infers again. */
-  private def parquetSchema(spark: SparkSession, path: String): Option[StructType] =
-    Option.when(java.nio.file.Files.exists(java.nio.file.Paths.get(path))) {
-      val key = (contentFingerprint(path) +: SchemaConfs.map(k => spark.conf.getOption(k).orNull))
-        .mkString("|")
-      val hit = schemas.get((spark, path))
-      if (hit != null && hit._1 == key) hit._2
-      else {
-        val s = spark.read.parquet(path).schema
-        schemas.put((spark, path), (key, s))
-        s
-      }
-    }
 
   def lineitem(s: SparkSession, d: String): DataFrame = table(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame   = table(s, d, "orders")
@@ -141,12 +127,13 @@ object Tables {
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
   }
 
-  /** MD5 fingerprint of a parquet table's on-disk content identity (file
-    * names + sizes + mtimes, plus the path itself). Anything derived from
-    * a table's CONTENT — a persisted index generation, a cached fitted
-    * model — must be keyed by this rather than by the path alone, so a
-    * driver-regenerated fixture at the same path can never silently serve
-    * a stale derivation: new content → new fingerprint → fresh build.
+  /** MD5 fingerprint of a local path's on-disk content identity (file
+    * names + sizes + mtimes, plus the path itself): of a table, or of a
+    * whole input directory. Anything derived from CONTENT — a persisted
+    * index generation, a [[Memo]] entry — must be keyed by this rather
+    * than by the path alone, so a fixture regenerated at the same path
+    * can never silently serve a stale derivation: new content → new
+    * fingerprint → fresh build.
     * The walk is RECURSIVE (a partitioned table's data files live in
     * nested part directories whose top-level names/mtimes can survive a
     * content rewrite), and a missing path is an error: a fingerprint of

@@ -14,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * compiled kernel.
   *
   * Semantically identical to the composable-HOF pipeline it replaces —
-  *   hash32(shingles(text, k)) =
+  *   hash32(shingles(tokens(text), k)) =
   *   transform(array_distinct(k-grams of split(trim(text), "\\s+")),
   *             x -> conv(substring(md5(x),1,8),16,10))
   * — and therefore identical to the DuckDB oracle. The HOF chain pays

@@ -13,12 +13,14 @@ object TextFunctions {
   /** Whitespace tokens. */
   def tokens(text: Column): Column = split(trim(text), "\\s+")
 
-  /** Distinct word k-shingles ("a b c" style). Guarded: Spark's `sequence`
-    * runs DESCENDING when stop < start, so short docs must short-circuit
-    * to an empty array rather than produce a reversed range.
+  /** Distinct word k-shingles ("a b c" style) of a [[tokens]] column.
+    * Pass the tokens as a projected column, not as `tokens(text)`: the
+    * lambda reads them once per shingle element, and an inline
+    * expression would re-split the text for each read. Guarded: Spark's
+    * `sequence` runs DESCENDING when stop < start, so short docs must
+    * short-circuit to an empty array rather than produce a reversed range.
     */
-  def shingles(text: Column, k: Int): Column = {
-    val t = tokens(text)
+  def shingles(t: Column, k: Int): Column = {
     val idx = sequence(lit(1), size(t) - lit(k - 1))
     array_distinct(
       when(size(t) >= k,

@@ -67,7 +67,7 @@ object MLOps {
     * KMeans branches (and the ensemble that runs all three) resolve to ONE
     * shared InMemoryRelation — the matrix is |users| rows, exactly what
     * you'd pin in memory on a cluster while the 100 TB log stays on disk —
-    * and Memo.invalidate(dir) unpersists it when the data changes.
+    * and Memo unpersists it when the content of `dir` changes.
     */
   private[graft] def userFeatures(spark: SparkSession, dir: String): DataFrame =
     graft.Memo.cached("userFeatures", spark, dir) {
@@ -178,7 +178,7 @@ object MLOps {
     * shared input for the MLlib detectors (ref Comparaison_ML.py:125-130).
     * Memo.cached: the scaler FIT is driver-side work, and KMeans/PCA/recon
     * all iterate over this |users|-row frame — one pinned copy per
-    * (session, dir), unpersisted by Memo.invalidate.
+    * (session, dir) content, unpersisted when that content changes.
     */
   private def standardizedFeatures(spark: SparkSession, dir: String): DataFrame =
     graft.Memo.cached("standardizedFeatures", spark, dir) {

@@ -1,7 +1,5 @@
 package graft.operators
 
-import scala.util.control.NonFatal
-
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -26,31 +24,6 @@ import org.apache.spark.sql.functions._
   */
 object RankOps {
 
-  /** Pinned rank inputs, deduplicated by the analyzed plan's semantic
-    * hash. CacheManager already reuses one InMemoryRelation for
-    * semantically-equal plans, so the map mirrors (not duplicates) its
-    * state — what it adds is ACCOUNTING: [[releasePins]] gives sessions
-    * a deterministic unpersist point (Memo.clear calls it), instead of
-    * cache entries living until session teardown.
-    */
-  private val pins =
-    new java.util.concurrent.ConcurrentHashMap[Int, DataFrame]()
-
-  private def registerPin(df: DataFrame): DataFrame = {
-    val key = try df.queryExecution.analyzed.semanticHash()
-              catch { case NonFatal(_) => System.identityHashCode(df) }
-    val prev = pins.putIfAbsent(key, df)
-    if (prev != null) prev else { df.cache(); df }
-  }
-
-  /** Unpersist every rank-pinned frame and forget it. Safe mid-session:
-    * a later rank of the same input just re-pins. */
-  def releasePins(): Unit = {
-    pins.values().forEach(df =>
-      try df.unpersist() catch { case NonFatal(_) => () })
-    pins.clear()
-  }
-
   /** Adds `rankName` (1-based global rank, long) under the total order
     * `sort`. The caller MUST make `sort` a total order (unique
     * tiebreak), or ranks are nondeterministic — same contract as
@@ -66,10 +39,11 @@ object RankOps {
     * ranks an already-reduced frame (scores, per-user totals, vocab) —
     * the thing you'd pin on a cluster anyway. CacheManager matches
     * plans by equivalence, so repeated calls with the same input reuse
-    * one InMemoryRelation rather than stacking new ones; on top of that
-    * every pinned frame is registered (deduplicated by semantic hash)
-    * so [[releasePins]] can unpersist the lot deterministically — a
-    * long-lived session doesn't accrete unaccounted InMemoryRelations.
+    * one InMemoryRelation rather than stacking new ones. The pin is a
+    * [[graft.Memo.pin]] entry under the directories the input reads, so
+    * it is unpersisted when their content changes (or by `Memo.clear`)
+    * and a long-lived session doesn't accrete unaccounted
+    * InMemoryRelations.
     *
     * Each `cumSums` name present in `cumTotalNames` additionally emits
     * that sum's GRAND total under the mapped column name — it rides the
@@ -82,7 +56,7 @@ object RankOps {
       cumSums: Seq[(String, Column)] = Nil,
       totalName: Option[String] = None,
       cumTotalNames: Map[String, String] = Map.empty): DataFrame = {
-    val in = registerPin(df)
+    val in = graft.Memo.pin(df)
     val n = df.sparkSession.sparkContext.defaultParallelism
     // Explicit numPartitions: a user-specified width AQE won't coalesce,
     // so spark_partition_id() stays aligned with the range ordering.

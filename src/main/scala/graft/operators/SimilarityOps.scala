@@ -117,35 +117,14 @@ object SimilarityOps {
   /** Lists each IVF probe searches. */
   val IvfProbes = 4
 
-  /** Models fitted on one directory's embeddings (the IVF coarse
-    * quantizer, the PQ codebooks), keyed by (model, embeddings path) and
-    * holding (content fingerprint, model). The table's CONTENT
-    * fingerprint (names/sizes/mtimes — the identity the persisted minhash
-    * index uses), not (session, dir), decides a hit: a fixture
-    * regenerated at the same path within one process refits instead of
-    * serving stale centroids, and REPLACES its path's entry, so the map
-    * holds one model per path however often a fixture is rewritten.
-    * Values are plain double arrays — never a (possibly stopped)
-    * SparkSession reference. The fits are seeded, so a concurrent
-    * double-fit is benign.
-    */
-  private val embeddingModels = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), (String, AnyRef)]()
-
-  /** `fit` over the embeddings' bounded DETERMINISTIC fit sample
-    * (id-range, not limit(): an unordered limit takes whichever rows
-    * arrive first and would break cross-run reproducibility), once per
-    * content of `dir`'s embeddings. The models are tiny regardless of
-    * corpus size. */
-  private def fittedOnEmbeddings[T <: AnyRef](model: String, spark: SparkSession,
-      dir: String)(fit: DataFrame => T): T = {
-    val path = s"$dir/embeddings.parquet"
-    val fp = graft.Tables.contentFingerprint(path)
-    embeddingModels.compute((model, path), { (_, prev) =>
-      if (prev != null && prev._1 == fp) prev
-      else (fp, fit(embeddings(spark, dir).filter(col("vec_id") < 2000)))
-    })._2.asInstanceOf[T]
-  }
+  /** The embeddings' bounded DETERMINISTIC fit sample (id-range, not
+    * limit(): an unordered limit takes whichever rows arrive first and
+    * would break cross-run reproducibility). The models fitted on it (the
+    * IVF quantizer, the PQ codebooks) are tiny regardless of corpus size:
+    * plain double arrays, memoized per content of `dir` like every other
+    * fitted value, so a fixture rewritten at the same path refits. */
+  private def fitSample(spark: SparkSession, dir: String): DataFrame =
+    embeddings(spark, dir).filter(col("vec_id") < 2000)
 
   /** Centroids of a seeded KMeans over the vector column `fv`. */
   private def kmeansCenters(fv: DataFrame, k: Int, seed: Long): Array[Array[Double]] =
@@ -156,8 +135,8 @@ object SimilarityOps {
     * sample — the one quantizer [[qAnnIvf]], [[qAnnIvfPq]] and
     * [[qAnnRecallSweep]] all search. */
   private[graft] def ivfModelCentroids(spark: SparkSession, dir: String): Array[Array[Double]] =
-    fittedOnEmbeddings("ivf", spark, dir) { sample =>
-      kmeansCenters(sample.select(array_to_vector(toDouble(col("embedding"))).as("fv")),
+    graft.Memo("ivfCentroids", spark, dir) {
+      kmeansCenters(fitSample(spark, dir).select(array_to_vector(toDouble(col("embedding"))).as("fv")),
         k = 16, seed = 42)
     }
 
@@ -368,13 +347,13 @@ object SimilarityOps {
 
   /** The [[PqSub]] per-subspace PQ codebooks for `dir`: seeded KMeans
     * (k = [[PqK]], seed 42 + s) over each subvector of the fit sample,
-    * held beside the IVF quantizer — the one codebook set [[qPqCodes]]
+    * memoized like the IVF quantizer — the one codebook set [[qPqCodes]]
     * emits and [[qAnnIvfPq]] searches. */
   private[graft] def pqCodebooks(spark: SparkSession,
       dir: String): IndexedSeq[Array[Array[Double]]] =
-    fittedOnEmbeddings("pq", spark, dir) { sample =>
+    graft.Memo("pqCodebooks", spark, dir) {
       (0 until PqSub).map(s => kmeansCenters(
-        sample.select(array_to_vector(subvector(col("embedding"), s)).as("fv")),
+        fitSample(spark, dir).select(array_to_vector(subvector(col("embedding"), s)).as("fv")),
         k = PqK, seed = 42 + s))
     }
 

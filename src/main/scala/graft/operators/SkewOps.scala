@@ -45,18 +45,4 @@ object SkewOps {
       .agg(count(lit(1)).as("pc"), sum(value).as("ps"))
       .groupBy(col("key"))
       .agg(sum(col("pc")).as("count"), sum(col("ps")).as("sum"))
-
-  /** Replicated broadcast join against a skewed fact side: every fact row
-    * gets a random-ish salt, the (small) dim is exploded across all salt
-    * values, and the join key becomes (key, salt) — no single reducer
-    * sees the whole hot key. Only for dims small enough to replicate.
-    */
-  def saltedBroadcastJoin(fact: DataFrame, dim: DataFrame, key: String,
-      salt: Int = 8): DataFrame = {
-    val saltedFact = fact.withColumn("__salt",
-      pmod(spark_partition_id() + monotonically_increasing_id(), lit(salt)))
-    val repDim = dim.withColumn("__salt",
-      explode(array((0 until salt).map(lit): _*)))
-    saltedFact.join(broadcast(repDim), Seq(key, "__salt")).drop("__salt")
-  }
 }

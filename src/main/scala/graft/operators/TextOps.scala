@@ -121,8 +121,9 @@ object TextOps {
   /** (doc, term) -> tf, shared by the TF-IDF and BM25 scorers. Memo.cached
     * hands back the SAME pinned DataFrame per (session, dir): whichever
     * scorer runs first materializes the token aggregation once for both,
-    * repeat calls don't stack InMemoryRelations, and Memo.invalidate(dir)
-    * releases the storage (same pattern as the ML feature matrix).
+    * repeat calls don't stack InMemoryRelations, and the storage is
+    * released when `dir`'s content changes (same pattern as the ML
+    * feature matrix).
     */
   private[operators] def termFreq(spark: SparkSession, dir: String): DataFrame =
     graft.Memo.cached("termFreq", spark, dir) {
@@ -214,16 +215,15 @@ object TextOps {
     * sharing large content overlap collide on these with high probability
     * — the per-doc half of a fingerprint-join dedup at corpus scale.
     */
-  def qFingerprint(spark: SparkSession, dir: String): DataFrame = {
-    val sh = shingles(col("text"), 3)
-    val cg = charGrams(col("text"), 8)
-    spread(spark, documents(spark, dir)).select(
-      col("doc_id"),
-      size(sh).cast("long").as("n_shingles"),
-      array_min(transform(sh, s => md5(s))).as("shingle_fp"),
-      array_min(transform(cg, s => md5(s))).as("chargram_fp"))
+  def qFingerprint(spark: SparkSession, dir: String): DataFrame =
+    spread(spark, documents(spark, dir))
+      .select(col("doc_id"), col("text"), tokens(col("text")).as("t"))
+      .select(col("doc_id"), shingles(col("t"), 3).as("sh"), charGrams(col("text"), 8).as("cg"))
+      .select(col("doc_id"),
+        size(col("sh")).cast("long").as("n_shingles"),
+        array_min(transform(col("sh"), s => md5(s))).as("shingle_fp"),
+        array_min(transform(col("cg"), s => md5(s))).as("chargram_fp"))
       .orderBy(col("doc_id"))
-  }
 
   /** Token-window chunk size / stride for [[qChunkDocs]] (25% overlap). */
   val ChunkSize = 20

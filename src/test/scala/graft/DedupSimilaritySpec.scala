@@ -15,10 +15,10 @@ class DedupSimilaritySpec extends SparkSpec {
 
   test("qDedupMinhash signatures are deterministic across runs") {
     val a = DedupOps.qDedupMinhash(spark, sf).collect()
-    // Memo.cached would hand back the pinned first result — invalidate so
+    // Memo.cached would hand back the pinned first result — clear it so
     // the second run genuinely re-executes the shingle/permutation kernel
     // (the nondeterminism this test exists to catch).
-    graft.Memo.invalidate(sf)
+    graft.Memo.clear()
     val b = DedupOps.qDedupMinhash(spark, sf).collect()
     assert(a.sameElements(b))
   }

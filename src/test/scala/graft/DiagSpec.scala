@@ -97,6 +97,7 @@ class DiagSpec extends SparkSpec {
     assert(artifact.path("failed").size() === 1)
     assert(artifact.path("queries").path("q1_agg").path("warm").asDouble() > 0)
     assert(artifact.path("queries").path("q1_agg").path("warm_compiles").isIntegralNumber)
+    assert(artifact.path("queries").path("q1_agg").path("cold_compiles").isIntegralNumber)
     assert(artifact.path("codegen_cache_entries").asInt() === Tables.CodegenCacheEntries)
   }
 }

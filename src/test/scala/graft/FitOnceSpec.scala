@@ -75,17 +75,15 @@ class FitOnceSpec extends SparkSpec {
     (0L until 256L).map(i => (i, Array.fill(64)(rnd.nextFloat() - 0.5f)))
       .toDF("vec_id", "embedding")
       .write.parquet(s"$tmp/embeddings.parquet")
-    try {
-      val (_, ivfPq) = fitJobs {
-        SimilarityOps.qAnnIvf(spark, tmp).collect()
-        SimilarityOps.qPqCodes(spark, tmp).collect()
-      }
-      assert(ivfPq.contains("kmeans"), "qAnnIvf / qPqCodes must fit their quantizers")
-      val (_, searches) = fitJobs {
-        SimilarityOps.qAnnIvfPq(spark, tmp).collect()
-        SimilarityOps.qAnnRecallSweep(spark, tmp).collect()
-      }
-      assert(searches.isEmpty, s"qAnnIvfPq / qAnnRecallSweep refit: $searches")
-    } finally Memo.invalidate(tmp)
+    val (_, ivfPq) = fitJobs {
+      SimilarityOps.qAnnIvf(spark, tmp).collect()
+      SimilarityOps.qPqCodes(spark, tmp).collect()
+    }
+    assert(ivfPq.contains("kmeans"), "qAnnIvf / qPqCodes must fit their quantizers")
+    val (_, searches) = fitJobs {
+      SimilarityOps.qAnnIvfPq(spark, tmp).collect()
+      SimilarityOps.qAnnRecallSweep(spark, tmp).collect()
+    }
+    assert(searches.isEmpty, s"qAnnIvfPq / qAnnRecallSweep refit: $searches")
   }
 }

@@ -339,7 +339,7 @@ class TextMlSpec extends SparkSpec {
 
   test("qIforestScore: deterministic, valid score range, contamination cut") {
     val a = MLOps.qIforestScore(spark, sf).collect()
-    graft.Memo.invalidate(sf)
+    graft.Memo.clear()
     val b = MLOps.qIforestScore(spark, sf).collect()
     assert(a.sameElements(b), "seeded forest must be reproducible")
     val df = MLOps.qIforestScore(spark, sf).cache()
